@@ -1,6 +1,6 @@
 """Benchmark: one workload, one seed, in a fresh process.
 
-    python3 perfbench/run.py --workload sql_events --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload llm_pipeline --seed 1 --seconds 10 --trace 0
 
 Runs from any working directory; every file it writes (inputs, Spark
 warehouse, scratch space, event logs, traces) goes under
@@ -36,18 +36,19 @@ import tracing  # noqa: E402
 import workloads  # noqa: E402
 
 # Table scale (1.0 = TPC-H sf1 row counts) and corpus lines, sized so
-# that one run of every workload stays under a minute on 4 cores.
+# that one run of every workload stays under a minute on 4 cores
+# (48 runs of the two workloads have to fit well inside an hour).
 TABLE_SCALE = 0.005
-CORPUS_LINES = 30_000
+CORPUS_LINES = 60_000
 SETUP_ROUNDS = 3
 # A fixed, modest driver heap. Under the package's 8g default the JVM
 # grows its heap by a different amount in every run, and that spread
 # would hide any real change in peak memory.
 DRIVER_MEM = "2g"
-# Warm passes run until --seconds have passed and the run holds at
-# least this many warm job samples (and at least two passes), so that
-# job_p90_s does not rest on the single slowest sample.
-MIN_WARM_SAMPLES = 15
+# Warm passes run until --seconds have passed and at least this many
+# passes are done. The first warm pass still runs code the JVM has not
+# compiled yet; with three, the median leaves that pass out.
+MIN_WARM_PASSES = 3
 
 
 def parse_args(argv: list[str] | None) -> argparse.Namespace:
@@ -341,13 +342,11 @@ def check_outputs(setup: Setup, recorder: PassRecorder) -> list[str]:
 
 
 def end_to_end(setup: Setup, cold: dict, warm: list[dict], peak_rss: int) -> dict:
-    samples = [j["wall"] for p in warm for j in p["jobs"]]
     warm_s = statistics.median(p["wall"] for p in warm)
     return {
         "setup_s": (statistics.median(setup.round_s), "s"),
         "cold_pass_s": (cold["wall"], "s"),
         "warm_pass_s": (warm_s, "s"),
-        "job_p50_s": (statistics.median(samples), "s"),
         "input_mb_per_s": (setup.input_bytes / 1e6 / warm_s, "MB/s"),
         "peak_rss_mb": (peak_rss / 1e6, "MB"),
     }
@@ -435,7 +434,7 @@ def per_layer(setup: Setup, cold: dict, warm: list[dict], groups: dict,
 
 def fitness(workload: str, layer: dict) -> list[str]:
     """Problems with the workload no longer stressing the layer it was
-    chosen for (empty = fit). The sql/llm comparison needs the other
+    chosen for (empty = fit). The mr/llm comparison needs the other
     workload's traced summary in the same work directory."""
     v = {k: val for k, (val, _) in layer.items()}
     problems = []
@@ -444,21 +443,23 @@ def fitness(workload: str, layer: dict) -> list[str]:
             problems.append("llm_pipeline cold pass added no session_memo entry")
         if v["session_memo.warm_entries_added"] != 0:
             problems.append("llm_pipeline warm passes added session_memo entries")
+        if not v["streaming.drain_s"] > 0:
+            problems.append("llm_pipeline ran no streaming.run_available_now drain")
     if workload == "mr_jobs" and not v["compat.combine_ratio"] < 1:
         problems.append("mr_jobs combine_ratio is not below 1")
-    if workload in ("sql_events", "llm_pipeline"):
-        other = "llm_pipeline" if workload == "sql_events" else "sql_events"
-        path = os.path.join(WORK, "trace", f"{other}-summary.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                o = json.load(f)["metrics"]["python.to_worker_mb"]["value"]
-            mine = v["python.to_worker_mb"]
-            sql, llm = (mine, o) if workload == "sql_events" else (o, mine)
-            if not sql < 0.01 * llm:
-                problems.append(
-                    f"sql_events python.to_worker_mb {sql:.3f} is not under 1% of "
-                    f"llm_pipeline's {llm:.3f}"
-                )
+    # mr_jobs' Python runs on the RDD path; the Arrow path is llm_pipeline's
+    other = "llm_pipeline" if workload == "mr_jobs" else "mr_jobs"
+    path = os.path.join(WORK, "trace", f"{other}-summary.json")
+    if os.path.exists(path):
+        with open(path) as f:
+            o = json.load(f)["metrics"]["python.to_worker_mb"]["value"]
+        mine = v["python.to_worker_mb"]
+        mr, llm = (mine, o) if workload == "mr_jobs" else (o, mine)
+        if not mr < 0.01 * llm:
+            problems.append(
+                f"mr_jobs python.to_worker_mb {mr:.3f} is not under 1% of "
+                f"llm_pipeline's {llm:.3f}"
+            )
     return problems
 
 
@@ -487,7 +488,7 @@ def main(argv: list[str] | None = None) -> int:
             rec = PassRecorder(setup.spark, tracer, traced_run)
             cold = rec.run_pass(jobs, "cold", traced=traced_run)
             warm: list[dict] = []
-            min_passes = max(2, -(-MIN_WARM_SAMPLES // len(jobs)))
+            min_passes = MIN_WARM_PASSES
             if traced_run:
                 min_passes *= 2
             t0 = time.time()
@@ -497,7 +498,9 @@ def main(argv: list[str] | None = None) -> int:
                 traced = traced_run and len(warm) % 2 == 0
                 warm.append(rec.run_pass(jobs, f"warm{len(warm)}", traced=traced))
             peak = rss.peak
+            t_check = time.time()
             bad = check_outputs(setup, rec)
+            check_s = time.time() - t_check
             app_id = setup.spark.sparkContext.applicationId
             cached_b = sum(
                 s.memSize() + s.diskSize()
@@ -515,11 +518,15 @@ def main(argv: list[str] | None = None) -> int:
     print(f"workload {args.workload}  seed {args.seed}  cpus {cpus}  "
           f"input {setup.input_bytes / 1e6:.2f} MB ({setup.input_rows} rows)")
     print("setup rounds (s): " + " ".join(f"{x:.2f}" for x in setup.round_s))
+    print(f"check {check_s:.2f} s; run wall {time.time() - PROCESS_START:.2f} s")
     samples = [j["wall"] for p in warm for j in p["jobs"]]
     print(f"passes: 1 cold + {len(warm)} warm; job samples {len(samples)}")
-    # printed, not a BENCHMARK.json metric: only ~2 samples lie above it
+    # printed, not BENCHMARK.json metrics: with a few jobs of very different
+    # length, p50 is the middle job's time and only one or two samples lie
+    # above p90 (see README.md)
+    p50 = statistics.median(samples)
     p90 = statistics.quantiles(samples, n=10, method="inclusive")[8]
-    print(f"job_p90_s {p90:.4f} s over {len(samples)} warm job samples")
+    print(f"job_p50_s {p50:.4f} s, job_p90_s {p90:.4f} s over {len(samples)} warm job samples")
     print("warm passes (s): " + " ".join(f"{p['wall']:.2f}" for p in warm))
     print("cold pass (s): " + " ".join(f"{j['job']}={j['wall']:.2f}" for j in cold["jobs"]))
     print("last warm pass (s): " + " ".join(f"{j['job']}={j['wall']:.2f}" for j in warm[-1]["jobs"]))

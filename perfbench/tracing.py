@@ -72,9 +72,13 @@ def tree_rss_bytes(root: int) -> int:
 
 
 class RssSampler:
-    """Background thread that keeps the peak of ``tree_rss_bytes``."""
+    """Background thread that keeps the peak of ``tree_rss_bytes``.
 
-    INTERVAL_S = 0.25
+    One sample reads ``smaps_rollup`` of about a dozen processes, which
+    takes ~25 ms on 4 cores and walks the JVM's page tables; sampling
+    more often would take a noticeable share of a core from the run."""
+
+    INTERVAL_S = 0.5
 
     def __init__(self) -> None:
         self.peak = 0

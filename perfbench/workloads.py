@@ -18,31 +18,18 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 FUNCTIONS = os.path.join(HERE, "mrfunctions")
 
 # Registry queries per workload, in pass order. See README.md for why
-# each list was chosen and what was left out of it.
-SQL_EVENTS = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_region_revenue",
-    "q6_selective_agg",
-    "q8_window_topn_per_group",
-    "q13_distinct_agg",
-    "customer_rfm_segments",
-    "events_session_10m",
-    "streaming_tumbling_live",
-]
+# each list was chosen and what was left out of it. The streaming query
+# is the one job of the list that drives ``streaming.run_available_now``.
 LLM_PIPELINE = [
-    "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "multimodal_decode_jpeg",
-    "text_quality_score",
     "dedup_embedding_cosine",
     "text_bm25",
     "graph_pagerank",
-    "text_repetition_filter",
+    "streaming_tumbling_live",
 ]
 MR_JOBS = ["wc_client", "wc_fast", "inverted_index", "grouped_avg", "wc_pickled"]
 
-WORKLOADS = {"mr_jobs": MR_JOBS, "sql_events": SQL_EVENTS, "llm_pipeline": LLM_PIPELINE}
+WORKLOADS = {"mr_jobs": MR_JOBS, "llm_pipeline": LLM_PIPELINE}
 
 
 @dataclass
