@@ -27,6 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from simplemapreduceframework_spark import get_spark, registry
+from simplemapreduceframework_spark.session_memo import BUILDERS, release
 
 # Representative coverage: relational (scan/filter/join/agg/window/
 # sort), reference workloads, dedup suite, similarity, text analysis,
@@ -247,222 +248,54 @@ def plan_fingerprint(df) -> dict[str, int]:
     }
 
 
-# Queries whose physical plan depends on which session-memoized
-# persisted frame materialized first: CacheManager substitutes shared
-# fragments as InMemoryTableScans (which embed the original scans)
-# nondeterministically across run orderings, so their fingerprints are
-# neither stable to record nor meaningful to compare. Single source of
-# truth for BOTH the baseline generator (scripts/gen_plan_baseline.py,
-# which omits them from tests/PLAN_BASELINE.json) and the no-growth
-# canary (tests/test_plans.py, which skips them).
-CACHE_DEPENDENT = {
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    # the IVF tests persist with_norm(embeddings); CacheManager then
-    # substitutes that shared fragment into these plans as an
-    # InMemoryTableScan (which embeds the original scan, doubling
-    # the count) depending on which tests ran first
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    # funnel stage frames persist + memoize: InMemoryTableScans
-    # embed the original scans pre-materialization
-    "events_funnel",
-    # the expectations report persists its shared lineitem
-    # aggregate (same embedding artifact)
-    "table_expectations",
-    # the shared persisted _baskets and _pair_counts frames:
-    # InMemoryTableScans embed the original lineitem scan in every
-    # consumer pre-materialization (triangles additionally
-    # self-joins the persisted oriented-edge frame three ways)
-    "basket_part_pairs",
-    "basket_rules",
-    "graph_triangles",
-    # with_norm(embeddings) persists under the IVF tests; its
-    # InMemoryTableScan then embeds the original scans in the
-    # dense leg (and its row stats flip the fused join to a
-    # broadcast in the prefix-filter verify step)
-    "hybrid_search_rrf",
-    "simjoin_prefix_filter",
-    # the PR gate consumes BOTH persisted dedup frames (the LSH
-    # pair list and the shingle index under the exact baseline)
-    "dedup_minhash_pr_gate",
-    # consume the shared persisted pivot (_bm25_pivot_shared, the
-    # one corpus pass behind the whole BM25 family since r11):
-    # InMemoryTableScans embed the original corpus scans
-    # pre-materialization
-    "retrieval_eval_bm25",
-    "text_bm25",
-    # consume the shared persisted hygiene verdict frame
-    # (_hygiene_verdicts_shared, the one corpus verdict pass behind
-    # the hygiene family since r13): same InMemoryTableScan
-    # pre/post-materialization plan split
-    "text_repetition_filter",
-    "text_decontaminate",
-    "pipeline_hygiene",
-    "pipeline_chunked_corpus",
-    "corpus_health_report",
-    # r18: the connected-components label frames persist (dedup.py
-    # dedup_clusters, linkage.py _golden_labels) — their consumers'
-    # plans show InMemoryTableScans post-materialization
-    "dedup_canonical",
-    "split_leakage_safe",
-    "entity_golden_records",
-}
-
-# Every CACHE_DEPENDENT query assigned to exactly ONE memo family for
-# the controlled-memo-state plan canary (r14 ADVICE generalized the
-# r13 hygiene-only canary): "frames" names the session-shared persisted
-# builders ((module, function), each (spark, sf_dir) -> DataFrame) to
-# build+materialize IN ORDER before fingerprinting the family's
-# consumers, reproducing the warm serving state the bench measures.
-# Families whose consumers persist only internal per-query frames
-# (built at plan-construction time, deterministic under a clean slate)
-# list no shared builders.
+# The plan canary's memo families, derived from the declarations: a
+# query's family is the one it names at its registry.query
+# registration (the session_memo family of shared frames its plan
+# reads, directly or by CacheManager substitution); a family's
+# "frames" are the persisted (spark, sf_dir) builders registered under
+# it in session_memo.BUILDERS, in definition (dependency) order. These
+# CACHE_DEPENDENT queries are fingerprinted per family under a
+# controlled memo state (family_plan_fingerprints) instead of in
+# tests/PLAN_BASELINE.json.
+registry.load_all()
+CACHE_DEPENDENT = set(registry.FAMILY)
 MEMO_FAMILIES: dict[str, dict] = {
-    # _hygiene_verdicts_shared (operators/llmfilters.py): the one
-    # persisted corpus-verdict pass behind the hygiene tier.
-    "hygiene": {
-        "frames": [("operators.llmfilters", "_hygiene_verdicts_shared")],
-        "consumers": (
-            "text_repetition_filter",
-            "text_decontaminate",
-            "pipeline_hygiene",
-            "pipeline_chunked_corpus",
-            "corpus_health_report",
-        ),
-    },
-    # _bm25_pivot_shared (operators/retrieval.py): the one persisted
-    # corpus pivot behind the BM25 tier; hybrid_search_rrf's lexical
-    # leg serves from it too (its dense leg builds with_norm inline,
-    # deterministic under the clean slate).
-    "bm25": {
-        "frames": [("operators.retrieval", "_bm25_pivot_shared")],
-        "consumers": ("text_bm25", "retrieval_eval_bm25", "hybrid_search_rrf"),
-    },
-    # The basket tier's three persisted intermediates (operators/
-    # graph.py), in dependency order: per-order part arrays, item
-    # supports, co-purchase pair counts. graph_triangles additionally
-    # memoizes its oriented-edge frame inside its own construction.
-    "basket": {
-        "frames": [
-            ("operators.graph", "_baskets"),
-            ("operators.graph", "_item_supports"),
-            ("operators.graph", "_pair_counts"),
-        ],
-        "consumers": ("basket_part_pairs", "basket_rules", "graph_triangles"),
-    },
-    # _shingles (operators/dedup.py): the persisted (doc_id, shingle)
-    # index every near-dup path reads. The pair-list memos
-    # (minhash_pairs, ngram_jaccard_pairs, simjoin_docarr) build during
-    # their consumers' plan construction — deterministic because the
-    # consumer ORDER below is fixed and the slate starts clean.
-    "shingle": {
-        "frames": [("operators.dedup", "_shingles")],
-        "consumers": (
-            "dedup_ngram_jaccard",
-            "dedup_minhash_lsh",
-            "dedup_minhash_pr_gate",
-            "simjoin_prefix_filter",
-        ),
-    },
-    # _ivf_scored (operators/similarity.py): the persisted IVF
-    # candidate/score frame (with_norm embeddings + trained centroids),
-    # i.e. the warm persisted-index serving state.
-    "ivf": {
-        "frames": [("operators.similarity", "_ivf_scored")],
-        "consumers": ("ann_cosine_topk", "ann_lsh_bucketed"),
-    },
-    # Queries whose persisted frames are private to their own plan
-    # (funnel stage frames, the expectations report's shared lineitem
-    # aggregate): nothing to pre-build — the clean slate alone makes
-    # their fingerprints deterministic. (q47 left this set in r17: its
-    # non-recursive window plan persists nothing and fingerprints
-    # deterministically in the MAIN baseline.)
-    "selfcontained": {
-        "frames": [],
-        "consumers": ("events_funnel", "table_expectations"),
-    },
-    # The two persisted connected-components label frames (r18): the
-    # doc-cluster labels behind the dedup tail and the entity labels
-    # behind golden-record election. dedup_clusters is itself the
-    # builder of the first (registered query; memoized + persisted).
-    "cclabels": {
-        "frames": [
-            ("operators.dedup", "dedup_clusters"),
-            ("operators.linkage", "_golden_labels"),
-        ],
-        "consumers": (
-            "dedup_canonical",
-            "split_leakage_safe",
-            "entity_golden_records",
-        ),
-    },
+    family: {
+        "frames": BUILDERS.get(family, []),
+        "consumers": [n for n, f in registry.FAMILY.items() if f == family],
+    }
+    for family in sorted(set(registry.FAMILY.values()))
 }
-
-# The family partition must cover CACHE_DEPENDENT exactly (r14 ADVICE:
-# a consumer added to CACHE_DEPENDENT alone would silently lose plan
-# coverage; one added to a family alone would record an unstable
-# fingerprint in the MAIN baseline). Disjointness keeps each query's
-# canary state unambiguous. Explicit raises, not asserts (r15 ADVICE:
-# `python -O` strips asserts, silently voiding the invariant); also
-# duplicated as a unit test in tests/test_plans.py.
-_FAMILY_CONSUMERS = [n for f in MEMO_FAMILIES.values() for n in f["consumers"]]
-if set(_FAMILY_CONSUMERS) != CACHE_DEPENDENT:
-    raise RuntimeError(
-        "bench.MEMO_FAMILIES must partition CACHE_DEPENDENT exactly; "
-        f"symmetric difference: {sorted(set(_FAMILY_CONSUMERS) ^ CACHE_DEPENDENT)}"
-    )
-if len(_FAMILY_CONSUMERS) != len(set(_FAMILY_CONSUMERS)):
-    raise RuntimeError(
-        "bench.MEMO_FAMILIES consumers overlap across families: "
-        f"{sorted(n for n in set(_FAMILY_CONSUMERS) if _FAMILY_CONSUMERS.count(n) > 1)}"
-    )
 
 
 def family_plan_fingerprints(spark, sf_dir: str, family: str) -> dict[str, dict[str, int]]:
-    """Plan-regression canary for one shared-memo family (r13 ADVICE
-    built the hygiene instance; r14 ADVICE generalized it): the
-    CACHE_DEPENDENT queries are excluded from the whole-set no-growth
-    canary because CacheManager substitutes whichever session-shared
-    fragment materialized first into their plans, so their ad-hoc
-    fingerprints are order-dependent. Fingerprint them under a
-    CONTROLLED memo state instead:
+    """Plan-regression canary for one memo family: the CACHE_DEPENDENT
+    queries are excluded from the whole-set no-growth canary because
+    CacheManager substitutes whichever session-shared fragment is
+    cached into their plans, so their ad-hoc fingerprints depend on
+    what ran before. Fingerprint them under a CONTROLLED memo state:
 
-    1. clean slate — drop EVERY session memo entry and unpersist every
-       cached fragment, so no other family's persisted frame can be
-       substituted into these plans (this also closes the r14 ADVICE
-       flake risk: previously only the family's own memo was released,
-       leaving e.g. a persisted BM25 pivot free to leak into hygiene
-       fingerprints under unlucky test orderings);
-    2. build each shared frame in dependency order, fingerprinting it
-       pre-materialization (that IS the frame's own plan), then
-       materialize it — an UNmaterialized InMemoryRelation stringifies
-       its whole child plan at every reference (corpus_health_report
-       counted 33 phantom shuffles where 8 execute);
-    3. fingerprint each consumer post-cache, in fixed order (consumers
-       that memoize further private frames during construction stay
-       deterministic because the slate and the order are fixed).
+    1. clean slate — release every session_memo family and clear the
+       CacheManager, so no other family's frame can be substituted
+       into these plans;
+    2. fingerprint each of the family's builders' own (unpersisted)
+       plan, then build it as the shared, materialized frame, in
+       dependency order;
+    3. fingerprint each consumer in fixed order (a consumer that is
+       itself one of the builders is already recorded).
 
     scripts/gen_plan_baseline.py records every family in
     tests/PLAN_BASELINE_FAMILIES.json; tests/test_plans.py pins
     no-growth per family."""
-    from importlib import import_module
-
-    from simplemapreduceframework_spark import registry
-    from simplemapreduceframework_spark.session_memo import session_memo
-
     spec = MEMO_FAMILIES[family]
-    registry.load_all()
-    session_memo(spark).clear()
-    spark.catalog.clearCache()
+    release(spark)
     out: dict[str, dict[str, int]] = {}
-    for mod_name, fn_name in spec["frames"]:
-        mod = import_module(f"simplemapreduceframework_spark.{mod_name}")
-        frame = getattr(mod, fn_name)(spark, sf_dir)
-        out[fn_name] = plan_fingerprint(frame)
-        frame.count()
+    for build in spec["frames"]:
+        out[build.__name__] = plan_fingerprint(build.__wrapped__(spark, sf_dir))
+        build(spark, sf_dir)
     for name in spec["consumers"]:
-        out[name] = plan_fingerprint(registry.QUERIES[name](spark, sf_dir))
+        if name not in out:
+            out[name] = plan_fingerprint(registry.QUERIES[name](spark, sf_dir))
     return out
 
 
@@ -508,6 +341,24 @@ def ensure_bench_layout(spark, sf_dir: str) -> str:
         f.write(stamp + "\n")
     print(f"[bench] relaid {name} into {cache} in {time.time()-t0:.1f}s", file=sys.stderr)
     return cache
+
+
+def fill_named(
+    priority: list[str], timings: dict[str, float], fits
+) -> dict[str, float]:
+    """The line's name -> best-seconds dict, filled greedily in
+    committed priority order: an entry that would push the line past
+    the byte budget (``fits`` false) is skipped and the scan goes on,
+    so shorter lower-priority entries still use the slack. A wide
+    boundary entry therefore costs only itself, whatever its value's
+    width."""
+    named: dict[str, float] = {}
+    for name in priority:
+        if name in timings:
+            named[name] = round(timings[name], 2)
+            if not fits(named):
+                del named[name]
+    return named
 
 
 def main() -> None:
@@ -612,7 +463,7 @@ def main() -> None:
                 "metric": "headline_query_set_seconds",
                 "value": total,
                 "unit": "sec",
-                # name -> best seconds for the LINE_PRIORITY prefix
+                # name -> best seconds for the LINE_PRIORITY entries
                 # that fits the byte budget (r18: restores the
                 # driver's per-query join; a COMPLETE dict cannot fit
                 # the 2000-byte capture window — see LINE_PRIORITY)
@@ -645,21 +496,12 @@ def main() -> None:
             allow_nan=False,
         )
 
-    # fill the named dict by committed priority until the WHOLE line
-    # would cross the byte budget (greedy, deterministic order; both
-    # CPU runs of a round therefore name the same top queries modulo
-    # one boundary entry of value-width drift)
     priority = LINE_PRIORITY + [
         n for n in HEADLINE if n not in set(LINE_PRIORITY)
     ]
-    named: dict[str, float] = {}
-    for name in priority:
-        if name not in timings:
-            continue
-        named[name] = round(timings[name], 2)
-        if len(build_line(named)) > LINE_BYTE_BUDGET:
-            del named[name]
-            break
+    named = fill_named(
+        priority, timings, lambda d: len(build_line(d)) <= LINE_BYTE_BUDGET
+    )
     line = build_line(named)
     # Self-check before emitting: the line must JSON-round-trip, be a
     # single physical line, and fit the driver's bounded tail capture

@@ -325,15 +325,13 @@ def main() -> None:
             if out["status"] == "ERROR" and "cancelled" in out.get("error", "").lower():
                 out = {"status": "TIMEOUT"}
         if "--isolate" in sys.argv:
-            from simplemapreduceframework_spark.session_memo import (
-                session_memo,
-            )
+            from simplemapreduceframework_spark.session_memo import release
 
-            spark.catalog.clearCache()
-            session_memo(spark).clear()
-            # clearCache only drops SQL-cached relations: localCheckpoint
-            # / RDD blocks from iterative queries (pagerank, curriculum)
-            # survive it and accumulate in the one local JVM until a
+            release(spark)
+            # release clears the memo and the CacheManager, which only
+            # holds SQL-cached relations: localCheckpoint / RDD blocks
+            # from iterative queries (pagerank, curriculum) survive it
+            # and accumulate in the one local JVM until a
             # later query's aggregation starves (caught by the round-9
             # forced-fallback marathon: graph_pagerank died
             # AGGREGATE_OUT_OF_MEMORY at query 192-minus-handful but

@@ -43,7 +43,7 @@ def global_row_number(
     identical in the sizes branch and the final projection —
     monotonically_increasing_id is recompute-sensitive); the caller
     owns that cache entry via ``release()``: memoize the result for
-    the session (textanalysis._VOCAB_CACHE style) or release after the
+    the session (textanalysis.text_vocab style) or release after the
     final output materializes. The row count falls out of the prefix
     sum for free (constant driver state, <= one row per partition).
     """

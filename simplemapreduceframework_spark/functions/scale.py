@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session_memo import session_memo
+from ..session_memo import get_or_build
 
 # ~150 MB of narrow dim rows; far inside the default 8 GB driver and
 # any sane executor broadcast budget, far above every validation SF
@@ -45,11 +45,11 @@ def table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
     memoized per (session, dir, table)."""
     from ..sources import load_table
 
-    memo = session_memo(spark)
-    key = ("table_rows", sf_dir, table)
-    if key not in memo:
-        memo[key] = load_table(spark, sf_dir, table).count()
-    return memo[key]
+    return get_or_build(
+        spark,
+        ("table_rows", sf_dir, table),
+        lambda: load_table(spark, sf_dir, table).count(),
+    )
 
 
 def broadcast_dim(

@@ -31,14 +31,10 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens_regex
 from ..registry import query
+from ..session_memo import per_session
 from ..sources import load_table
 
 _N_MERGES = 5
-
-# Learned-merge memo per (application, sf_dir): the training loop
-# collects one scalar per iteration; repeated invocations (driver gate
-# + first-merge gate + tests) reuse one training run.
-_MERGE_CACHE: dict[tuple[str, str], list[tuple]] = {}
 
 
 def merge_pair_in_word(syms: list[str], left: str, right: str) -> list[str]:
@@ -78,10 +74,11 @@ def bpe_reference(words: dict[str, int], n_merges: int) -> list[tuple]:
     return merges
 
 
+# The learned merges memoize per session: the training loop collects
+# one scalar per iteration; repeated invocations (driver gate +
+# first-merge gate + tests) reuse one training run.
+@per_session("bpe_merges")
 def _train(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MERGE_CACHE:
-        return _MERGE_CACHE[key]
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
@@ -153,7 +150,6 @@ def _train(spark: SparkSession, sf_dir: str) -> list[tuple]:
         syms.unpersist()
         syms = new_syms
     syms.unpersist()
-    _MERGE_CACHE[key] = merges
     return merges
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..functions.scale import BROADCAST_ROW_LIMIT, broadcast_dim, table_rows
-from ..session_memo import session_memo
+from ..session_memo import per_session, shared_frame
 from ..sources import load_table
 
 _SCALE = 10**12
@@ -35,8 +35,7 @@ _ITERS = 3
 
 # The memoized PageRank frames own their persisted edge/rank chains;
 # repeated invocations (bench passes, gates) must reuse ONE result
-# rather than re-persist. Entries live in the per-session weakref memo
-# (see session_memo.py).
+# rather than re-persist.
 
 
 def _pagerank_oracle() -> str:
@@ -76,6 +75,7 @@ FROM {prev} p JOIN deg ON deg.s = p.node
 
 
 @query("graph_pagerank", oracle=_pagerank_oracle())
+@per_session("pagerank")
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 3 unrolled iterations) over the
     supplier co-supply graph: suppliers are linked when they ship
@@ -93,10 +93,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-wide node count is a single collected scalar (constant
     driver state, same policy as dedup.py's corpus scalar).
     """
-    memo = session_memo(spark)
-    key = ("pagerank", sf_dir)
-    if key in memo:
-        return memo[key]
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_orderkey", "l_suppkey").distinct()
     a = pairs.select("l_orderkey", F.col("l_suppkey").alias("s"))
@@ -115,13 +111,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = broadcast_dim(
         deg, table_rows(spark, sf_dir, "supplier"), fallback="shuffle_hash"
     )
-    out = ranks.join(deg, ranks.node == deg.s).select(
+    return ranks.join(deg, ranks.node == deg.s).select(
         F.col("node").alias("s_suppkey"),
         F.col("r").alias("rank_fp"),
         F.col("deg").alias("degree"),
     )
-    memo[key] = out
-    return out
 
 
 def pagerank_fixed_point(
@@ -437,6 +431,7 @@ FROM {prev} WHERE node % 2 = 1
 
 
 @query("graph_pagerank_dangling", oracle=_pagerank_dangling_oracle())
+@per_session("pagerank_dangling")
 def graph_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the DIRECTED customer->supplier purchase graph
     (customer links to every supplier they bought from). Suppliers have
@@ -448,10 +443,6 @@ def graph_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Node keys are parity-encoded (custkey*2, suppkey*2+1) so the two
     key spaces cannot collide; output decodes supplier ranks only.
     """
-    memo = session_memo(spark)
-    cache_key = ("pagerank_dangling", sf_dir)
-    if cache_key in memo:
-        return memo[cache_key]
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # an edge needs BOTH endpoints — same NULL contract as the oracle
@@ -468,12 +459,10 @@ def graph_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ranks, _deg = pagerank_dangling(edges, iters=_ITERS)
-    out = ranks.filter(F.col("node") % 2 == 1).select(
+    return ranks.filter(F.col("node") % 2 == 1).select(
         F.expr("(node - 1) div 2").cast("long").alias("s_suppkey"),
         F.col("r").alias("rank_fp"),
     )
-    memo[cache_key] = out
-    return out
 
 
 _BASKET_MIN_PAIR = 3
@@ -482,6 +471,7 @@ _BASKET_TOPK = 25
 
 @query(
     "basket_part_pairs",
+    family="basket",
     oracle=f"""
 WITH items AS (
     -- a basket membership needs BOTH keys: engine-side collect_set
@@ -569,6 +559,7 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@per_session("basket", persist=True)
 def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-order sorted part-array frame both basket queries start
     from (distinct (order, part) -> one groupBy on the SAME key).
@@ -577,10 +568,6 @@ def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     any future width-3 miner) shares instead of re-scanning the fact
     table; here it keeps the second basket query from repeating the
     lineitem distinct+collect pass."""
-    memo = session_memo(spark)
-    key = ("baskets", sf_dir)
-    if key in memo:
-        return memo[key][0]
     items = (
         load_table(spark, sf_dir, "lineitem")
         .filter(
@@ -589,13 +576,12 @@ def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    baskets = items.groupBy("l_orderkey").agg(
+    return items.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    ).persist()
-    memo[key] = (baskets, lambda: baskets.unpersist())
-    return baskets
+    )
 
 
+@per_session("basket", persist=True)
 def _item_supports(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part basket support (l_partkey, n_i) — one explode+groupBy
     over the persisted basket frame, persisted + memoized per session.
@@ -603,21 +589,15 @@ def _item_supports(spark: SparkSession, sf_dir: str) -> DataFrame:
     and persisting it spares each basket query its own explode pass
     over the basket arrays; both queries join it back as their
     broadcast support dimension."""
-    memo = session_memo(spark)
-    key = ("item_supports", sf_dir)
-    if key in memo:
-        return memo[key][0]
-    isup = (
+    return (
         _baskets(spark, sf_dir)
         .select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("n_i"))
-        .persist()
     )
-    memo[key] = (isup, lambda: isup.unpersist())
-    return isup
 
 
+@per_session("basket", persist=True)
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase pair counts (part_a < part_b, n_ab) — the ONE
     row-local pair-generation pass over the persisted basket frame,
@@ -630,12 +610,8 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     of regenerating per query. Persisting above n_ab >= min-threshold
     drops the singleton-pair bulk, so the cached frame stays
     pair-dimension-sized at any SF."""
-    memo = session_memo(spark)
-    key = ("pair_counts", sf_dir)
-    if key in memo:
-        return memo[key][0]
     floor = min(_BASKET_MIN_PAIR, _RULE_MIN_PAIR, _TRI_MIN_COBUY)
-    pairs = (
+    return (
         _baskets(spark, sf_dir)
         .select(
             F.explode(
@@ -650,10 +626,7 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= floor)
-        .persist()
     )
-    memo[key] = (pairs, lambda: pairs.unpersist())
-    return pairs
 
 
 _RULE_MIN_PAIR = 3
@@ -662,6 +635,7 @@ _RULE_TOPK = 30
 
 @query(
     "basket_rules",
+    family="basket",
     oracle=f"""
 WITH items AS (
     SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -775,6 +749,7 @@ _TRI_MIN_COBUY = 2  # co-purchase count that makes an edge
 
 @query(
     "graph_triangles",
+    family="basket",
     oracle=f"""
 WITH items AS (
     SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -836,7 +811,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_ab") >= _TRI_MIN_COBUY)
         .select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
     )
-    memo = session_memo(spark)
     deg = (
         edges.select(F.col("u").alias("p"))
         .unionAll(edges.select(F.col("v").alias("p")))
@@ -848,14 +822,12 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_first = F.struct(du.alias("d"), F.col("u").alias("p")) < F.struct(
         dv.alias("d"), F.col("v").alias("p")
     )
-    okey = ("tri_oriented", sf_dir)
-    if okey in memo:
-        oriented = memo[okey][0]
-    else:
+
+    def build_oriented() -> DataFrame:
         n_part = table_rows(spark, sf_dir, "part")  # |deg| <= |part|
         # deg derives under the persisted edges fragment -> static
         # planner only; above budget pin the hash build
-        oriented = (
+        return (
             edges.join(
                 broadcast_dim(deg.alias("du"), n_part, fallback="shuffle_hash"),
                 F.col("du.p") == F.col("u"),
@@ -869,14 +841,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
                 F.when(u_first, dv).otherwise(du).alias("dt"),
             )
-            .persist()
         )
-        # (frame, release) tuple — the shape the basket/retrieval/graph
-        # tiers share; other persisted memo entries predate it and use
-        # their own shapes (dedup 'shingles' and similarity
-        # 'ivf_scored' store the bare frame; traindata 'neg_rank'
-        # stores a (frame, count) tuple), so there is no generic drain
-        memo[okey] = (oriented, lambda: oriented.unpersist())
+
+    oriented = shared_frame(spark, ("basket", "tri_oriented", sf_dir), build_oriented)
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     wedge_ord = F.struct(
         F.col("e1.dt").alias("d"), F.col("e1.t").alias("p")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session_memo import per_session
 from ..sources import load_table
 
 _LEV_MAX = 2
@@ -136,6 +137,7 @@ rep AS (
 """
 
 
+@per_session("cclabels", persist=True)
 def _golden_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (p_name, entity_id) label frame behind
     entity_golden_records — memoized per session AND persisted (r17
@@ -145,36 +147,30 @@ def _golden_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats the whole fixed-point computation, and without the persist
     every EXECUTION re-scans the name domain and rebroadcasts the
     label map (entity_golden_records consumes the frame twice per
-    run). Extracted as a named builder so the plan canary's memo-family
+    run). A named "cclabels" builder, so the plan canary's memo-family
     protocol (bench.MEMO_FAMILIES) can build it under a controlled
     slate."""
-    from ..session_memo import session_memo
     from .dedup import connected_components
 
-    memo = session_memo(spark)
-    key = ("golden_labels", sf_dir)
-    if key in memo:
-        return memo[key]
     names = (
         load_table(spark, sf_dir, "part")
         .groupBy("p_name")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_records"))
     )
     pairs = fuzzy_match_parts(spark, sf_dir).select("a_name", "b_name")
-    labels = connected_components(
+    return connected_components(
         names.select(F.col("p_name").alias("id")),
         pairs.select(
             F.col("a_name").alias("src"), F.col("b_name").alias("dst")
         ),
     ).select(
         F.col("id").alias("p_name"), F.col("component").alias("entity_id")
-    ).persist()
-    memo[key] = labels
-    return labels
+    )
 
 
 @query(
     "entity_golden_records",
+    family="cclabels",
     oracle=f"""
 WITH RECURSIVE {_GOLDEN_CTES}
 SELECT j.p_name, j.entity_id, m.n_names, j.n_records,

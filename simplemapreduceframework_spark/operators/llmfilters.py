@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens_regex
 from ..registry import query
+from ..session_memo import per_session
 from ..sources import load_table
 
 # Shared PII regexes — written to the common Java-regex / RE2 subset
@@ -291,15 +292,14 @@ _REP_COLS = [
 ]
 
 
+@per_session("hygiene", persist=True)
 def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE persisted corpus-verdict pass behind the hygiene
     family: one row per document, carrying identity (source,
     content_md5, is_bench) plus the repetition metrics (null for
     token-less documents, mirroring the `rep` CTE's row set) and the
     contamination hit count (null where the inverted-index join found
-    no shared gram, and for benchmark docs themselves). Memoized per
-    (session, sf_dir) with a release handle — the (frame, release)
-    shape the BM25/basket/graph tiers share.
+    no shared gram, and for benchmark docs themselves).
 
     text_repetition_filter, text_decontaminate, pipeline_hygiene,
     pipeline_chunked_corpus, and corpus_health_report all serve from
@@ -311,14 +311,8 @@ def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     token arrays — i.e. the checkpointed verdict table a production
     pipeline would persist between hygiene stages anyway.
     """
-    from ..session_memo import session_memo
-
-    memo = session_memo(spark)
-    key = ("hygiene_verdicts", sf_dir)
-    if key in memo:
-        return memo[key][0]
     docs = load_table(spark, sf_dir, "documents")
-    frame = (
+    return (
         docs.select(
             "doc_id",
             "source",
@@ -327,29 +321,12 @@ def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(_rep_metrics(spark, sf_dir), "doc_id", "left")
         .join(_decon_hits(spark, sf_dir), "doc_id", "left")
-        .persist()
     )
-    memo[key] = (frame, lambda: frame.unpersist())
-    return frame
-
-
-def release_hygiene_cache(spark: SparkSession) -> None:
-    """Unpersist this session's memoized hygiene verdict frames and
-    drop the entries — for callers that tear down hygiene state
-    mid-session (mirrors retrieval.release_batch_cache)."""
-    from ..session_memo import session_memo
-
-    memo = session_memo(spark)
-    for k in [
-        k
-        for k in memo
-        if isinstance(k, tuple) and k[0] == "hygiene_verdicts"
-    ]:
-        memo.pop(k)[1]()
 
 
 @query(
     "text_repetition_filter",
+    family="hygiene",
     oracle=f"WITH {_TOKS_CTE},\n{_REP_CTES}\nSELECT * FROM rep",
 )
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,6 +347,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_decontaminate",
+    family="hygiene",
     oracle=rf"""
 WITH {_TOKS_CTE},
 {_DECON_CTES}
@@ -482,7 +460,7 @@ GROUP BY source
 """
 
 
-@query("pipeline_hygiene", oracle=_HYGIENE_ORACLE)
+@query("pipeline_hygiene", family="hygiene", oracle=_HYGIENE_ORACLE)
 def pipeline_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed hygiene pipeline: repetition filter -> benchmark
     decontamination -> exact dedup -> per-source stats. The per-doc
@@ -862,7 +840,7 @@ GROUP BY source
 """
 
 
-@query("pipeline_chunked_corpus", oracle=_CHUNKED_ORACLE)
+@query("pipeline_chunked_corpus", family="hygiene", oracle=_CHUNKED_ORACLE)
 def pipeline_chunked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RAG/embedding corpus-prep composition: repetition filter ->
     decontamination -> overlapping chunking -> per-source chunk stats.
@@ -946,7 +924,7 @@ FROM base b, uniq u, repc r, dec c
 """
 
 
-@query("corpus_health_report", oracle=_HEALTH_ORACLE)
+@query("corpus_health_report", family="hygiene", oracle=_HEALTH_ORACLE)
 def corpus_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus health dashboard — the daily monitoring query a
     pipeline runs over its working set: document/token volume, exact

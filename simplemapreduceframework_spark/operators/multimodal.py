@@ -812,8 +812,10 @@ class _JpegHuffTable(dict):
 # of files meets the same few tables (the Annex K set, or one custom
 # table) thousands of times, and building the canonical assignment +
 # LUT per file costs more than the entropy decode it serves. Bounded:
-# cleared when distinct specs exceed a cap nobody hits in practice.
+# past the cap each new spec evicts the newest entry, so the tables a
+# pass met first (the hot Annex K set) survive a flood of one-off specs.
 _JPEG_HUFF_TABLE_CACHE: dict[tuple[bytes, bytes], "_JpegHuffTable"] = {}
+_JPEG_HUFF_TABLE_CAP = 64
 
 
 def _jpeg_huff_decode_table(
@@ -824,8 +826,8 @@ def _jpeg_huff_decode_table(
     key = (bytes(bits), bytes(vals))
     table = _JPEG_HUFF_TABLE_CACHE.get(key)
     if table is None:
-        if len(_JPEG_HUFF_TABLE_CACHE) >= 64:
-            _JPEG_HUFF_TABLE_CACHE.clear()
+        if len(_JPEG_HUFF_TABLE_CACHE) >= _JPEG_HUFF_TABLE_CAP:
+            _JPEG_HUFF_TABLE_CACHE.popitem()
         table = _JpegHuffTable(
             {
                 (length, code): val

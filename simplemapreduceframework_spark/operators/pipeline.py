@@ -69,7 +69,7 @@ GROUP BY source
 """
 
 
-@query("pipeline_clean_corpus", oracle=_PIPELINE_ORACLE)
+@query("pipeline_clean_corpus", family="shingle", oracle=_PIPELINE_ORACLE)
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed corpus-cleaning pipeline (see module docstring).
 
@@ -187,7 +187,7 @@ GROUP BY shard_id, CAST(FLOOR((cum_tok - 1) / 512) AS BIGINT)
 """
 
 
-@query("pipeline_prepare_training_data", oracle=_PREP_ORACLE)
+@query("pipeline_prepare_training_data", family="shingle", oracle=_PREP_ORACLE)
 def pipeline_prepare_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete corpus-to-training-set pipeline as one declared
     plan: clean (quality floor, exact dedup, MinHash near-dup removal)

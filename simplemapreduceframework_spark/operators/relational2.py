@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from ..functions import dec2, hex32
 from ..functions.scale import broadcast_dim, table_rows
 from ..registry import query
+from ..session_memo import get_or_build
 from ..sources import load_table
 
 
@@ -683,11 +684,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# bloom_semi_filter's built sketch, per (application, sf_dir) — same
-# shared-index discipline as the dedup/vocab/lang-ID caches.
-_BLOOM_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def build_bloom(keys, n_bits: int = 1 << 20, n_hashes: int = 5):
     """Build a Bloom bit array over int64 keys (numpy, splitmix64-style
     double hashing). Returns (bits, n_bits, n_hashes)."""
@@ -809,10 +805,11 @@ def bloom_semi_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The sketch is an index artifact: build it once per session and
     # reuse across invocations (bench passes, downstream consumers) —
     # on a cluster it is a ~100 KB blob persisted next to the table.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BLOOM_CACHE:
-        _BLOOM_CACHE[key] = build_bloom_distributed(orders, "o_orderkey")
-    bits, n_bits, n_hashes = _BLOOM_CACHE[key]
+    bits, n_bits, n_hashes = get_or_build(
+        spark,
+        ("bloom", sf_dir),
+        lambda: build_bloom_distributed(orders, "o_orderkey"),
+    )
     probe = make_might_contain(bits, n_bits, n_hashes)
     li = load_table(spark, sf_dir, "lineitem")
     pruned = li.filter(probe(F.col("l_orderkey")))

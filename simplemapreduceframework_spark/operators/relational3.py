@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..functions.scale import broadcast_dim, table_rows
+from ..session_memo import per_session, shared_frame
 from ..sources import load_table, register_views
 
 # Q2 shape: for each large part, the supplier(s) selling it at the
@@ -920,7 +921,8 @@ FROM rules
 """
 
 
-@query("table_expectations", oracle=_EXPECT_SQL)
+@query("table_expectations", family="selfcontained", oracle=_EXPECT_SQL)
+@per_session("selfcontained")
 def table_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality expectation suite: not-null, range,
     primary-key uniqueness, referential-integrity, and positivity
@@ -942,12 +944,6 @@ def table_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rubber-stamping. The oracle keeps the readable CTE form (DuckDB
     materializes CTEs, no duplicate-scan concern).
     """
-    from ..session_memo import session_memo
-
-    memo = session_memo(spark)
-    memo_key = ("expectations", sf_dir)
-    if memo_key in memo:
-        return memo[memo_key]
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     li_agg = li.agg(
@@ -985,9 +981,11 @@ def table_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s")
     ).select("s.*")
     # the pk and fk rules reuse li_agg's row count via a broadcast
-    # 1-row cross join (persisted, so the shared lineitem scan runs
-    # once) — never a second count() scan of the fact table
-    li_agg = li_agg.persist()
+    # 1-row cross join (a shared frame, so the shared lineitem scan
+    # runs once) — never a second count() scan of the fact table
+    li_agg = shared_frame(
+        spark, ("selfcontained", "li_agg", sf_dir), lambda: li_agg
+    )
     n_frame = li_agg.select(F.col("n").alias("n_checked"))
     dupkey = (
         li.groupBy("l_orderkey", "l_linenumber")
@@ -1027,16 +1025,12 @@ def table_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(orphan.select("rule", "n_checked", "n_violations"))
         .unionByName(ord_rule)
     )
-    out = report.select(
+    return report.select(
         "rule",
         "n_checked",
         "n_violations",
         (F.col("n_violations") == 0).alias("passed"),
     )
-    # memoized (session-memo discipline): the persisted 1-row li_agg is
-    # owned by this entry, so repeat invocations reuse one cache chain
-    memo[memo_key] = out
-    return out
 
 
 # k-anonymity geometry: quasi-identifiers are the columns an adversary

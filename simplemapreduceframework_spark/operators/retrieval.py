@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens_regex
 from ..registry import query
-from ..session_memo import session_memo
+from ..session_memo import get_or_build, per_session, shared_frame
 from ..sources import load_table
 
 # The fixed search query: a user searching the synthetic systems corpus
@@ -103,7 +103,7 @@ LIMIT {_TOPK}
 """
 
 
-@query("text_bm25", oracle=_bm25_oracle())
+@query("text_bm25", family="bm25", oracle=_bm25_oracle())
 def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k retrieval for a fixed query over the documents corpus.
 
@@ -287,7 +287,7 @@ LIMIT {_TOPK}
 """
 
 
-@query("hybrid_search_rrf", oracle=_hybrid_oracle())
+@query("hybrid_search_rrf", family="bm25", oracle=_hybrid_oracle())
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical leg
     (fixed term query over documents) with the dense cosine leg (fixed
@@ -490,7 +490,7 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly as the IVF search prunes to probed cells. At 100 TB the
 # partition key widens (2-3 chars or a hash bucket) to keep partitions
 # balanced; the lifecycle is key-width-agnostic. The built index's
-# directory memoizes per session (session_memo — the one memo idiom).
+# directory memoizes per session.
 
 
 def build_text_index(docs: DataFrame, path: str) -> None:
@@ -558,14 +558,13 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    memo = session_memo(spark)
-    key = ("text_index", sf_dir)
-    path = memo.get(key)
-    if path is None:
+    def build_index() -> str:
         path = tempfile.mkdtemp(prefix="smrf_text_idx_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         build_text_index(load_table(spark, sf_dir, "documents"), path)
-        memo[key] = path
+        return path
+
+    path = get_or_build(spark, ("text_index", sf_dir), build_index)
     return search_text_index(spark, path, _BM25_TERMS, k=_TOPK)
 
 
@@ -580,41 +579,18 @@ _BATCH_QUERIES: dict[str, list[str]] = {
 _BATCH_TERMS = sorted({t for ts in _BATCH_QUERIES.values() for t in ts})
 _BATCH_TOPK = 5
 
-# The memoized batch result's shared pivoted frame is persisted, so
-# repeated invocations reuse one copy. Entries live in the per-session
-# weakref memo (see session_memo.py — immune to both the
-# applicationId-shared-by-newSession leak and id() address reuse);
-# values are (result, release), release unpersisting the pivot.
 
-
-def release_batch_cache(spark: SparkSession) -> None:
-    """Unpersist this session's memoized batch pivots and drop the
-    entries — for callers that tear down retrieval state mid-session."""
-    memo = session_memo(spark)
-    for k in [
-        k
-        for k in memo
-        if isinstance(k, tuple) and k[0] in ("bm25_batch", "bm25_pivot")
-    ]:
-        memo.pop(k)[1]()
-
-
+@per_session("bm25", persist=True)
 def _bm25_pivot_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE persisted corpus pass behind the batch tier: the
-    pivoted per-term contribution frame over _BATCH_TERMS, memoized
-    per (session, sf_dir) with a release handle (release_batch_cache).
+    pivoted per-term contribution frame over _BATCH_TERMS, shared per
+    (session, sf_dir) in the "bm25" family.
     Both text_bm25_batch and retrieval_eval_bm25 consume this frame,
     so their multi-arm plans reference a single materialized pivot
     instead of embedding one tokenize+postings subtree per arm
     (ADVICE r10: the eval query's unpersisted plan carried ~4 copies
     of the corpus pass)."""
-    memo = session_memo(spark)
-    key = ("bm25_pivot", sf_dir)
-    if key in memo:
-        return memo[key][0]
-    scored = _bm25_pivoted(spark, sf_dir, _BATCH_TERMS).persist()
-    memo[key] = (scored, lambda: scored.unpersist())
-    return scored
+    return _bm25_pivoted(spark, sf_dir, _BATCH_TERMS)
 
 
 def _batch_oracle() -> str:
@@ -675,7 +651,8 @@ scored AS (
 """
 
 
-@query("text_bm25_batch", oracle=_batch_oracle())
+@query("text_bm25_batch", family="bm25", oracle=_batch_oracle())
+@per_session("bm25")
 def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch retrieval: three queries answered from ONE corpus pass —
     the union of all query terms feeds a single tokenize + postings
@@ -689,13 +666,8 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs scoring 0 for a query (none of its terms) are excluded from
     that query's ranking, mirroring an inverted-index serving path.
     """
-    memo = session_memo(spark)
-    memo_key = ("bm25_batch", sf_dir)
-    if memo_key in memo:
-        return memo[memo_key][0]
     # one shared pivoted frame (the SAME expression tree as text_bm25,
-    # via _bm25_pivoted; persisted + memoized in _bm25_pivot_shared)
-    # serves every query's top-k
+    # via _bm25_pivoted) serves every query's top-k
     scored = _bm25_pivot_shared(spark, sf_dir)
     arms = []
     for qid, terms in sorted(_BATCH_QUERIES.items()):
@@ -715,9 +687,6 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = arms[0]
     for a in arms[1:]:
         out = out.unionAll(a)
-    # the pivot's unpersist lives with its own ("bm25_pivot", sf_dir)
-    # memo entry; this entry only caches the assembled result
-    memo[memo_key] = (out, lambda: None)
     return out
 
 
@@ -863,7 +832,7 @@ def _eval_metric_rows(topk: DataFrame, rels: DataFrame) -> DataFrame:
     )
 
 
-@query("retrieval_eval_bm25", oracle=_eval_oracle())
+@query("retrieval_eval_bm25", family="bm25", oracle=_eval_oracle())
 def retrieval_eval_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality evaluation of BM25 over the fixed query batch
     (VERDICT r9 item 5): per-query MRR@k, precision@k, and recall@k
@@ -948,6 +917,7 @@ _SIM_TOPK = 40
 
 @query(
     "doc_similarity_sparse",
+    family="selfcontained",
     oracle=f"""
 WITH tok AS (
     SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '\\w+')) AS word
@@ -980,6 +950,7 @@ ORDER BY cosine DESC, p.doc_a ASC, p.doc_b ASC
 LIMIT {_SIM_TOPK}
 """,
 )
+@per_session("selfcontained")
 def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs sparse document similarity through an inverted-index
     join: cosine over integer term-frequency vectors restricted to the
@@ -1007,24 +978,22 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path at extreme scale stays dedup_minhash_lsh /
     ann_lsh_bucketed; this is the exact mid-frequency baseline.
     """
-    memo = session_memo(spark)
-    memo_key = ("doc_similarity_sparse", sf_dir)
-    if memo_key in memo:
-        return memo[memo_key][0]
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(tokens_regex(F.lower(F.col("text")))).alias("word"),
-    )
-    tf = tok.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    kept = (
-        tf.join(
+
+    def build_kept() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        tok = docs.select(
+            "doc_id",
+            F.explode(tokens_regex(F.lower(F.col("text")))).alias("word"),
+        )
+        tf = tok.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+        df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+        return tf.join(
             df.filter(F.col("df").between(_SIM_DF_MIN, _SIM_DF_MAX)),
             "word",
-        )
-        .select("doc_id", "word", "tf")
-        .persist()
+        ).select("doc_id", "word", "tf")
+
+    kept = shared_frame(
+        spark, ("selfcontained", "sim_kept", sf_dir), build_kept
     )
     norms = kept.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("n2")
@@ -1049,7 +1018,7 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine = F.col("dot").cast("double") / (
         F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
     )
-    out = (
+    return (
         pairs.join(na, "doc_a")
         .join(nb, "doc_b")
         .select("doc_a", "doc_b", "n_shared", "dot", cosine.alias("cosine"))
@@ -1058,5 +1027,3 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(_SIM_TOPK)
     )
-    memo[memo_key] = (out, lambda: kept.unpersist())
-    return out

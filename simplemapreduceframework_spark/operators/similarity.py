@@ -29,7 +29,12 @@ from pyspark.sql.window import Window
 
 from ..functions import hex32
 from ..registry import query
-from ..session_memo import session_memo
+from ..session_memo import (
+    get_or_build,
+    per_session,
+    shared_frame,
+    shared_plan,
+)
 from ..sources import load_table
 
 _N_QUERIES = 10
@@ -66,6 +71,7 @@ def with_norm(emb: DataFrame) -> DataFrame:
 
 @query(
     "ann_cosine_topk",
+    family="ivf",
     oracle=f"""
 WITH n AS (
     SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm
@@ -229,7 +235,7 @@ FROM ranked WHERE rank <= {_TOP_K}
 """
 
 
-@query("ann_lsh_bucketed", oracle=_lsh_oracle())
+@query("ann_lsh_bucketed", family="ivf", oracle=_lsh_oracle())
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH — the
     100 TB scale path.
@@ -438,32 +444,24 @@ def _make_probe_udf(C: np.ndarray, nprobe: int):
     return probe
 
 
-# Memoized per (application, sf_dir): the recall gate consumes the
-# same scored candidates as the top-k query — train/index once per
-# session, like a persisted IVF index table on a cluster.
-# (kept in the per-session weakref memo; see session_memo.py)
+# The "ivf" family: the recall gate consumes the same scored
+# candidates as the top-k query — train/index once per session, like a
+# persisted IVF index table on a cluster.
 
 
-def clear_ivf_scored_cache(spark: SparkSession) -> None:
-    """Drop this session's memoized IVF candidate frames (test hook /
-    teardown after index mutation)."""
-    memo = session_memo(spark)
-    for k in [k for k in memo if isinstance(k, tuple) and k[0] == "ivf_scored"]:
-        del memo[k]
-
-
+@per_session("ivf", persist=True)
 def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared IVF candidate generation + scoring (used by the top-k
     query and the recall gate)."""
-    memo = session_memo(spark)
-    key = ("ivf_scored", sf_dir)
-    if key in memo:
-        return memo[key]
-    emb = with_norm(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-    ).persist()
+    emb = shared_frame(
+        spark,
+        ("ivf", "emb", sf_dir),
+        lambda: with_norm(
+            load_table(spark, sf_dir, "embeddings").select(
+                "vec_id", F.col("embedding").alias("e")
+            )
+        ),
+    )
     cells = ivf_cells_for(emb.count())
     C = _kmeans_centroids(emb, cells, _IVF_ITERS)
     assign = _make_assign_udf(C)
@@ -482,15 +480,13 @@ def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         index,
         (F.col("qcell") == F.col("cell")) & (F.col("vec_id") != F.col("query_id")),
     )
-    scored = cand.select(
+    return cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
             "cos_sim"
         ),
-    ).persist()
-    memo[key] = scored
-    return scored
+    )
 
 
 def ann_search_ivf(
@@ -514,21 +510,21 @@ def ann_search_ivf(
     persisted (cell as a partition column -> partition pruning per
     probe); query batches then broadcast against the pruned index.
     """
-    emb = with_norm(corpus.select("vec_id", F.col("embedding").alias("e"))).persist()
+    emb = with_norm(corpus.select("vec_id", F.col("embedding").alias("e")))
+    # a shared "ivf" frame keyed by the corpus plan, never evicted
+    # implicitly: the returned frame's lineage reads it on EVERY
+    # execution (the index projection below), so an unpersist after
+    # training made each search action re-derive the norm-annotated
+    # corpus from the base table. Repeated calls over the same corpus
+    # reuse one entry; release(spark, "ivf") frees it. At cluster scale
+    # this IS the documented "index computed once and persisted"
+    # lifecycle (build_ann_index is the durable variant).
+    emb = shared_plan("ivf", emb)
     n = emb.count()
     cells = ivf_cells_for(n) if cells is None else max(1, min(cells, n))
     if nprobe is None:
         nprobe = ivf_nprobe_for(cells)
     C = _kmeans_centroids(emb, cells, iters)
-    # emb stays persisted: the returned frame's lineage reads it on
-    # EVERY execution (the index projection below), so the old
-    # post-training unpersist made each search action re-derive the
-    # norm-annotated corpus from the base table — the same
-    # eviction-order class as the r17 BPE fix (guide §5). The cache
-    # entry is shared by logical plan, so repeated calls over the same
-    # corpus reuse one entry rather than accreting copies; at cluster
-    # scale this IS the documented "index computed once and persisted"
-    # lifecycle (build_ann_index is the durable variant).
     assign = _make_assign_udf(C)
     index = emb.select("vec_id", "e", "nrm", assign(F.col("e")).alias("cell"))
     probe = _make_probe_udf(C, nprobe)
@@ -873,7 +869,7 @@ def ann_search_ivf_indexed(
     )
 
 
-@query("ann_ivf_topk")
+@query("ann_ivf_topk", family="ivf")
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via IVF: deterministic-init distributed k-means
     partitions the corpus into cells; each query probes its nprobe
@@ -931,6 +927,7 @@ def _recall_gate_row(approx: DataFrame, exact: DataFrame, floor: float) -> DataF
 
 @query(
     "ann_ivf_recall_gate",
+    family="ivf",
     oracle=f"""
 SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
 """,
@@ -950,6 +947,7 @@ def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_search_ivf_gate",
+    family="ivf",
     oracle=f"""
 SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
 """,
@@ -978,11 +976,6 @@ def ann_search_ivf_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_gate_row(approx, exact, _RECALL_FLOOR)
 
 
-# Per-session home of the persisted-index gate's index build (an index
-# is built once and searched many times; the memo mirrors that).
-_IVF_INDEX_DIR_CACHE: dict[tuple[str, str], str] = {}
-
-
 @query(
     "ann_ivf_indexed_gate",
     oracle=f"""
@@ -1002,14 +995,16 @@ def ann_ivf_indexed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _IVF_INDEX_DIR_CACHE.get(key)
-    if path is None:
+
+    # the index is built once per session and searched many times
+    def build_index() -> str:
         path = tempfile.mkdtemp(prefix="smrf_ivf_gate_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         build_ann_index(emb, path)
-        _IVF_INDEX_DIR_CACHE[key] = path
+        return path
+
+    path = get_or_build(spark, ("ivf_index_dir", sf_dir), build_index)
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1224,6 +1219,7 @@ def ndcg_gate_row(
 
 @query(
     "ann_ivf_ndcg_gate",
+    family="ivf",
     oracle=f"""
 SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS ndcg_ok
 """,

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..functions.scale import broadcast_dim, table_rows
+from ..session_memo import per_session
 from ..sources import load_table
 
 
@@ -761,6 +762,7 @@ from ..sources.maintenance import MV_SCHEMA as _MV_SCHEMA  # noqa: E402
 
 
 @query("streaming_mv_refresh_live", oracle=_MV_ORACLE)
+@per_session("mv_stream")
 def streaming_mv_refresh_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING materialized-view maintenance: the historical orders
     seed a versioned summary store; the "new" orders arrive as a LIVE
@@ -783,7 +785,6 @@ def streaming_mv_refresh_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..session_memo import session_memo
     from ..sources import load_table
     from ..sources.maintenance import (
         _MV_MOD,
@@ -792,10 +793,6 @@ def streaming_mv_refresh_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming import read_table_stream
 
-    memo = session_memo(spark)
-    key = ("mv_stream", sf_dir)
-    if key in memo:
-        return memo[key]
     root = tempfile.mkdtemp(prefix="smrf_mv_stream_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
@@ -838,13 +835,11 @@ def streaming_mv_refresh_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.maintenance import finalize_mv
 
-    out = finalize_mv(
+    return finalize_mv(
         spark.read.schema(_MV_SCHEMA).parquet(
             f"{root}/store/v{versions[-1]}"
         )
     )
-    memo[key] = out
-    return out
 
 
 from .timeseries import _CONTRIB_CAP  # noqa: E402

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens_regex
 from ..registry import query
-from ..session_memo import session_memo
+from ..session_memo import per_session, shared_frame
 from ..sources import load_table
 
 # Per-language stopword lexicons for the language heuristic that seeds
@@ -83,13 +83,6 @@ _LEXICON: dict[str, list[str]] = {
 # space+punct run) — shared verbatim with the oracle; avoids
 # lookaheads so Java and RE2 agree.
 _BPE_PATTERN = r"'(?:[sdmt]|ll|ve|re)| ?\w+| ?[^\s\w]+"
-
-# Ranked-vocab memo, keyed by (spark application, sf_dir) — same shared-
-# index discipline as dedup._SHINGLE_CACHE: the persisted vocab is built
-# once per session and reused by every consumer (text_token_ids, bench
-# passes), never re-persisted per invocation.
-# (kept in the per-session weakref memo; see session_memo.py)
-
 
 @query(
     "text_token_stats",
@@ -188,11 +181,10 @@ def _lexicon_sql_values() -> str:
 _TRI_SEED_MIN = 3
 _TRI_PROFILE_SIZE = 200
 
-# Language-ID model cache: (lexicon verdicts, trigram profile) per
-# (application, sf_dir). Both are index artifacts — on a cluster the
-# profile is a persisted table shared by every scoring run — so they
-# are built once per session; only the per-doc scoring pass reruns.
-# (kept in the per-session weakref memo; see session_memo.py)
+# Language-ID model: (lexicon verdicts, trigram profile). Both are
+# index artifacts — on a cluster the profile is a persisted table
+# shared by every scoring run — so they are built once per session;
+# only the per-doc scoring pass reruns.
 
 
 def _char_trigrams(docs: DataFrame) -> DataFrame:
@@ -226,16 +218,13 @@ def _argmax(df: DataFrame, key: str, label: str, score: str) -> DataFrame:
     )
 
 
+@per_session("selfcontained")
 def _lang_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Build (or reuse) the language-ID model: per-doc lexicon verdicts
     ``lb`` (doc_id, lex_lang, hits) and the per-language trigram
-    ``profile`` (lang, tg). Persisted + memoized per session."""
+    ``profile`` (lang, tg), both shared frames."""
     from pyspark.sql.window import Window
 
-    memo = session_memo(spark)
-    key = ("lang_model", sf_dir)
-    if key in memo:
-        return memo[key]
     docs = load_table(spark, sf_dir, "documents")
     lex = spark.createDataFrame(
         [(lang, w) for lang, words in sorted(_LEXICON.items()) for w in words],
@@ -249,7 +238,11 @@ def _lang_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         .groupBy("doc_id", "lex_lang")
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    lb = _argmax(lscores, "doc_id", "lex_lang", "hits").persist()
+    lb = shared_frame(
+        spark,
+        ("selfcontained", "lang_lb", sf_dir),
+        lambda: _argmax(lscores, "doc_id", "lex_lang", "hits"),
+    )
     seeds = lb.filter(F.col("hits") >= _TRI_SEED_MIN).select(
         "doc_id", F.col("lex_lang").alias("lang")
     )
@@ -260,18 +253,19 @@ def _lang_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         .agg(F.count(F.lit(1)).alias("c"))
     )
     wp = Window.partitionBy("lang").orderBy(F.col("c").desc(), F.col("tg").asc())
-    profile = (
-        pcounts.withColumn("rn", F.row_number().over(wp))
+    profile = shared_frame(
+        spark,
+        ("selfcontained", "lang_profile", sf_dir),
+        lambda: pcounts.withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= _TRI_PROFILE_SIZE)
-        .select("lang", "tg")
-        .persist()
+        .select("lang", "tg"),
     )
-    memo[key] = (lb, profile)
     return lb, profile
 
 
 @query(
     "text_lang_id",
+    family="selfcontained",
     oracle=f"""
 WITH lex(lex_lang, lex_word) AS (VALUES {_lexicon_sql_values()}),
 tok AS (
@@ -385,6 +379,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_vocab",
+    family="selfcontained",
     oracle=r"""
 WITH counts AS (
     SELECT word, COUNT(*) AS freq
@@ -399,15 +394,17 @@ SELECT word,
 FROM counts
 """,
 )
+@per_session("selfcontained")
 def text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocabulary builder: corpus token frequencies with a
     min-count cutoff and deterministic id assignment (frequency-ranked,
     ties alphabetical) — the "build vocab" step of a training pipeline.
 
-    The ranked vocab is persisted + memoized per (application, sf_dir)
-    like the dedup shingle index: repeated invocations (bench passes,
-    token-id consumers) reuse one cached copy instead of leaking a new
-    persisted DataFrame into executor storage per call.
+    The ranked vocab is memoized per session and its id-stamped sort
+    is a shared frame, like the dedup shingle index: repeated
+    invocations (bench passes, token-id consumers) reuse one cached
+    copy instead of leaking a new persisted DataFrame into executor
+    storage per call.
 
     Scale: the frequency table is a partial-aggregated groupBy (corpus
     tokens collapse per partition first). Id assignment is a
@@ -422,10 +419,6 @@ def text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-count-5 vocab over 100 TB of web text (tens of millions of
     rows) ranks in parallel without leaving the JVM.
     """
-    memo = session_memo(spark)
-    memo_key = ("vocab", sf_dir)
-    if memo_key in memo:
-        return memo[memo_key]
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -435,19 +428,20 @@ def text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.col("freq") >= 5)
     )
-    # persist: the id stamps must be identical in the sizes branch and
+    # shared: the id stamps must be identical in the sizes branch and
     # the final projection (monotonically_increasing_id is recompute-
     # sensitive if the exchange re-plans per branch)
-    with_id = (
-        counts.orderBy(F.col("freq").desc(), F.col("word"))
+    with_id = shared_frame(
+        spark,
+        ("selfcontained", "vocab_with_id", sf_dir),
+        lambda: counts.orderBy(F.col("freq").desc(), F.col("word"))
         .withColumn("mid", F.monotonically_increasing_id())
         .select(
             "word",
             "freq",
             F.shiftright("mid", 33).alias("pid"),
             F.col("mid").bitwiseAND(F.lit((1 << 33) - 1)).alias("lidx"),
-        )
-        .persist()
+        ),
     )
     # partition-size prefix sums: <= n_partitions aggregated rows reach
     # the driver (constant-size coordination, like the Bloom merge)
@@ -457,16 +451,11 @@ def text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         offsets.append((r["pid"], acc))
         acc += r["n"]
     off_df = spark.createDataFrame(offsets, "pid bigint, off bigint")
-    out = (
-        with_id.join(F.broadcast(off_df), "pid")
-        .select(
-            "word",
-            "freq",
-            (F.col("lidx") + F.col("off") + 1).cast("bigint").alias("vocab_id"),
-        )
+    return with_id.join(F.broadcast(off_df), "pid").select(
+        "word",
+        "freq",
+        (F.col("lidx") + F.col("off") + 1).cast("bigint").alias("vocab_id"),
     )
-    memo[memo_key] = out
-    return out
 
 
 # Winnowing fingerprint CTE chain, shared verbatim between the
@@ -623,7 +612,7 @@ GROUP BY s.doc_id
 """
 
 
-@query("text_lm_coverage", oracle=_LM_ORACLE)
+@query("text_lm_coverage", family="shingle", oracle=_LM_ORACLE)
 def text_lm_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram-LM scoring of held-out documents: conditional trigram
     probabilities (doc-frequency c3 / context marginal c2) estimated on
@@ -675,6 +664,7 @@ def text_lm_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_token_ids",
+    family="selfcontained",
     oracle=r"""
 WITH counts AS (
     SELECT word, COUNT(*) AS freq

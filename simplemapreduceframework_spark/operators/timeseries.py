@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..session_memo import session_memo
+from ..session_memo import per_session
 from ..sources import load_table
 
 
@@ -491,12 +491,10 @@ def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FUNNEL_STAGES = ["view", "click", "purchase"]
 
-# The memoized funnel owns its persisted per-stage frames; entries
-# live in the per-session weakref memo (see session_memo.py).
-
 
 @query(
     "events_funnel",
+    family="selfcontained",
     oracle="""
 WITH s0 AS (
     SELECT user_id, MIN(ts) AS t FROM events
@@ -531,6 +529,7 @@ SELECT stage_idx, stage, n_users,
 FROM counts
 """,
 )
+@per_session("funnel")
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT ordered funnel (view -> click -> purchase): a user
     converts a stage only with an event strictly AFTER their first
@@ -551,10 +550,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion ratios divide identical integers (engine-exact
     doubles), and a zero top stage yields NULL on both engines.
     """
-    memo = session_memo(spark)
-    key = ("funnel", sf_dir)
-    if key in memo:
-        return memo[key]
     ev = load_table(spark, sf_dir, "events")
     frames, stage_counts = funnel_stage_frames(ev, _FUNNEL_STAGES)
     # the report is literal driver-side rows once the counts are
@@ -563,9 +558,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old memoized-lazy result kept them live; this one must not)
     for f in frames:
         f.unpersist()
-    out = _funnel_report(spark, _FUNNEL_STAGES, stage_counts)
-    memo[key] = out
-    return out
+    return _funnel_report(spark, _FUNNEL_STAGES, stage_counts)
 
 
 # Above this many users in a stage frame, the next stage joins by

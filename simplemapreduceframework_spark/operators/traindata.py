@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hex32, tokens_regex
 from ..registry import query
-from ..session_memo import session_memo
+from ..session_memo import per_session, shared_frame
 from ..sources import load_table
 
 _TEST_PCT = 10  # hash buckets [0, _TEST_PCT) -> test split
@@ -325,10 +325,9 @@ def sample_weighted_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # copies resolve deterministically per doc (salted-hash bucket against
 # the fractional part), so the mixed multiset is exactly reproducible
 # — integer basis points keep the compare exact in both engines.
-# Curriculum schedule memo per (application, sf_dir): the ranked frame
+# The curriculum schedule memoizes per session: the ranked frame
 # inside is persisted (see functions.ranking), so repeated invocations
-# must reuse one copy — same discipline as textanalysis._VOCAB_CACHE.
-# (kept in the per-session weakref memo; see session_memo.py)
+# must reuse one copy — same discipline as textanalysis.text_vocab.
 
 _MIX_BP = {"high": 20000, "mid": 10000, "low": 2500}
 # TRY_CAST on both engines: a source name that doesn't end in a number
@@ -462,6 +461,7 @@ SELECT doc_id, n_tok, phase,
 FROM phased
 """,
 )
+@per_session("curriculum")
 def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum-learning schedule: hygiene-filter the corpus (mostly-
     alphabetic docs only — the integer cross-multiply 2*n_alpha >=
@@ -482,10 +482,6 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.ranking import global_row_number
 
-    memo = session_memo(spark)
-    memo_key = ("curriculum", sf_dir)
-    if memo_key in memo:
-        return memo[memo_key]
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -498,9 +494,9 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = base.filter(2 * F.col("n_alpha") >= F.col("n_chars")).select(
         "doc_id", "n_tok"
     )
-    # the memoized result below keeps the ranked frame's cache entry
-    # for the session, so the persist is owned by _CURRICULUM_CACHE —
-    # never released (GlobalRank.release is for non-memoizing callers)
+    # the memoized result keeps the ranked frame's cache entry for the
+    # session — never released (GlobalRank.release is for
+    # non-memoizing callers)
     ranked, n, _release = global_row_number(
         kept, [F.col("n_tok"), F.col("doc_id")]
     )
@@ -521,14 +517,12 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     start = F.when(
         F.col("phase") <= rem, (F.col("phase") - 1) * (size + 1)
     ).otherwise(big + (F.col("phase") - 1 - rem) * size)
-    result = out.select(
+    return out.select(
         "doc_id",
         "n_tok",
         "phase",
         (F.col("rn") - start).cast("bigint").alias("rank_in_phase"),
     )
-    memo[memo_key] = result
-    return result
 
 
 from .._serde import pickle_by_value as _pbv  # noqa: E402
@@ -547,8 +541,28 @@ _pbv(__name__)
 _NEG_K = 4  # negatives drawn per anchor before rejection
 
 
+@per_session("selfcontained")
+def _neg_rank(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """The dense vec_id position index (a shared frame) and its row
+    count — built once per session for train_negative_sampling."""
+    from ..functions.ranking import global_row_number
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
+    gr = global_row_number(emb, [F.col("vec_id")], out="rn")
+    # released BEFORE ranked persists, so ranked's cached plan re-sorts
+    # instead of embedding the id-stamped sort's cache entry (the sort
+    # is a deterministic range partition: the recomputed stamps equal
+    # the ones the row count was taken from)
+    gr.release()
+    ranked = shared_frame(
+        spark, ("selfcontained", "neg_ranked", sf_dir), lambda: gr.df
+    )
+    return ranked, gr.count
+
+
 @query(
     "train_negative_sampling",
+    family="selfcontained",
     oracle=f"""
 WITH ranked AS (
     SELECT vec_id, label, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
@@ -589,17 +603,7 @@ def train_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex32(md5) % N, engine-identical by construction.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    memo = session_memo(spark)
-    key = ("neg_rank", sf_dir)
-    if key in memo:
-        ranked, total = memo[key]
-    else:
-        from ..functions.ranking import global_row_number
-
-        gr = global_row_number(emb, [F.col("vec_id")], out="rn")
-        ranked, total = gr.df.persist(), gr.count
-        memo[key] = (ranked, total)
-        gr.release()
+    ranked, total = _neg_rank(spark, sf_dir)
     anchors = emb.select(
         "vec_id",
         "label",
@@ -663,7 +667,7 @@ FROM lab
 """
 
 
-@query("split_leakage_safe", oracle=_LEAKAGE_ORACLE)
+@query("split_leakage_safe", family="cclabels", oracle=_LEAKAGE_ORACLE)
 def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc train/test assignment keyed on the near-dup cluster
     label: split = salted-hash(cluster_id) % 100, so every document in

@@ -20,10 +20,19 @@ ORACLES: dict[str, str] = {}
 # Queries intentionally registered without an oracle (non-SQL-expressible
 # or approximate); the driver records a rows-only check for these.
 ROWS_ONLY: set[str] = set()
+# Query -> the session_memo family of shared frames its plan reads
+# (directly, or by CacheManager substituting a matching cached
+# fragment). bench.py derives its plan-canary families from this.
+# "selfcontained" is the family of queries whose shared frames no
+# other family reads (a query's private index, sort or aggregate).
+FAMILY: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` as a declared query, optionally with oracle SQL."""
+def query(
+    name: str, oracle: str | None = None, family: str | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` as a declared query, optionally with oracle SQL
+    and the session_memo family its plan reads."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
@@ -33,6 +42,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             ORACLES[name] = oracle
         else:
             ROWS_ONLY.add(name)
+        if family is not None:
+            FAMILY[name] = family
         return fn
 
     return deco

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session_memo import get_or_build
+
 # The driver-generated star schema + pipeline tables (TESTDATA.md).
 TABLES = [
     "region",
@@ -65,20 +67,6 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
-# Scan-plan cache: (session, dir, table) -> (source mtime, analyzed
-# read DataFrame). spark.read.parquet costs a driver-side file
-# listing + footer/schema read per call (~100-300 ms against a
-# multi-file layout); a catalog caches that relation metadata exactly
-# once, and so do we. The mtime in the value makes overwrites (tests
-# that rewrite a table in place, driver fixture regeneration) a
-# natural cache miss AND an eviction — one live entry per (session,
-# dir, table), so the cache is bounded by distinct tables touched.
-# DataFrames and temp views are per-SparkSession (newSession() shares
-# an applicationId but not a catalog), so the key is the session
-# identity, not the application id.
-_TABLE_CACHE: dict[tuple[int, str, str], tuple[int, DataFrame]] = {}
-
-
 def _source_mtime(path: str) -> int:
     import os
 
@@ -86,10 +74,6 @@ def _source_mtime(path: str) -> int:
         return os.stat(path).st_mtime_ns
     except OSError:
         return -1
-
-
-def _session_key(spark: SparkSession) -> int:
-    return id(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -105,43 +89,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # unchanged) because execution-time formatting depends on it.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    key = (_session_key(spark), sf_dir, name)
-    mtime = _source_mtime(path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] == mtime:
-        return hit[1]
-    # Read NTZ-annotated parquet as plain TIMESTAMP (see _normalize_ntz);
-    # these flags matter at plan-build time only, so they live behind
-    # the cache hit.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _normalize_events(_normalize_ntz(spark.read.parquet(path)))
-    else:
-        df = _normalize_ntz(spark.read.parquet(path))
-    _TABLE_CACHE[key] = (mtime, df)
-    return df
 
+    # The analyzed scan memoizes per session: spark.read.parquet costs
+    # a driver-side file listing + footer/schema read per call
+    # (~100-300 ms against a multi-file layout); a catalog caches that
+    # relation metadata exactly once, and so do we. The source mtime
+    # stamp makes an overwrite (tests that rewrite a table in place,
+    # driver fixture regeneration) a rebuild of the one entry.
+    def read() -> DataFrame:
+        # Read NTZ-annotated parquet as plain TIMESTAMP (see
+        # _normalize_ntz); these flags matter at plan-build time only,
+        # so they live behind the memo hit.
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return _normalize_events(_normalize_ntz(spark.read.parquet(path)))
+        return _normalize_ntz(spark.read.parquet(path))
 
-# Last temp-view registration per SparkSession (views live in the
-# session catalog, not the application), so repeated spark.sql queries
-# against the same fixture directory skip 10 no-op
-# createOrReplaceTempView round-trips.
-_VIEWS_REGISTERED: dict[int, tuple[str, tuple[int, ...]]] = {}
+    return get_or_build(
+        spark, ("table", sf_dir, name), read, stamp=_source_mtime(path)
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() use."""
+    """Register every table as a temp view for spark.sql() use. The
+    last registration memoizes per session (views live in the session
+    catalog), so repeated spark.sql queries against the same fixture
+    directory skip 10 no-op createOrReplaceTempView round-trips."""
+
+    def register() -> None:
+        for t in TABLES:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+
     stamp = (
         sf_dir,
         tuple(_source_mtime(f"{sf_dir}/{t}.parquet") for t in TABLES),
     )
-    skey = _session_key(spark)
-    if _VIEWS_REGISTERED.get(skey) == stamp:
-        return
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    _VIEWS_REGISTERED[skey] = stamp
+    get_or_build(spark, ("views",), register, stamp=stamp)
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:

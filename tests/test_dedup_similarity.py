@@ -357,11 +357,12 @@ def test_ivf_recall_gate_passes_and_can_fail(spark, sf_dir, monkeypatch):
     (simulates corrupted centroids in a persisted index) — candidates
     then come from the wrong side of the space and recall collapses."""
     from simplemapreduceframework_spark.operators import similarity as sim
+    from simplemapreduceframework_spark.session_memo import release
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     # healthy: the gate row is True at the tightened 0.85 floor
-    sim.clear_ivf_scored_cache(spark)
+    release(spark, "ivf")
     [row] = Q["ann_ivf_recall_gate"](spark, sf_dir).collect()
     assert row["recall_ok"] is True
 
@@ -380,12 +381,12 @@ def test_ivf_recall_gate_passes_and_can_fail(spark, sf_dir, monkeypatch):
         return probe
 
     monkeypatch.setattr(sim, "_make_probe_udf", farthest_probe)
-    sim.clear_ivf_scored_cache(spark)
+    release(spark, "ivf")
     try:
         [row] = Q["ann_ivf_recall_gate"](spark, sf_dir).collect()
         assert row["recall_ok"] is False, "gate failed to catch a broken probe"
     finally:
-        sim.clear_ivf_scored_cache(spark)  # never leak the poisoned index
+        release(spark, "ivf")  # never leak the poisoned index
 
 
 def test_lm_coverage_semantics(spark, sf_dir):

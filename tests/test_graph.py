@@ -248,27 +248,27 @@ def test_basket_tier_shares_one_persisted_pair_frame(spark, sf_dir):
     in-memory scan. Identity and storage level are checked so a
     regression to per-query pair generation fails loudly."""
     from simplemapreduceframework_spark.operators import graph as g
-    from simplemapreduceframework_spark.session_memo import session_memo
+    from simplemapreduceframework_spark.session_memo import release, session_memo
 
+    release(spark, "basket")  # isolate from earlier tests' cache
     memo = session_memo(spark)
-    key = ("pair_counts", sf_dir)
-    if key in memo:  # isolate from earlier tests' cache
-        memo.pop(key)[1]()
+    key = ("basket", "_pair_counts", sf_dir)
 
     Q["basket_part_pairs"](spark, sf_dir).count()
-    pairs = memo[key][0]
+    pairs = memo[key]
     assert pairs.storageLevel.useMemory  # actually persisted
 
     Q["basket_rules"](spark, sf_dir).count()
-    assert memo[key][0] is pairs  # same frame, no rebuild
+    assert memo[key] is pairs  # same frame, no rebuild
     Q["graph_triangles"](spark, sf_dir).count()
-    assert memo[key][0] is pairs
+    assert memo[key] is pairs
 
     # the persist floor is the minimum threshold any consumer applies
     floor = min(g._BASKET_MIN_PAIR, g._RULE_MIN_PAIR, g._TRI_MIN_COBUY)
     assert pairs.filter(f"n_ab < {floor}").count() == 0
 
-    memo.pop(key)[1]()
+    release(spark, "basket")
+    assert key not in memo
     assert not pairs.storageLevel.useMemory  # release really unpersists
 
 

@@ -70,11 +70,9 @@ def test_repetition_filter_rejects_degenerate_doc(spark, tmp_path, sf_dir):
     r = rows[0]
     assert r["n_distinct"] == 1 and not r["keep"]
     # drop the tmp dir's memoized verdict frame — the corpus vanishes
-    from simplemapreduceframework_spark.operators.llmfilters import (
-        release_hygiene_cache,
-    )
+    from simplemapreduceframework_spark.session_memo import release
 
-    release_hygiene_cache(spark)
+    release(spark, "hygiene")
     shutil.rmtree(src, ignore_errors=True)
 
 
@@ -305,15 +303,15 @@ def test_hygiene_family_shares_one_persisted_frame(spark, sf_dir):
     consumers drop from a 2.1 s best-sum to 0.65 s once warm).
     Identity, storage level, and release are all checked so a
     regression to per-query verdict passes fails loudly."""
-    from simplemapreduceframework_spark.operators import llmfilters as lf
-    from simplemapreduceframework_spark.session_memo import session_memo
+    from simplemapreduceframework_spark.session_memo import release, session_memo
 
-    lf.release_hygiene_cache(spark)
+    release(spark, "hygiene")
     memo = session_memo(spark)
-    assert ("hygiene_verdicts", sf_dir) not in memo
+    key = ("hygiene", "_hygiene_verdicts_shared", sf_dir)
+    assert key not in memo
 
     Q["text_repetition_filter"](spark, sf_dir).count()
-    frame = memo[("hygiene_verdicts", sf_dir)][0]
+    frame = memo[key]
     assert frame.storageLevel.useMemory  # actually persisted
 
     for q in (
@@ -323,10 +321,10 @@ def test_hygiene_family_shares_one_persisted_frame(spark, sf_dir):
         "corpus_health_report",
     ):
         Q[q](spark, sf_dir).count()
-        assert memo[("hygiene_verdicts", sf_dir)][0] is frame  # no rebuild
+        assert memo[key] is frame  # no rebuild
 
-    lf.release_hygiene_cache(spark)
-    assert ("hygiene_verdicts", sf_dir) not in memo
+    release(spark, "hygiene")
+    assert key not in memo
     assert not frame.storageLevel.useMemory  # release really unpersists
 
 

@@ -1902,3 +1902,19 @@ def test_flac_reserved_rate_and_size_codes_reject():
     # byte 3 = ch_code<<4 | ss_code<<1 | reserved: force ss_code 3
     with pytest.raises(ValueError, match="sample-size code 3"):
         decode_flac(patch(3, lambda b: (b & 0xF1) | (3 << 1)))
+
+
+def test_jpeg_huff_table_cache_keeps_hot_table_past_cap(monkeypatch):
+    """Past its cap the decode-table cache evicts one entry per new
+    spec instead of clearing: a hot table (the Annex K DC table every
+    file in a batch uses) keeps its one built object through a flood
+    of distinct one-off specs, and the cache never exceeds the cap."""
+    from simplemapreduceframework_spark.operators import multimodal as mm
+
+    monkeypatch.setattr(mm, "_JPEG_HUFF_TABLE_CACHE", {})
+    bits, vals = mm._JPEG_DC_BITS, mm._JPEG_DC_VALS
+    hot = mm._jpeg_huff_decode_table(bits, vals)
+    for i in range(1, 2 * mm._JPEG_HUFF_TABLE_CAP):
+        mm._jpeg_huff_decode_table(bits, [v + i for v in vals])
+        assert mm._jpeg_huff_decode_table(bits, vals) is hot
+        assert len(mm._JPEG_HUFF_TABLE_CACHE) <= mm._JPEG_HUFF_TABLE_CAP

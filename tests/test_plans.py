@@ -187,15 +187,13 @@ def test_memo_family_plans_do_not_grow(spark, sf_dir, family):
     """Every CACHE_DEPENDENT query is skipped by the whole-set canary
     above, so each memo family gets its own canary under a CONTROLLED
     memo state (r13 ADVICE built the hygiene instance; r14 ADVICE
-    generalized it to all six families): clean the whole session slate
-    (memo + CacheManager — so no OTHER family's persisted fragment can
-    leak into these plans under unlucky test orderings), build the
-    family's shared frames in order, fingerprint each pre-
-    materialization, materialize, fingerprint each consumer post-cache,
-    and pin no-growth vs tests/PLAN_BASELINE_FAMILIES.json (regenerated
+    generalized it to every family): clean the whole session slate
+    with release(spark) (memo + CacheManager — so no OTHER family's
+    persisted fragment can leak into these plans under unlucky test
+    orderings), fingerprint each of the family's builders unpersisted
+    and then build it, fingerprint each consumer, and pin no-growth vs tests/PLAN_BASELINE_FAMILIES.json (regenerated
     by the same scripts/gen_plan_baseline.py run as the main baseline).
-    The family partition itself is asserted == CACHE_DEPENDENT at
-    bench.py import time."""
+    bench.py derives the families from the registry's declarations."""
     import json
     import os
 
@@ -222,13 +220,11 @@ def test_memo_family_plans_do_not_grow(spark, sf_dir, family):
 
 
 def test_memo_families_partition_cache_dependent():
-    """Duplicate of bench.py's import-time partition invariant (r15
-    ADVICE: the module-level checks there are the primary guard — now
-    explicit raises, not asserts — but a `python -O`-style stripped or
-    refactored-away guard must still fail THIS test): MEMO_FAMILIES'
-    consumers must cover CACHE_DEPENDENT exactly, with no query in two
-    families. Also pins that collection produced real family params,
-    not the bench-import-failure sentinel."""
+    """MEMO_FAMILIES' consumers must cover CACHE_DEPENDENT exactly,
+    with no query in two families (bench.py derives both from the
+    single-valued registry declarations, so this pins the derivation).
+    Also pins that collection produced real family params, not the
+    bench-import-failure sentinel."""
     from bench import CACHE_DEPENDENT, MEMO_FAMILIES
 
     consumers = [n for f in MEMO_FAMILIES.values() for n in f["consumers"]]

@@ -147,3 +147,28 @@ def test_bench_manifest_matches_headline_order():
     assert fixed + head_cost < LINE_BYTE_BUDGET
     # the priority list names real headline queries, exactly once each
     assert sorted(LINE_PRIORITY) == sorted(HEADLINE)
+
+
+def test_bench_named_fill_skips_a_wide_boundary_entry():
+    """bench.fill_named keeps scanning past an entry that overflows the
+    byte budget: a wide boundary entry costs only itself, shorter
+    lower-priority entries still fill the slack, and the named set does
+    not depend on the boundary value's width."""
+    import json
+
+    from bench import fill_named
+
+    budget = 100
+    priority = ["a1", "a2", "x" * 80, "b1", "b2", "c" * 60]
+
+    def fits(named: dict[str, float]) -> bool:
+        return len(json.dumps({"queries": named})) <= budget
+
+    sets = []
+    for wide_value in (1.5, 123.45):
+        timings = {n: 1.25 for n in priority}
+        timings["x" * 80] = wide_value
+        named = fill_named(priority, timings, fits)
+        assert fits(named)
+        sets.append(set(named))
+    assert sets[0] == sets[1] == {"a1", "a2", "b1", "b2"}

@@ -158,29 +158,29 @@ def test_batch_and_eval_share_one_persisted_pivot(spark, sf_dir):
     query's unpersisted plan embedded ~4 copies of the
     tokenize+postings subtree). Identity, storage level, and release
     are all checked so a regression to per-query pivots fails loudly."""
-    from simplemapreduceframework_spark.operators import retrieval as rt
-    from simplemapreduceframework_spark.session_memo import session_memo
+    from simplemapreduceframework_spark.session_memo import release, session_memo
 
-    rt.release_batch_cache(spark)
+    release(spark, "bm25")
     memo = session_memo(spark)
-    assert ("bm25_pivot", sf_dir) not in memo
+    key = ("bm25", "_bm25_pivot_shared", sf_dir)
+    assert key not in memo
 
     Q["text_bm25_batch"](spark, sf_dir).count()
-    pivot = memo[("bm25_pivot", sf_dir)][0]
+    pivot = memo[key]
     assert pivot.storageLevel.useMemory  # actually persisted
 
     Q["retrieval_eval_bm25"](spark, sf_dir).count()
-    assert memo[("bm25_pivot", sf_dir)][0] is pivot  # same frame, no rebuild
+    assert memo[key] is pivot  # same frame, no rebuild
 
     # r11: the single-query and hybrid legs joined the family — both
     # must serve from the SAME pivot, not rebuild their own
     Q["text_bm25"](spark, sf_dir).count()
     Q["hybrid_search_rrf"](spark, sf_dir).count()
-    assert memo[("bm25_pivot", sf_dir)][0] is pivot
+    assert memo[key] is pivot
 
-    rt.release_batch_cache(spark)
-    assert ("bm25_pivot", sf_dir) not in memo
-    assert ("bm25_batch", sf_dir) not in memo
+    release(spark, "bm25")
+    assert key not in memo
+    assert ("bm25", "text_bm25_batch", sf_dir) not in memo
     assert not pivot.storageLevel.useMemory  # release really unpersists
 
 
@@ -192,6 +192,7 @@ def test_shared_pivot_restores_query_row_set_exactly(spark, tmp_path):
     4-term pivot built directly (same expression tree, same inputs).
     Can-fail: dropping _bm25_scored's sum>0 filter admits doc 2."""
     from simplemapreduceframework_spark.operators import retrieval as rt
+    from simplemapreduceframework_spark.session_memo import release
 
     rows = [
         (1, "vector merge algorithms run fast", "src0"),   # query terms
@@ -222,4 +223,4 @@ def test_shared_pivot_restores_query_row_set_exactly(spark, tmp_path):
         }
         assert scored == narrow  # bit-identical, not just same rows
     finally:
-        rt.release_batch_cache(spark)
+        release(spark, "bm25")
