@@ -1918,3 +1918,109 @@ def test_jpeg_huff_table_cache_keeps_hot_table_past_cap(monkeypatch):
         mm._jpeg_huff_decode_table(bits, [v + i for v in vals])
         assert mm._jpeg_huff_decode_table(bits, vals) is hot
         assert len(mm._JPEG_HUFF_TABLE_CACHE) <= mm._JPEG_HUFF_TABLE_CAP
+
+
+# Encoder equivalence: sha256 over the concatenated payloads each codec
+# query's encode stage writes for doc_id 0..3999, pinned at the commit
+# that introduced this test. Any codec refactor must keep every byte.
+# Never edit these digests; a mismatch means the encoders changed.
+_ENCODER_DIGESTS = {
+    "multimodal_decode_real": (
+        "a840b35ece034f084031db6f6398495728a554edb08112c67dd0dc663a55be3d"
+    ),
+    "multimodal_decode_gif": (
+        "0ec3aab98af928db533610bf102cc9adc89a300de7a090ae82b2101fa7a27d14"
+    ),
+    "multimodal_decode_jpeg": (
+        "961a25ba4f8fd5f9951f1012820d1b3baec67d5600c49769f06ed3e18a2e0731"
+    ),
+    "multimodal_decode_progressive": (
+        "57e37790b076c0e6a3b516720cd07afdc646f95b2fc3fb22877f62c185955adb"
+    ),
+    "multimodal_decode_lossless": (
+        "43a6b1750c86418c4c96534e5b7f04d281f65f38b8fe29ef4e98ae0399f3fe26"
+    ),
+    "multimodal_decode_color": (
+        "a6877be9cb636f7a87f9deeb53fa47878d01567ad608fb3f8a3dcdc07fdd3526"
+    ),
+    "multimodal_decode_subsampled": (
+        "5eb77386f76e9423a47b32a663be3f336b2f29cb07daa40d4a7ec0bb984425e0"
+    ),
+    "multimodal_audio_real": (
+        "45a45ef35a2c6fb971a03d37fc6ceeb2a0b6d2cb356c24262ec9982cbe67da47"
+    ),
+    "multimodal_audio_adpcm": (
+        "4444e49475c6a832359f36ecbe8c97e049e6990df061b170a528ed8069929349"
+    ),
+    "multimodal_audio_flac": (
+        "74b53480fd7d3f591aa4423a67a20a0ec1acf8db8422e10e482821e3217a68f8"
+    ),
+}
+_BLOCKS_GRID_DIGEST = (
+    "7407c158dcf76a5f99a7f15ce0befe0370fb8401601e97cb79b3a2f0de2d5667"
+)
+_JPEG_422_DIGEST = (
+    "a95e61b9a87692789604a78cbeb659f85b5275ddccf84747984bd830901055ab"
+)
+_JPEG_440_DIGEST = (
+    "2e5468fb3c161454442d8137c376acb573d7964440768218841ac28fbb0b2299"
+)
+
+
+class _PlanRecorder:
+    """Stands in for the documents frame: records every mapInPandas
+    body a query chains, so its encode stage runs without Spark."""
+
+    def __init__(self):
+        self.bodies = []
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        self.bodies.append(fn)
+        return self
+
+
+def _sha256(payloads) -> str:
+    import hashlib
+
+    return hashlib.sha256(b"".join(payloads)).hexdigest()
+
+
+@pytest.mark.parametrize("name", sorted(_ENCODER_DIGESTS))
+def test_codec_query_encoder_bytes_unchanged(name, monkeypatch):
+    from simplemapreduceframework_spark.operators import multimodal as mm
+
+    rec = _PlanRecorder()
+    monkeypatch.setattr(mm, "load_table", lambda *a, **k: rec)
+    Q[name](None, None)
+    encode = rec.bodies[0]
+    batch = pd.DataFrame({"doc_id": pd.Series(range(4000), dtype="int64")})
+    payloads = [p for out in encode(iter([batch])) for p in out["payload"]]
+    assert len(payloads) == 4000
+    assert _sha256(payloads) == _ENCODER_DIGESTS[name]
+
+
+def _luma_grid(bw, bh):
+    return [[(37 * bx + 91 * by + 5) % 256 for bx in range(bw)]
+            for by in range(bh)]
+
+
+def test_jpeg_blocks_and_sampled_encoder_bytes_unchanged():
+    """The explicit-grid writer and the 4:2:2 / 4:4:0 sampling layouts
+    (no codec query emits them) keep their exact bytes too."""
+    from simplemapreduceframework_spark.operators.multimodal import make_jpeg
+
+    grid = _luma_grid(7, 5)
+    assert _sha256(
+        [make_jpeg(56, 40, 9, restart_interval=2, blocks=grid)]
+    ) == _BLOCKS_GRID_DIGEST
+    fill = 250  # chroma Cb = 77, Cr = 157
+    cb, cr = (fill * 31 + 7) % 256, (fill * 17 + 3) % 256
+    assert _sha256(
+        [_encode_jpeg_sampled(48, 24, _luma_grid(6, 3), cb, cr, (2, 1))]
+    ) == _JPEG_422_DIGEST
+    assert _sha256(
+        [_encode_jpeg_sampled(24, 48, _luma_grid(3, 6), cb, cr, (1, 2))]
+    ) == _JPEG_440_DIGEST
