@@ -29,7 +29,8 @@ def first_line(fn) -> str:
     return " ".join(out)
 
 
-def main() -> None:
+def render() -> str:
+    """OPERATORS.md's full text for the registry as loaded now."""
     registry.load_all()
     by_module: dict[str, list[str]] = {}
     for name, fn in sorted(registry.QUERIES.items()):
@@ -60,8 +61,12 @@ def main() -> None:
         lines.append("|---|---|---|")
         lines.extend(by_module[mod])
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open(OUT, "w") as f:
-        f.write("\n".join(lines))
+        f.write(render())
     print(f"wrote {OUT} ({len(registry.QUERIES)} queries)")
 
 

@@ -13,11 +13,15 @@ boundary). The Spark-side plumbing is equally real and tested: binary
 payload column, metadata struct, mapInPandas batch shape, and the
 partitioning story (payloads never shuffle; feature extraction is
 row-local so it scales linearly).
+
+Each synthesize->decode codec query is one row of `_CODEC_QUERIES`
+(payload formula, decoder, oracle, docstring), registered by one loop.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -315,12 +319,12 @@ def decode_pixels(b: bytes) -> tuple[str, int, int, int, int]:
     Formats: BMP (24-bit uncompressed, bottom-up or top-down, 4-byte
     row padding stripped), binary PPM (P6) / PGM (P5), PNG (8-bit
     RGB, all five scanline filters, multi-IDAT, via zlib), GIF
-    (non-interlaced, full LZW inflate + palette lookup — see
-    _decode_gif_pixels), and baseline grayscale JPEG (full Huffman +
-    dequant + IDCT — see _decode_jpeg_pixels). Progressive and color
-    JPEG raise NotImplementedError (dimensions still available via
-    decode_real).
-    """
+    (interlaced or not, full LZW inflate + palette lookup — see
+    _decode_gif_pixels), and JPEG: baseline grayscale or color at
+    any sampling whose component factors divide the maxima (full
+    Huffman + dequant + IDCT — see _decode_jpeg_pixels), progressive
+    and lossless. The module docstring names the formats that raise
+    NotImplementedError."""
     import struct
     import zlib
 
@@ -840,318 +844,197 @@ def _jpeg_huff_decode_table(
     return table
 
 
+# Encode-side Huffman tables (value -> (code, length)), built once at
+# import: every synthesized payload uses them.
+_JPEG_DC_CODES = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_CODES = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+# The Annex K AC table has no EOBn (0x10..0xE0) codes — those are
+# progressive-only, so progressive encoders ship custom tables.
+# Canonical 4-bit table over EOB0..EOB7 + ZRL (codes 0000..1000).
+_JPEG_EOBRUN_VALS = [0x00, 0x10, 0x20, 0x30, 0x40, 0x50, 0x60, 0x70, 0xF0]
+_JPEG_EOBRUN_BITS = [0, 0, 0, 9] + [0] * 12
+_JPEG_EOBRUN_CODES = _jpeg_huff_codes(_JPEG_EOBRUN_BITS, _JPEG_EOBRUN_VALS)
+
+
+def _jpeg_dc_code(diff: int) -> tuple[int, int]:
+    """(bits, length) of one DC difference: its size category's Huffman
+    code, then the low ``size`` bits of the value (negative values as
+    diff + 2^size - 1, T.81 F.1.2.1)."""
+    s = abs(diff).bit_length()
+    code, ln = _JPEG_DC_CODES[s]
+    return (code << s) | (diff if diff >= 0 else diff + (1 << s) - 1), ln + s
+
+
+# A constant block's whole entropy code: DC difference, then EOB (all
+# AC zero), for every difference two level-shifted 8-bit values can have.
+_EOB_CODE, _EOB_LEN = _JPEG_AC_CODES[0x00]
+_JPEG_DC_EOB = {
+    d: ((code << _EOB_LEN) | _EOB_CODE, ln + _EOB_LEN)
+    for d in range(-255, 256)
+    for code, ln in [_jpeg_dc_code(d)]
+}
+
+
+def _jpeg_scan_writer():
+    """An entropy-coded segment under construction: ``emit(bits, n)``
+    appends n bits MSB-first with 0xFF byte stuffing and ``pad()``
+    fills the last partial byte with 1-bits; both write into ``scan``."""
+    scan = bytearray()
+    acc = 0
+    nbits = 0
+
+    def emit(code: int, n: int) -> None:
+        nonlocal acc, nbits
+        acc = (acc << n) | code
+        nbits += n
+        while nbits >= 8:
+            nbits -= 8
+            byte = (acc >> nbits) & 0xFF
+            scan.append(byte)
+            if byte == 0xFF:
+                scan.append(0)  # T.81 byte stuffing
+        acc &= (1 << nbits) - 1
+
+    def pad() -> None:
+        if nbits:
+            emit((1 << (8 - nbits)) - 1, 8 - nbits)
+
+    return scan, emit, pad
+
+
+def _jpeg_segment(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker code, the big-endian length
+    (counting itself) and the body."""
+    return bytes((0xFF, marker)) + (2 + len(body)).to_bytes(2, "big") + body
+
+
+def _jpeg_sof(marker: int, width: int, height: int, sampling: tuple) -> bytes:
+    """SOFn with 8-bit samples: component i+1 gets sampling byte
+    ``sampling[i]`` (H<<4 | V) and quantization table 0."""
+    body = bytes([8, *height.to_bytes(2, "big"), *width.to_bytes(2, "big"),
+                  len(sampling)])
+    for i, hv in enumerate(sampling, 1):
+        body += bytes((i, hv, 0))
+    return _jpeg_segment(marker, body)
+
+
+def _jpeg_dht(table: int, bits: list[int], vals: list[int]) -> bytes:
+    """DHT for one table (class << 4 | id)."""
+    return _jpeg_segment(0xC4, bytes([table, *bits, *vals]))
+
+
+def _jpeg_sos(tables: tuple, ss: int, se: int, ah_al: int = 0) -> bytes:
+    """SOS over components 1..len(tables), component i+1 bound to the
+    DC<<4 | AC table pair ``tables[i]``."""
+    body = bytes([len(tables)])
+    for i, t in enumerate(tables, 1):
+        body += bytes((i, t))
+    return _jpeg_segment(0xDA, body + bytes((ss, se, ah_al)))
+
+
+_JPEG_SOI = b"\xff\xd8"
+_JPEG_EOI = b"\xff\xd9"
+_JPEG_DQT = _jpeg_segment(0xDB, bytes([0x00, _JPEG_QDC] + [_JPEG_QAC] * 63))
+_JPEG_DHT_DC = _jpeg_dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_DHT_AC = _jpeg_dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
+
+
+def _jpeg_checkerboard(width: int, height: int, fill: int) -> list[list[int]]:
+    """The synthesized luma raster, one value per 8x8 block ([by][bx]):
+    ``fill % 256`` where bx+by is even, else ``(fill*7+13) % 256``."""
+    a = fill % 256
+    b = (fill * 7 + 13) % 256
+    return [
+        [a if (bx + by) % 2 == 0 else b for bx in range(width // 8)]
+        for by in range(height // 8)
+    ]
+
+
 def make_jpeg(
     width: int,
     height: int,
     fill: int = 0,
     restart_interval: int = 0,
     blocks: list[list[int]] | None = None,
+    sampling: tuple[int, int] | None = None,
 ) -> bytes:
-    """A REAL, viewer-decodable baseline JPEG (SOF0, grayscale), pure
-    stdlib: DQT, SOF0, the two Annex K luminance Huffman tables, DRI
-    when a restart interval is requested, and a genuine MSB-first
-    entropy-coded scan with 0xFF byte stuffing and RSTn markers.
+    """A REAL, viewer-decodable baseline JPEG (SOF0), pure stdlib: DQT,
+    SOF0, the two Annex K luminance Huffman tables, DRI when a restart
+    interval is requested, and a genuine MSB-first entropy-coded scan
+    with 0xFF byte stuffing and RSTn markers.
 
-    The raster is a BLOCK-level checkerboard: 8x8 block (bx, by) is the
-    constant ``fill % 256`` when (bx+by) is even, else
-    ``(fill*7+13) % 256``. Constant blocks make the lossy pipeline
-    exactly invertible (see _JPEG_QDC), so every DC difference is a
-    real Huffman-coded value yet the decoded pixel sum has the closed
-    form 64 * (n_even*a + (W*H - n_even)*b) with
-    n_even = (W*H + (W%2)*(H%2)) // 2 — while the varying per-block
-    DC deltas still exercise multiple Huffman size categories and bit
-    packing across byte seams. An explicit ``blocks`` grid (row-major
-    [by][bx] 0-255 values) overrides the checkerboard — arbitrary
+    ``sampling=None`` writes grayscale. ``(h, v)`` writes Y/Cb/Cr with
+    luma sampling h x v and 1x1 chroma — (1, 1) is 4:4:4, (2, 2) 4:2:0,
+    (2, 1) 4:2:2 — so each MCU interleaves h*v luma blocks (row-major)
+    then one Cb and one Cr block, with per-component DC predictors and
+    shared tables; dimensions must be whole MCUs.
+
+    The luma raster is a BLOCK-level checkerboard: 8x8 block (bx, by)
+    is the constant ``fill % 256`` when (bx+by) is even, else
+    ``(fill*7+13) % 256``; chroma is constant per image
+    (``(fill*31+7) % 256`` / ``(fill*17+3) % 256``). Constant blocks
+    make the lossy pipeline exactly invertible (see _JPEG_QDC), so
+    every DC difference is a real Huffman-coded value yet the decoded
+    pixel sum has a closed form: 64 * (n_even*a + (W*H - n_even)*b)
+    over the W x H block grid with n_even = (W*H + (W%2)*(H%2)) // 2
+    for grayscale, the same through the pinned floor(x+0.5)
+    YCbCr->RGB conversion for color (replication upsampling of
+    constant chroma is exact). An explicit ``blocks`` grid (row-major
+    [by][bx] 0-255 luma values) overrides the checkerboard — arbitrary
     block-constant rasters stay exactly invertible, which is what the
     hypothesis roundtrip test sweeps."""
-    import struct
-
-    if width % 8 or height % 8:
-        raise ValueError("make_jpeg emits whole 8x8 blocks only")
-    a = fill % 256
-    bval = (fill * 7 + 13) % 256
-    bw, bh = width // 8, height // 8
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    scan = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, n: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << n) | code
-        nbits += n
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0)  # T.81 byte stuffing
-            nbits -= 8
-            acc &= (1 << nbits) - 1
-
-    def flush_to_byte() -> None:
-        nonlocal acc, nbits
-        if nbits:
-            emit((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    pred = 0
-    rst = 0
-    mcu = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                flush_to_byte()
-                scan += bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-                pred = 0
-            if blocks is not None:
-                v = blocks[by][bx] % 256 - 128
-            else:
-                v = (a if (bx + by) % 2 == 0 else bval) - 128
-            diff = v - pred
-            pred = v
-            s = abs(diff).bit_length()
-            code, ln = dc_codes[s]
-            emit(code, ln)
-            if s:
-                emit(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            eob, eln = ac_codes[0x00]
-            emit(eob, eln)
-            mcu += 1
-    flush_to_byte()
-
-    qtable = bytes([_JPEG_QDC] + [_JPEG_QAC] * 63)  # zigzag order
-    segs = [
-        b"\xff\xd8",  # SOI
-        b"\xff\xdb" + struct.pack(">HB", 67, 0x00) + qtable,  # DQT
-        b"\xff\xc0" + struct.pack(  # SOF0: 8-bit, 1 component, no subsampling
-            ">HBHHBBBB", 11, 8, height, width, 1, 1, 0x11, 0
-        ),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS)
-        + bytes(_JPEG_DC_VALS),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS)
-        + bytes(_JPEG_AC_VALS),
-    ]
-    if restart_interval:
-        segs.append(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-    segs += [
-        b"\xff\xda"
-        + struct.pack(">HBBBBBB", 8, 1, 1, 0x00, 0, 63, 0),  # SOS
-        bytes(scan),
-        b"\xff\xd9",  # EOI
-    ]
-    return b"".join(segs)
-
-
-def make_jpeg_color(
-    width: int, height: int, fill: int = 0, restart_interval: int = 0
-) -> bytes:
-    """A REAL baseline COLOR JPEG (SOF0, three components, 4:4:4 — no
-    chroma subsampling), pure stdlib: interleaved Y/Cb/Cr MCUs with
-    per-component DC predictors, shared Annex K tables, DRI/RSTn when
-    requested. Luma is the same block-checkerboard as make_jpeg
-    (``fill % 256`` / ``(fill*7+13) % 256``); chroma is constant per
-    image (``(fill*31+7) % 256`` / ``(fill*17+3) % 256``). Constant
-    blocks under the DC-quant-8 trick keep all three sample planes
-    exactly invertible, so the decoded RGB pixel sum is closed-form
-    through the pinned floor(x+0.5) YCbCr->RGB conversion."""
-    import struct
-
-    if width % 8 or height % 8:
-        raise ValueError("make_jpeg_color emits whole 8x8 blocks only")
-    ya = fill % 256
-    yb = (fill * 7 + 13) % 256
-    cb = (fill * 31 + 7) % 256
-    cr = (fill * 17 + 3) % 256
-    bw, bh = width // 8, height // 8
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    scan = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, n: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << n) | code
-        nbits += n
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0)  # T.81 byte stuffing
-            nbits -= 8
-            acc &= (1 << nbits) - 1
-
-    def flush_to_byte() -> None:
-        if nbits:
-            emit((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    def emit_dc_eob(diff: int) -> None:
-        s = abs(diff).bit_length()
-        code, ln = dc_codes[s]
-        emit(code, ln)
-        if s:
-            emit(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        eob, eln = ac_codes[0x00]
-        emit(eob, eln)
-
+    h_samp, v_samp = sampling or (1, 1)
+    if width % (8 * h_samp) or height % (8 * v_samp):
+        raise ValueError(
+            f"make_jpeg emits whole {8 * h_samp}x{8 * v_samp} MCUs only"
+        )
+    if blocks is None:
+        blocks = _jpeg_checkerboard(width, height, fill)
+    chroma = () if sampling is None else (
+        (fill * 31 + 7) % 256 - 128, (fill * 17 + 3) % 256 - 128,
+    )
+    dc_eob = _JPEG_DC_EOB
+    scan, emit, pad = _jpeg_scan_writer()
     preds = [0, 0, 0]
     rst = 0
     mcu = 0
-    for by in range(bh):
-        for bx in range(bw):
+    for my in range(height // (8 * v_samp)):
+        rows = blocks[my * v_samp : (my + 1) * v_samp]
+        for mx in range(width // (8 * h_samp)):
             if restart_interval and mcu and mcu % restart_interval == 0:
-                flush_to_byte()
-                scan += bytes([0xFF, 0xD0 + rst % 8])
+                pad()
+                scan += bytes((0xFF, 0xD0 + rst % 8))
                 rst += 1
                 preds = [0, 0, 0]
-            y = (ya if (bx + by) % 2 == 0 else yb) - 128
-            for ci, v in enumerate((y, cb - 128, cr - 128)):
-                emit_dc_eob(v - preds[ci])
+            pred = preds[0]
+            for row in rows:
+                for v in row[mx * h_samp : (mx + 1) * h_samp]:
+                    v = v % 256 - 128
+                    code, n = dc_eob[v - pred]
+                    emit(code, n)
+                    pred = v
+            preds[0] = pred
+            for ci, v in enumerate(chroma, 1):
+                code, n = dc_eob[v - preds[ci]]
+                emit(code, n)
                 preds[ci] = v
             mcu += 1
-    flush_to_byte()
-
-    qtable = bytes([_JPEG_QDC] + [_JPEG_QAC] * 63)  # zigzag order
-    segs = [
-        b"\xff\xd8",  # SOI
-        b"\xff\xdb" + struct.pack(">HB", 67, 0x00) + qtable,  # DQT
-        b"\xff\xc0"  # SOF0: 8-bit, 3 components, 1x1 sampling each
-        + struct.pack(">HBHH B", 17, 8, height, width, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS)
-        + bytes(_JPEG_DC_VALS),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS)
-        + bytes(_JPEG_AC_VALS),
-    ]
-    if restart_interval:
-        segs.append(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-    segs += [
-        b"\xff\xda"
-        + struct.pack(">HB", 12, 3)
-        + bytes([1, 0x00, 2, 0x00, 3, 0x00])
-        + bytes([0, 63, 0]),  # SOS: 3 components, shared tables
+    pad()
+    comps = (0x11,) if sampling is None else (
+        (h_samp << 4) | v_samp, 0x11, 0x11,
+    )
+    return b"".join([
+        _JPEG_SOI,
+        _JPEG_DQT,
+        _jpeg_sof(0xC0, width, height, comps),
+        _JPEG_DHT_DC,
+        _JPEG_DHT_AC,
+        _jpeg_segment(0xDD, restart_interval.to_bytes(2, "big"))
+        if restart_interval else b"",
+        _jpeg_sos((0x00,) * len(comps), 0, 63),
         bytes(scan),
-        b"\xff\xd9",  # EOI
-    ]
-    return b"".join(segs)
-
-
-def make_jpeg_420(
-    width: int, height: int, fill: int = 0, restart_interval: int = 0
-) -> bytes:
-    """A REAL baseline COLOR JPEG with 4:2:0 CHROMA SUBSAMPLING (SOF0,
-    luma 2x2 / chroma 1x1 sampling — the factors every camera and web
-    encoder ships), pure stdlib: each 16x16 MCU interleaves four Y
-    blocks (row-major) then one Cb and one Cr block covering the same
-    area at half resolution, per-component DC predictors, shared Annex
-    K tables, DRI/RSTn per MCU when requested. Luma is the same
-    8x8-block checkerboard as make_jpeg; chroma is constant per image
-    (same derivations as make_jpeg_color), so replication upsampling
-    is exact and the decoded RGB pixel sum keeps the 4:4:4 closed
-    form."""
-    import struct
-
-    if width % 16 or height % 16:
-        raise ValueError("make_jpeg_420 emits whole 16x16 MCUs only")
-    ya = fill % 256
-    yb = (fill * 7 + 13) % 256
-    cb = (fill * 31 + 7) % 256
-    cr = (fill * 17 + 3) % 256
-    mw, mh = width // 16, height // 16
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    scan = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, n: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << n) | code
-        nbits += n
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0)  # T.81 byte stuffing
-            nbits -= 8
-            acc &= (1 << nbits) - 1
-
-    def flush_to_byte() -> None:
-        if nbits:
-            emit((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    def emit_dc_eob(diff: int) -> None:
-        s = abs(diff).bit_length()
-        code, ln = dc_codes[s]
-        emit(code, ln)
-        if s:
-            emit(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        eob, eln = ac_codes[0x00]
-        emit(eob, eln)
-
-    preds = [0, 0, 0]
-    rst = 0
-    mcu = 0
-    for my in range(mh):
-        for mx in range(mw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                flush_to_byte()
-                scan += bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-                preds = [0, 0, 0]
-            # four luma blocks, row-major within the MCU, checkerboard
-            # on the GLOBAL 8x8 block grid (2*my+byy, 2*mx+bxx)
-            for byy in range(2):
-                for bxx in range(2):
-                    by, bx = 2 * my + byy, 2 * mx + bxx
-                    y = (ya if (bx + by) % 2 == 0 else yb) - 128
-                    emit_dc_eob(y - preds[0])
-                    preds[0] = y
-            for ci, v in ((1, cb - 128), (2, cr - 128)):
-                emit_dc_eob(v - preds[ci])
-                preds[ci] = v
-            mcu += 1
-    flush_to_byte()
-
-    qtable = bytes([_JPEG_QDC] + [_JPEG_QAC] * 63)  # zigzag order
-    segs = [
-        b"\xff\xd8",  # SOI
-        b"\xff\xdb" + struct.pack(">HB", 67, 0x00) + qtable,  # DQT
-        b"\xff\xc0"  # SOF0: 8-bit, 3 components, 2x2 luma sampling
-        + struct.pack(">HBHHB", 17, 8, height, width, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS)
-        + bytes(_JPEG_DC_VALS),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS)
-        + bytes(_JPEG_AC_VALS),
-    ]
-    if restart_interval:
-        segs.append(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-    segs += [
-        b"\xff\xda"
-        + struct.pack(">HB", 12, 3)
-        + bytes([1, 0x00, 2, 0x00, 3, 0x00])
-        + bytes([0, 63, 0]),  # SOS: 3 components, shared tables
-        bytes(scan),
-        b"\xff\xd9",  # EOI
-    ]
-    return b"".join(segs)
+        _JPEG_EOI,
+    ])
 
 
 def make_jpeg_progressive(width: int, height: int, fill: int = 0) -> bytes:
@@ -1165,126 +1048,56 @@ def make_jpeg_progressive(width: int, height: int, fill: int = 0) -> bytes:
     have). Same block-checkerboard raster and quantization convention
     as make_jpeg, so the decoded pixel sum keeps the same closed
     form."""
-    import struct
-
     if width % 8 or height % 8:
         raise ValueError("make_jpeg_progressive emits whole 8x8 blocks")
-    a = fill % 256
-    bval = (fill * 7 + 13) % 256
     bw, bh = width // 8, height // 8
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    values = [
+        v - 128 for row in _jpeg_checkerboard(width, height, fill) for v in row
+    ]
 
     def coded_scan(emitter) -> bytes:
-        scan = bytearray()
-        state = {"acc": 0, "n": 0}
-
-        def emit(code: int, n: int) -> None:
-            state["acc"] = (state["acc"] << n) | code
-            state["n"] += n
-            while state["n"] >= 8:
-                byte = (state["acc"] >> (state["n"] - 8)) & 0xFF
-                scan.append(byte)
-                if byte == 0xFF:
-                    scan.append(0)  # T.81 byte stuffing
-                state["n"] -= 8
-                state["acc"] &= (1 << state["n"]) - 1
-
+        scan, emit, pad = _jpeg_scan_writer()
         emitter(emit)
-        if state["n"]:
-            emit((1 << (8 - state["n"])) - 1, 8 - state["n"])  # 1-pad
+        pad()
         return bytes(scan)
-
-    def block_values():
-        for by in range(bh):
-            for bx in range(bw):
-                yield (a if (bx + by) % 2 == 0 else bval) - 128
 
     def dc_first(emit):  # Ss=0 Se=0 Ah=0 Al=1: diffs of coeff>>1
         pred = 0
-        for v in block_values():
+        for v in values:
             hi = v >> 1  # arithmetic shift = T.81 DC point transform
-            diff = hi - pred
+            code, n = _jpeg_dc_code(hi - pred)
+            emit(code, n)
             pred = hi
-            s = abs(diff).bit_length()
-            code, ln = dc_codes[s]
-            emit(code, ln)
-            if s:
-                emit(diff if diff >= 0 else diff + (1 << s) - 1, s)
 
     def dc_refine(emit):  # Ah=1 Al=0: one raw bit (coeff bit 0)
-        for v in block_values():
+        for v in values:
             emit(v & 1, 1)
-
-    # The Annex K AC table has no EOBn (0x10..0xE0) codes — those are
-    # progressive-only, so progressive encoders ship custom tables.
-    # Canonical 4-bit table over EOB0..EOB7 + ZRL (codes 0000..1000).
-    prog_ac_vals = [0x00, 0x10, 0x20, 0x30, 0x40, 0x50, 0x60, 0x70, 0xF0]
-    prog_ac_bits = [0, 0, 0, 9] + [0] * 12
-    prog_ac_codes = _jpeg_huff_codes(prog_ac_bits, prog_ac_vals)
 
     def ac_first(emit):  # Ss=1 Se=63 Ah=0 Al=0: ONE EOBRUN, all blocks
         n = bw * bh
         r = n.bit_length() - 1
-        code, ln = prog_ac_codes[r << 4]
+        code, ln = _JPEG_EOBRUN_CODES[r << 4]
         emit(code, ln)
         if r:
             emit(n - (1 << r), r)
 
-    def sos(comp_tables: int, ss: int, se: int, ah: int, al: int) -> bytes:
-        return b"\xff\xda" + struct.pack(
-            ">HB", 8, 1
-        ) + bytes([1, comp_tables, ss, se, (ah << 4) | al])
-
-    qtable = bytes([_JPEG_QDC] + [_JPEG_QAC] * 63)
-    segs = [
-        b"\xff\xd8",
-        b"\xff\xdb" + struct.pack(">HB", 67, 0x00) + qtable,
-        b"\xff\xc2"  # SOF2: progressive DCT
-        + struct.pack(">HBHHB", 11, 8, height, width, 1)
-        + bytes([1, 0x11, 0]),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS)
-        + bytes(_JPEG_DC_VALS),
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS)
-        + bytes(_JPEG_AC_VALS),
-        sos(0x00, 0, 0, 0, 1),
+    return b"".join([
+        _JPEG_SOI,
+        _JPEG_DQT,
+        _jpeg_sof(0xC2, width, height, (0x11,)),  # SOF2: progressive DCT
+        _JPEG_DHT_DC,
+        _JPEG_DHT_AC,
+        _jpeg_sos((0x00,), 0, 0, 0x01),
         coded_scan(dc_first),
-        sos(0x00, 0, 0, 1, 0),  # DC refinement: no entropy tables used
+        _jpeg_sos((0x00,), 0, 0, 0x10),  # DC refinement: no tables used
         coded_scan(dc_refine),
         # custom EOBn AC table lands MID-FILE, before the scan that
         # binds it (table class 1, id 1) — per-scan table rebinding
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(prog_ac_vals), 0x11)
-        + bytes(prog_ac_bits)
-        + bytes(prog_ac_vals),
-        sos(0x01, 1, 63, 0, 0),
+        _jpeg_dht(0x11, _JPEG_EOBRUN_BITS, _JPEG_EOBRUN_VALS),
+        _jpeg_sos((0x01,), 1, 63),
         coded_scan(ac_first),
-        b"\xff\xd9",
-    ]
-    return b"".join(segs)
-
-
-def _jpeg_lossless_predict(
-    px: "list[list[int]]", x: int, y: int, sel: int, p: int, pt: int
-) -> int:
-    """T.81 Annex H lossless predictor: a=left, b=above, c=above-left;
-    the first sample seeds at half range, the rest of row 0 predicts
-    from a, column 0 predicts from b (H.1.2.1 boundary rules)."""
-    if y == 0 and x == 0:
-        return 1 << (p - 1 - pt)
-    if y == 0:
-        return px[0][x - 1]
-    if x == 0:
-        return px[y - 1][0]
-    a, b, c = px[y][x - 1], px[y - 1][x], px[y - 1][x - 1]
-    return [
-        None, a, b, c, a + b - c, a + ((b - c) >> 1), b + ((a - c) >> 1),
-        (a + b) >> 1,
-    ][sel]
+        _JPEG_EOI,
+    ])
 
 
 def make_jpeg_lossless(
@@ -1296,10 +1109,8 @@ def make_jpeg_lossless(
     sum has a closed form), differences against the Annex H predictor
     are Huffman-coded with the Annex K DC table, modulo-65536
     difference arithmetic per H.1.2.1."""
-    import struct
-
     f = fill % 64
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    dc_codes = _JPEG_DC_CODES
     scan = bytearray()
     append = scan.append
     acc = 0
@@ -1363,24 +1174,15 @@ def make_jpeg_lossless(
         append(byte)
         if byte == 0xFF:
             append(0)
-    return b"".join(
-        [
-            b"\xff\xd8",
-            b"\xff\xc3"  # SOF3: lossless sequential
-            + struct.pack(">HBHHB", 11, 8, height, width, 1)
-            + bytes([1, 0x11, 0]),
-            b"\xff\xc4"
-            + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-            + bytes(_JPEG_DC_BITS)
-            + bytes(_JPEG_DC_VALS),
-            # SOS: Ss = predictor selection, Se = 0, Al = point transf.
-            b"\xff\xda"
-            + struct.pack(">HB", 8, 1)
-            + bytes([1, 0x00, sel, 0, 0]),
-            bytes(scan),
-            b"\xff\xd9",
-        ]
-    )
+    return b"".join([
+        _JPEG_SOI,
+        _jpeg_sof(0xC3, width, height, (0x11,)),  # SOF3: lossless
+        _JPEG_DHT_DC,
+        # SOS: Ss = predictor selection, Se = 0, Al = point transform
+        _jpeg_sos((0x00,), sel, 0),
+        bytes(scan),
+        _JPEG_EOI,
+    ])
 
 
 def _decode_jpeg_lossless(b: bytes) -> tuple[int, int, int, int]:
@@ -2886,67 +2688,6 @@ def decode_wav(b: bytes) -> tuple[int, int, int, int, int]:
     return rate, channels, n_frames, total, peak
 
 
-def encode_sample_audio(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic audio synthesis (mapInPandas body): each doc gets
-    a REAL 16-bit PCM WAV whose frame count, channel count, and
-    constant sample value derive from doc_id, so the decode stage
-    parses genuine RIFF structure and the oracle recomputes every
-    feature from doc_id alone."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_wav(
-                n_samples=1 + d % 500,
-                sample_rate=8000,
-                channels=1 + d % 2,
-                fill=d,
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_flac(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic FLAC synthesis (mapInPandas body): each doc gets
-    a real fLaC container (STREAMINFO + one CRC-checked
-    constant-subframe frame) whose sample count and constant level
-    derive from doc_id."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_flac(
-                n_samples=16 + d % 1000,
-                value=(d % 2001) - 1000,
-                fixed_ramp=(d % 500, 8 + d % 200),
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_adpcm(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic IMA-ADPCM synthesis (mapInPandas body): each doc
-    gets a real compressed WAV (fmt 0x0011 + fact chunk + headed
-    block) whose sample count and base level derive from doc_id; the
-    alternating 1/9 nibble stream keeps the decode closed-form (see
-    make_adpcm_wav)."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_adpcm_wav(
-                n_samples=1 + d % 900, pred0=100 + d % 800
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
 def decode_real_audio(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
@@ -2990,123 +2731,6 @@ def decode_real_audio(
                 "peak_abs": pd.Series(rows["peak_abs"], dtype="Int32"),
             }
         )
-
-
-def encode_sample_gif(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic GIF synthesis (mapInPandas body): each doc gets a
-    REAL GIF89a whose dimensions and checkerboard fill derive from
-    doc_id, so the decode stage inflates a genuine LZW stream and the
-    oracle recomputes the pixel sum from doc_id alone."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [make_gif(1 + d % 40, 1 + d % 30, d) for d in ids]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_jpeg(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic JPEG synthesis (mapInPandas body): each doc gets a
-    REAL baseline grayscale JPEG whose block-grid dimensions and
-    checkerboard fills derive from doc_id; a 3-block restart interval
-    puts genuine RSTn markers and predictor resets in every multi-block
-    scan, so the decode stage exercises the restart machinery too."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_jpeg(
-                8 * (1 + d % 6), 8 * (1 + d % 4), d, restart_interval=3
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_jpeg_color(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic COLOR JPEG synthesis (mapInPandas body): each doc
-    gets a real 4:4:4 baseline JPEG whose luma checkerboard and chroma
-    constants derive from doc_id; a 2-MCU restart interval exercises
-    the per-component predictor resets."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_jpeg_color(
-                8 * (1 + d % 5), 8 * (1 + d % 3), d, restart_interval=2
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_jpeg_420(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic 4:2:0 JPEG synthesis (mapInPandas body): each doc
-    gets a real chroma-subsampled baseline JPEG whose luma checkerboard
-    and chroma constants derive from doc_id; a 2-MCU restart interval
-    exercises the per-component predictor resets across the
-    multi-block interleave."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_jpeg_420(
-                16 * (1 + d % 3), 16 * (1 + d % 2), d, restart_interval=2
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_jpeg_progressive(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic progressive-JPEG synthesis (mapInPandas body):
-    same geometry and checkerboard as encode_sample_jpeg, but the
-    raster arrives in three SOF2 scans (DC at Al=1, DC refinement,
-    AC band as a single EOBRUN under a custom mid-file EOBn table)."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_jpeg_progressive(8 * (1 + d % 6), 8 * (1 + d % 4), d)
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_jpeg_lossless(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic lossless-JPEG synthesis (mapInPandas body): each
-    doc gets a real SOF3 file over the closed-form pixel ramp, cycling
-    through ALL SEVEN Annex H predictor selections by doc_id."""
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            make_jpeg_lossless(
-                8 * (1 + d % 5), 8 * (1 + d % 3), d, sel=1 + d % 7
-            )
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def encode_sample_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic media synthesis (mapInPandas body): each doc gets a
-    REAL image file — BMP / PPM / PNG / PGM cycling on doc_id % 4 —
-    with dimensions derived from doc_id, so the decode stage downstream
-    parses genuine headers and the oracle can recompute every feature
-    from doc_id alone."""
-    makers = [make_bmp, make_ppm, make_png, make_pgm]
-    for pdf in batches:
-        ids = pdf["doc_id"]
-        payloads = [
-            makers[d % 4](1 + d % 64, 1 + d % 48, d) for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
 
 RESIZE_SCHEMA = "doc_id bigint, width int, height int, payload binary"
@@ -3218,9 +2842,95 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload.mapInPandas(decode_features, FEATURE_SCHEMA)
 
 
-@query(
-    "multimodal_decode_real",
-    oracle="""
+_PIXEL_COLUMNS = (
+    "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
+    "mean_pixel",
+)
+
+
+class _CodecQuery(NamedTuple):
+    """One synthesize->decode query: ``payload(doc_id)`` writes a real
+    file, ``decode`` (a mapInPandas body yielding ``schema``) reads the
+    bytes back, ``columns`` (None = all) projects the result, and
+    ``oracle`` recomputes it in closed form from doc_id. ``doc`` is the
+    query's docstring (the OPERATORS.md summary is its first line)."""
+
+    name: str
+    doc: str
+    payload: Callable[[int], bytes]
+    oracle: str
+    decode: Callable = decode_real_pixels
+    schema: str = REAL_PIXEL_SCHEMA
+    columns: tuple[str, ...] | None = _PIXEL_COLUMNS
+
+
+_MEDIA_MAKERS = (make_bmp, make_ppm, make_png, make_pgm)
+
+# Decoded RGB sum of one constant-Y block over the image's constant
+# chroma, through the IDENTICAL conversion the decoder pins (same
+# literals, same operation order, floor(x + 0.5), clip to 0..255).
+_RGB_SUM_SQL = """LEAST(255, GREATEST(0,
+               FLOOR({y} + 1.402 * (cr - 128.0) + 0.5)))
+         + LEAST(255, GREATEST(0,
+               FLOOR({y} - 0.344136 * (cb - 128.0)
+                        - 0.714136 * (cr - 128.0) + 0.5)))
+         + LEAST(255, GREATEST(0,
+               FLOOR({y} + 1.772 * (cb - 128.0) + 0.5)))"""
+
+
+def _checkerboard_jpeg_oracle(
+    bw: str, bh: str, channels: int = 1
+) -> str:
+    """Oracle of make_jpeg's checkerboard over a ``bw`` x ``bh`` 8x8
+    block grid (SQL over doc_id): n_even blocks decode to the even
+    value, the rest to the odd one — the luma levels themselves for
+    grayscale, their RGB sums for 3-channel color."""
+    block_sum = "{y}" if channels == 1 else _RGB_SUM_SQL
+    return f"""
+SELECT doc_id,
+       CAST(8 * bw AS INTEGER) AS width,
+       CAST(8 * bh AS INTEGER) AS height,
+       'jpeg' AS format,
+       CAST(64 * bw * bh AS BIGINT) AS n_pixels,
+       CAST(64 * (n_even * s_even + (bw * bh - n_even) * s_odd)
+            AS BIGINT) AS pixel_sum,
+       CAST(64 * (n_even * s_even + (bw * bh - n_even) * s_odd)
+            AS DOUBLE) / ({channels} * 64 * bw * bh) AS mean_pixel
+FROM (
+    SELECT doc_id, bw, bh,
+           (bw * bh + (bw % 2) * (bh % 2)) // 2 AS n_even,
+           {block_sum.format(y="ya")} AS s_even,
+           {block_sum.format(y="yb")} AS s_odd
+    FROM (SELECT doc_id,
+                 {bw} AS bw,
+                 {bh} AS bh,
+                 doc_id % 256 AS ya,
+                 (doc_id * 7 + 13) % 256 AS yb,
+                 (doc_id * 31 + 7) % 256 AS cb,
+                 (doc_id * 17 + 3) % 256 AS cr
+          FROM documents))
+"""
+
+
+_CODEC_QUERIES = (
+    _CodecQuery(
+        name="multimodal_decode_real",
+        doc="""REAL-codec decode end-to-end, down to the PIXELS: synthesize a
+    genuine image file per doc (BMP / PPM / PNG / PGM cycling on
+    doc_id % 4, dimensions and fill byte derived from doc_id), then
+    decode the actual bytes back with the stdlib codec —
+    BMP padding-stripped raster, netpbm raster, PNG via zlib inflate +
+    full five-filter scanline reversal (decode_pixels). The oracle
+    recomputes byte size (BMP 4-byte row padding, netpbm ASCII header
+    lengths, PNG's closed-form stored-deflate size 68 + h*(3w+1)),
+    dimensions, AND the exact pixel sum / mean (every sample byte is
+    the doc's fill value doc_id % 256, so pixel_sum =
+    fill * channels * w * h in closed form) — a wrong filter reversal,
+    stride, or padding slip changes pixel_sum and fails the hash. Both
+    stages are chained row-local mapInPandas — one scan, no shuffle,
+    payloads never leave their partition.""",
+        payload=lambda d: _MEDIA_MAKERS[d % 4](1 + d % 64, 1 + d % 48, d),
+        oracle="""
 SELECT doc_id,
        CAST(CASE doc_id % 4
             WHEN 0 THEN 54 + ((3 * w + 3) // 4) * 4 * h
@@ -3240,35 +2950,22 @@ FROM (SELECT doc_id, 1 + doc_id % 64 AS w, 1 + doc_id % 48 AS h,
              CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 3 END AS ch
       FROM documents)
 """,
-)
-def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-codec decode end-to-end, down to the PIXELS: synthesize a
-    genuine image file per doc (BMP / PPM / PNG / PGM cycling on
-    doc_id % 4, dimensions and fill byte derived from doc_id), then
-    decode the actual bytes back with the stdlib codec —
-    BMP padding-stripped raster, netpbm raster, PNG via zlib inflate +
-    full five-filter scanline reversal (decode_pixels). The oracle
-    recomputes byte size (BMP 4-byte row padding, netpbm ASCII header
-    lengths, PNG's closed-form stored-deflate size 68 + h*(3w+1)),
-    dimensions, AND the exact pixel sum / mean (every sample byte is
-    the doc's fill value doc_id % 256, so pixel_sum =
-    fill * channels * w * h in closed form) — a wrong filter reversal,
-    stride, or padding slip changes pixel_sum and fails the hash. Both
-    stages are chained row-local mapInPandas — one scan, no shuffle,
-    payloads never leave their partition. GIF and JPEG pixels decode
-    for real too (multimodal_decode_gif / _jpeg / _color); only
-    subsampled-chroma/progressive JPEG and compressed audio stay
-    behind the NotImplementedError gates."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_media, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA)
-
-
-@query(
-    "multimodal_decode_gif",
-    oracle="""
+        columns=None,
+    ),
+    _CodecQuery(
+        name="multimodal_decode_gif",
+        doc="""ENTROPY-CODED decode end-to-end: synthesize a genuine GIF89a per
+    doc (checkerboard raster so the LZW table builds real multi-symbol
+    entries, dimensions and both fill values derived from doc_id), then
+    decode the actual bytes back — block walk, sub-block reassembly,
+    full variable-width LZW inflate, palette lookup (_decode_gif_pixels
+    via decode_pixels). The oracle recomputes the exact pixel sum in
+    closed form (the checkerboard puts ceil(w*h/2) cells on the even
+    color), so a code-width off-by-one, a sub-block seam slip, or a
+    KwKwK mishandling changes pixel_sum and fails the hash. Both stages
+    chained row-local mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_gif(1 + d % 40, 1 + d % 30, d),
+        oracle="""
 SELECT doc_id,
        CAST(w AS INTEGER) AS width,
        CAST(h AS INTEGER) AS height,
@@ -3286,53 +2983,10 @@ FROM (SELECT doc_id, w, h, a, b, (w * h + 1) // 2 AS n_even
                    (doc_id * 7 + 13) % 256 AS b
             FROM documents))
 """,
-)
-def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENTROPY-CODED decode end-to-end: synthesize a genuine GIF89a per
-    doc (checkerboard raster so the LZW table builds real multi-symbol
-    entries, dimensions and both fill values derived from doc_id), then
-    decode the actual bytes back — block walk, sub-block reassembly,
-    full variable-width LZW inflate, palette lookup (_decode_gif_pixels
-    via decode_pixels). The oracle recomputes the exact pixel sum in
-    closed form (the checkerboard puts ceil(w*h/2) cells on the even
-    color), so a code-width off-by-one, a sub-block seam slip, or a
-    KwKwK mishandling changes pixel_sum and fails the hash. Both stages
-    chained row-local mapInPandas — one scan, no shuffle. (JPEG decode
-    is real too — multimodal_decode_jpeg.)"""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_gif, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_decode_jpeg",
-    oracle="""
-SELECT doc_id,
-       CAST(8 * bw AS INTEGER) AS width,
-       CAST(8 * bh AS INTEGER) AS height,
-       'jpeg' AS format,
-       CAST(64 * bw * bh AS BIGINT) AS n_pixels,
-       CAST(64 * (n_even * a + (bw * bh - n_even) * b) AS BIGINT)
-           AS pixel_sum,
-       CAST(64 * (n_even * a + (bw * bh - n_even) * b) AS DOUBLE)
-           / (64 * bw * bh) AS mean_pixel
-FROM (SELECT doc_id, bw, bh, a, b,
-             (bw * bh + (bw % 2) * (bh % 2)) // 2 AS n_even
-      FROM (SELECT doc_id,
-                   1 + doc_id % 6 AS bw,
-                   1 + doc_id % 4 AS bh,
-                   doc_id % 256 AS a,
-                   (doc_id * 7 + 13) % 256 AS b
-            FROM documents))
-""",
-)
-def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DCT-CODEC decode end-to-end: synthesize a genuine baseline
+    ),
+    _CodecQuery(
+        name="multimodal_decode_jpeg",
+        doc="""DCT-CODEC decode end-to-end: synthesize a genuine baseline
     grayscale JPEG per doc (block-checkerboard raster with a 3-MCU
     restart interval, dimensions and fills derived from doc_id), then
     decode the actual bytes back — marker walk, restart-segmented
@@ -3345,49 +2999,15 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     an IDCT normalization error changes pixel_sum and fails the hash.
     The checkerboard of block-level DC deltas exercises multiple
     Huffman size categories, byte-seam packing, and 0xFF stuffing.
-    Both stages chained row-local mapInPandas — one scan, no shuffle.
-    4:4:4 color (multimodal_decode_color), subsampled chroma
-    (multimodal_decode_subsampled), and progressive
-    (multimodal_decode_progressive), and lossless SOF3
-    (multimodal_decode_lossless) decode too; only differential/
-    hierarchical/arithmetic-coded JPEG remains behind
-    NotImplementedError (the PIL/ffmpeg integration point)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_jpeg, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_decode_progressive",
-    oracle="""
-SELECT doc_id,
-       CAST(8 * bw AS INTEGER) AS width,
-       CAST(8 * bh AS INTEGER) AS height,
-       'jpeg' AS format,
-       CAST(64 * bw * bh AS BIGINT) AS n_pixels,
-       CAST(64 * (n_even * a + (bw * bh - n_even) * b) AS BIGINT)
-           AS pixel_sum,
-       CAST(64 * (n_even * a + (bw * bh - n_even) * b) AS DOUBLE)
-           / (64 * bw * bh) AS mean_pixel
-FROM (SELECT doc_id, bw, bh, a, b,
-             (bw * bh + (bw % 2) * (bh % 2)) // 2 AS n_even
-      FROM (SELECT doc_id,
-                   1 + doc_id % 6 AS bw,
-                   1 + doc_id % 4 AS bh,
-                   doc_id % 256 AS a,
-                   (doc_id * 7 + 13) % 256 AS b
-            FROM documents))
-""",
-)
-def multimodal_decode_progressive(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PROGRESSIVE (SOF2) JPEG decode end-to-end: synthesize a genuine
+    Both stages chained row-local mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_jpeg(
+            8 * (1 + d % 6), 8 * (1 + d % 4), d, restart_interval=3
+        ),
+        oracle=_checkerboard_jpeg_oracle("1 + doc_id % 6", "1 + doc_id % 4"),
+    ),
+    _CodecQuery(
+        name="multimodal_decode_progressive",
+        doc="""PROGRESSIVE (SOF2) JPEG decode end-to-end: synthesize a genuine
     multi-scan progressive JPEG per doc — the raster arrives as a DC
     scan at successive-approximation Al=1, a DC refinement scan of raw
     bits, and a spectral-selection AC scan whose all-zero band packs
@@ -3402,23 +3022,32 @@ def multimodal_decode_progressive(
     successive-approximation refinement path (never emitted by this
     encoder) is pinned by hand-assembled multi-scan streams in tests,
     including an EOB run spanning blocks with in-run correction bits.
-    Both stages chained row-local mapInPandas — one scan, no shuffle.
-    Lossless SOF3 decodes too (multimodal_decode_lossless); only
-    differential/hierarchical/arithmetic-coded JPEG remains behind
-    NotImplementedError (the PIL/ffmpeg integration point)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_jpeg_progressive, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_decode_lossless",
-    oracle="""
+    Both stages chained row-local mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_jpeg_progressive(
+            8 * (1 + d % 6), 8 * (1 + d % 4), d
+        ),
+        oracle=_checkerboard_jpeg_oracle("1 + doc_id % 6", "1 + doc_id % 4"),
+    ),
+    _CodecQuery(
+        name="multimodal_decode_lossless",
+        doc="""LOSSLESS (SOF3) JPEG decode end-to-end — the predictive codec
+    DNG/raw-camera files carry: synthesize a genuine lossless JPEG per
+    doc over a pixel-level ramp, CYCLING ALL SEVEN Annex H predictor
+    selections by doc_id, then decode the actual bytes back —
+    Huffman-coded differences, modulo-65536 arithmetic, half-range
+    seed and the row-0/column-0 boundary predictor rules. Lossless
+    means the oracle's closed-form sum ((64*fill + 2240) per 8x8
+    block: the ramp mass 3*sum(x%8) + 7*sum(y%8) = (3+7)*28*8)
+    holds for EVERY predictor — a boundary-rule slip, a predictor
+    table transposition, or a modulo fold error changes pixel_sum for
+    some doc_id residue class and fails the hash. Annex-H conformance
+    (not just encode/decode inverse consistency) is pinned by a
+    hand-computed-diff bitstream test. Both stages chained row-local
+    mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_jpeg_lossless(
+            8 * (1 + d % 5), 8 * (1 + d % 3), d, sel=1 + d % 7
+        ),
+        oracle="""
 SELECT doc_id,
        CAST(8 * bw AS INTEGER) AS width,
        CAST(8 * bh AS INTEGER) AS height,
@@ -3433,77 +3062,10 @@ FROM (SELECT doc_id,
              doc_id % 64 AS f
       FROM documents)
 """,
-)
-def multimodal_decode_lossless(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LOSSLESS (SOF3) JPEG decode end-to-end — the predictive codec
-    DNG/raw-camera files carry: synthesize a genuine lossless JPEG per
-    doc over a pixel-level ramp, CYCLING ALL SEVEN Annex H predictor
-    selections by doc_id, then decode the actual bytes back —
-    Huffman-coded differences, modulo-65536 arithmetic, half-range
-    seed and the row-0/column-0 boundary predictor rules. Lossless
-    means the oracle's closed-form sum ((64*fill + 2240) per 8x8
-    block: the ramp mass 3*sum(x%8) + 7*sum(y%8) = (3+7)*28*8)
-    holds for EVERY predictor — a boundary-rule slip, a predictor
-    table transposition, or a modulo fold error changes pixel_sum for
-    some doc_id residue class and fails the hash. Annex-H conformance
-    (not just encode/decode inverse consistency) is pinned by a
-    hand-computed-diff bitstream test. Both stages chained row-local
-    mapInPandas — one scan, no shuffle. Only extended-sequential,
-    hierarchical, and arithmetic-coded JPEG remain behind
-    NotImplementedError."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_jpeg_lossless, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_decode_color",
-    oracle="""
-SELECT doc_id,
-       CAST(8 * bw AS INTEGER) AS width,
-       CAST(8 * bh AS INTEGER) AS height,
-       'jpeg' AS format,
-       CAST(64 * bw * bh AS BIGINT) AS n_pixels,
-       CAST(64 * (n_even * s_even + (bw * bh - n_even) * s_odd)
-            AS BIGINT) AS pixel_sum,
-       CAST(64 * (n_even * s_even + (bw * bh - n_even) * s_odd)
-            AS DOUBLE) / (3 * 64 * bw * bh) AS mean_pixel
-FROM (
-    SELECT doc_id, bw, bh,
-           (bw * bh + (bw % 2) * (bh % 2)) // 2 AS n_even,
-           LEAST(255, GREATEST(0,
-               FLOOR(ya + 1.402 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(ya - 0.344136 * (cb - 128.0)
-                        - 0.714136 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(ya + 1.772 * (cb - 128.0) + 0.5))) AS s_even,
-           LEAST(255, GREATEST(0,
-               FLOOR(yb + 1.402 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(yb - 0.344136 * (cb - 128.0)
-                        - 0.714136 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(yb + 1.772 * (cb - 128.0) + 0.5))) AS s_odd
-    FROM (SELECT doc_id,
-                 1 + doc_id % 5 AS bw,
-                 1 + doc_id % 3 AS bh,
-                 doc_id % 256 AS ya,
-                 (doc_id * 7 + 13) % 256 AS yb,
-                 (doc_id * 31 + 7) % 256 AS cb,
-                 (doc_id * 17 + 3) % 256 AS cr
-          FROM documents))
-""",
-)
-def multimodal_decode_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLOR JPEG decode end-to-end: synthesize a genuine 4:4:4
+    ),
+    _CodecQuery(
+        name="multimodal_decode_color",
+        doc="""COLOR JPEG decode end-to-end: synthesize a genuine 4:4:4
     baseline JPEG per doc (luma checkerboard + constant chroma derived
     from doc_id, 2-MCU restart interval), then decode the actual bytes
     back — interleaved Y/Cb/Cr MCUs with per-component predictors,
@@ -3513,63 +3075,19 @@ def multimodal_decode_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression (same literals, same operation order, FLOOR + LEAST/
     GREATEST), so a predictor cross-wire, an MCU interleave slip, or a
     rounding-mode divergence changes pixel_sum and fails the hash.
-    mean_pixel divides by 3*w*h (three samples per pixel). Only
-    subsampled chroma and progressive JPEG remain behind
-    NotImplementedError. Both stages chained row-local mapInPandas —
-    one scan, no shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_jpeg_color, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_decode_subsampled",
-    oracle="""
-SELECT doc_id,
-       CAST(16 * mw AS INTEGER) AS width,
-       CAST(16 * mh AS INTEGER) AS height,
-       'jpeg' AS format,
-       CAST(256 * mw * mh AS BIGINT) AS n_pixels,
-       CAST(64 * (n_even * s_even + (4 * mw * mh - n_even) * s_odd)
-            AS BIGINT) AS pixel_sum,
-       CAST(64 * (n_even * s_even + (4 * mw * mh - n_even) * s_odd)
-            AS DOUBLE) / (3 * 256 * mw * mh) AS mean_pixel
-FROM (
-    SELECT doc_id, mw, mh,
-           -- luma block grid is 2mw x 2mh (both even): exactly half
-           -- the blocks sit on the even checkerboard color
-           2 * mw * mh AS n_even,
-           LEAST(255, GREATEST(0,
-               FLOOR(ya + 1.402 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(ya - 0.344136 * (cb - 128.0)
-                        - 0.714136 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(ya + 1.772 * (cb - 128.0) + 0.5))) AS s_even,
-           LEAST(255, GREATEST(0,
-               FLOOR(yb + 1.402 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(yb - 0.344136 * (cb - 128.0)
-                        - 0.714136 * (cr - 128.0) + 0.5)))
-         + LEAST(255, GREATEST(0,
-               FLOOR(yb + 1.772 * (cb - 128.0) + 0.5))) AS s_odd
-    FROM (SELECT doc_id,
-                 1 + doc_id % 3 AS mw,
-                 1 + doc_id % 2 AS mh,
-                 doc_id % 256 AS ya,
-                 (doc_id * 7 + 13) % 256 AS yb,
-                 (doc_id * 31 + 7) % 256 AS cb,
-                 (doc_id * 17 + 3) % 256 AS cr
-          FROM documents))
-""",
-)
-def multimodal_decode_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHROMA-SUBSAMPLED JPEG decode end-to-end: synthesize a genuine
+    mean_pixel divides by 3*w*h (three samples per pixel). Both stages
+    chained row-local mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_jpeg(
+            8 * (1 + d % 5), 8 * (1 + d % 3), d, restart_interval=2,
+            sampling=(1, 1),
+        ),
+        oracle=_checkerboard_jpeg_oracle(
+            "1 + doc_id % 5", "1 + doc_id % 3", channels=3
+        ),
+    ),
+    _CodecQuery(
+        name="multimodal_decode_subsampled",
+        doc="""CHROMA-SUBSAMPLED JPEG decode end-to-end: synthesize a genuine
     4:2:0 baseline JPEG per doc (2x2 luma sampling — four Y blocks
     then Cb then Cr per 16x16 MCU, the factors every camera ships;
     luma checkerboard + constant chroma from doc_id, 2-MCU restart
@@ -3581,23 +3099,33 @@ def multimodal_decode_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     4:4:4 closed form; an interleave slip, a predictor cross-wire
     between the four Y blocks, or an upsample misalignment changes
     pixel_sum and fails the hash. Both stages chained row-local
-    mapInPandas — one scan, no shuffle. Progressive JPEG decodes too
-    (multimodal_decode_progressive) and lossless SOF3
-    (multimodal_decode_lossless); only differential/hierarchical/
-    arithmetic-coded variants remain behind NotImplementedError."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_jpeg_420, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_pixels, REAL_PIXEL_SCHEMA).select(
-        "doc_id", "width", "height", "format", "n_pixels", "pixel_sum",
-        "mean_pixel",
-    )
-
-
-@query(
-    "multimodal_audio_real",
-    oracle="""
+    mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_jpeg(
+            16 * (1 + d % 3), 16 * (1 + d % 2), d, restart_interval=2,
+            sampling=(2, 2),
+        ),
+        # the luma block grid is 2mw x 2mh MCUs' worth (both even)
+        oracle=_checkerboard_jpeg_oracle(
+            "2 * (1 + doc_id % 3)", "2 * (1 + doc_id % 2)", channels=3
+        ),
+    ),
+    _CodecQuery(
+        name="multimodal_audio_real",
+        doc="""REAL audio decode end-to-end, down to the SAMPLES: synthesize a
+    genuine 16-bit PCM WAV per doc (frame count, channel count, and
+    constant sample value derived from doc_id), then decode the actual
+    RIFF bytes back — chunk walk, fmt parse, int16 sample decode
+    (decode_wav). The oracle recomputes byte size (44-byte header +
+    2 bytes/sample), sample-rate/channel metadata, duration, and the
+    exact integer sample sum and peak from doc_id alone, so the whole
+    encode->decode roundtrip is hash-gated; a chunk-alignment or
+    endianness slip changes sample_sum and fails the hash. Both stages
+    are chained row-local mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_wav(
+            n_samples=1 + d % 500, sample_rate=8000, channels=1 + d % 2,
+            fill=d,
+        ),
+        oracle="""
 SELECT doc_id,
        CAST(44 + 2 * f * ch AS BIGINT) AS n_bytes,
        CAST(8000 AS INTEGER) AS sample_rate,
@@ -3609,45 +3137,13 @@ SELECT doc_id,
 FROM (SELECT doc_id, 1 + doc_id % 500 AS f, 1 + doc_id % 2 AS ch
       FROM documents)
 """,
-)
-def multimodal_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode end-to-end, down to the SAMPLES: synthesize a
-    genuine 16-bit PCM WAV per doc (frame count, channel count, and
-    constant sample value derived from doc_id), then decode the actual
-    RIFF bytes back — chunk walk, fmt parse, int16 sample decode
-    (decode_wav). The oracle recomputes byte size (44-byte header +
-    2 bytes/sample), sample-rate/channel metadata, duration, and the
-    exact integer sample sum and peak from doc_id alone, so the whole
-    encode->decode roundtrip is hash-gated; a chunk-alignment or
-    endianness slip changes sample_sum and fails the hash. Both stages
-    are chained row-local mapInPandas — one scan, no shuffle.
-    IMA-ADPCM compressed audio decodes too (multimodal_audio_adpcm);
-    perceptual codecs (MP3/AAC/...) stay behind decode_wav's
-    NotImplementedError — the ffmpeg integration point."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_audio, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_audio, AUDIO_SCHEMA)
-
-
-@query(
-    "multimodal_audio_adpcm",
-    oracle="""
-SELECT doc_id,
-       CAST(64 + n // 2 AS BIGINT) AS n_bytes,
-       CAST(8000 AS INTEGER) AS sample_rate,
-       CAST(1 AS INTEGER) AS channels,
-       CAST(n AS BIGINT) AS n_samples,
-       CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
-       CAST(h * n + n // 2 AS BIGINT) AS sample_sum,
-       CAST(CASE WHEN n > 1 THEN h + 1 ELSE h END AS INTEGER) AS peak_abs
-FROM (SELECT doc_id, 1 + doc_id % 900 AS n, 100 + doc_id % 800 AS h
-      FROM documents)
-""",
-)
-def multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPRESSED audio decode end-to-end: synthesize a genuine mono
+        decode=decode_real_audio,
+        schema=AUDIO_SCHEMA,
+        columns=None,
+    ),
+    _CodecQuery(
+        name="multimodal_audio_adpcm",
+        doc="""COMPRESSED audio decode end-to-end: synthesize a genuine mono
     IMA-ADPCM WAV per doc (wFormatTag 0x0011, cbSize fmt extension,
     mandatory fact chunk, 4-byte block header whose predictor is the
     first output sample), then decode the actual bytes back through
@@ -3662,36 +3158,29 @@ def multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound changes sample_sum and fails the hash. The general state
     machine (all 89 steps, clamps, multi-block headers) is pinned by a
     reference-model sweep in tests. Both stages chained row-local
-    mapInPandas — one scan, no shuffle. MP3/AAC/FLAC remain behind
-    NotImplementedError — the ffmpeg integration point."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_adpcm, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_audio, AUDIO_SCHEMA)
-
-
-@query(
-    "multimodal_audio_flac",
-    oracle="""
+    mapInPandas — one scan, no shuffle.""",
+        payload=lambda d: make_adpcm_wav(
+            n_samples=1 + d % 900, pred0=100 + d % 800
+        ),
+        oracle="""
 SELECT doc_id,
-       CAST(65 + (41 + 3 * (m - 1)) // 8 AS BIGINT) AS n_bytes,
+       CAST(64 + n // 2 AS BIGINT) AS n_bytes,
        CAST(8000 AS INTEGER) AS sample_rate,
        CAST(1 AS INTEGER) AS channels,
-       CAST(n + m AS BIGINT) AS n_samples,
-       CAST(((n + m) * 1000) // 8000 AS BIGINT) AS duration_ms,
-       CAST(v * n + m * base + m * (m - 1) // 2 AS BIGINT) AS sample_sum,
-       CAST(GREATEST(ABS(v), base + m - 1) AS INTEGER) AS peak_abs
-FROM (SELECT doc_id,
-             16 + doc_id % 1000 AS n,
-             doc_id % 2001 - 1000 AS v,
-             doc_id % 500 AS base,
-             8 + doc_id % 200 AS m
+       CAST(n AS BIGINT) AS n_samples,
+       CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
+       CAST(h * n + n // 2 AS BIGINT) AS sample_sum,
+       CAST(CASE WHEN n > 1 THEN h + 1 ELSE h END AS INTEGER) AS peak_abs
+FROM (SELECT doc_id, 1 + doc_id % 900 AS n, 100 + doc_id % 800 AS h
       FROM documents)
 """,
-)
-def multimodal_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC decode end-to-end: synthesize a genuine fLaC container per
+        decode=decode_real_audio,
+        schema=AUDIO_SCHEMA,
+        columns=None,
+    ),
+    _CodecQuery(
+        name="multimodal_audio_flac",
+        doc="""FLAC decode end-to-end: synthesize a genuine fLaC container per
     doc (STREAMINFO metadata, one frame with sync code, block-size and
     rate codes, UTF-8 frame number, REAL CRC-8 header and CRC-16 frame
     checksums, a constant 16-bit mono subframe), then decode the
@@ -3711,12 +3200,63 @@ def multimodal_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic shift), and all three stereo decorrelation modes are
     pinned by reference-model unit tests — decode_flac is a COMPLETE
     FLAC decoder. Both stages chained row-local mapInPandas — one
-    scan, no shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.mapInPandas(
-        encode_sample_flac, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(decode_real_audio, AUDIO_SCHEMA)
+    scan, no shuffle.""",
+        payload=lambda d: make_flac(
+            n_samples=16 + d % 1000,
+            value=(d % 2001) - 1000,
+            fixed_ramp=(d % 500, 8 + d % 200),
+        ),
+        oracle="""
+SELECT doc_id,
+       CAST(65 + (41 + 3 * (m - 1)) // 8 AS BIGINT) AS n_bytes,
+       CAST(8000 AS INTEGER) AS sample_rate,
+       CAST(1 AS INTEGER) AS channels,
+       CAST(n + m AS BIGINT) AS n_samples,
+       CAST(((n + m) * 1000) // 8000 AS BIGINT) AS duration_ms,
+       CAST(v * n + m * base + m * (m - 1) // 2 AS BIGINT) AS sample_sum,
+       CAST(GREATEST(ABS(v), base + m - 1) AS INTEGER) AS peak_abs
+FROM (SELECT doc_id,
+             16 + doc_id % 1000 AS n,
+             doc_id % 2001 - 1000 AS v,
+             doc_id % 500 AS base,
+             8 + doc_id % 200 AS m
+      FROM documents)
+""",
+        decode=decode_real_audio,
+        schema=AUDIO_SCHEMA,
+        columns=None,
+    ),
+)
+
+
+def _register_codec_query(spec: _CodecQuery) -> None:
+    """Register ``spec`` as ``(spark, sf_dir) -> DataFrame``: a doc_id
+    scan, the encode stage, the decode stage, the optional projection —
+    both stages chained row-local mapInPandas, one scan, no shuffle."""
+    payload = spec.payload
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            yield pd.DataFrame(
+                {"doc_id": ids, "payload": [payload(d) for d in ids]}
+            )
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        out = docs.mapInPandas(
+            encode, "doc_id bigint, payload binary"
+        ).mapInPandas(spec.decode, spec.schema)
+        return out if spec.columns is None else out.select(*spec.columns)
+
+    encode.__name__ = encode.__qualname__ = f"{spec.name}_encode"
+    run.__name__ = run.__qualname__ = spec.name
+    run.__doc__ = spec.doc
+    query(spec.name, oracle=spec.oracle)(run)
+
+
+for _spec in _CODEC_QUERIES:
+    _register_codec_query(_spec)
 
 
 from .._serde import pickle_by_value as _pbv  # noqa: E402

@@ -20,8 +20,9 @@ are WRONG for entries that hold DataFrames:
   new session at the recycled address.
 
 The weak session key makes entries unreachable from other sessions by
-construction, and they die with their session. No module keeps a cache
-of its own.
+construction, and they die with their session. No module keeps a
+per-session cache of its own (pure per-process tables such as
+multimodal's JPEG decode-table cache hold no session state).
 
 Plain values (``get_or_build``): counts, paths, merge lists, sketches,
 and frames that are not persisted. An optional ``stamp`` (a source

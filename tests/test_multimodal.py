@@ -466,7 +466,7 @@ def test_jpeg_color_roundtrip_closed_form():
 
     from simplemapreduceframework_spark.operators.multimodal import (
         decode_pixels,
-        make_jpeg_color,
+        make_jpeg,
     )
 
     def clip(v):
@@ -492,7 +492,9 @@ def test_jpeg_color_roundtrip_closed_form():
                 n_even * rgbsum(ya, cb, cr)
                 + (bw * bh - n_even) * rgbsum(yb, cb, cr)
             )
-            j = make_jpeg_color(w, h, fill, restart_interval=ri)
+            j = make_jpeg(
+                w, h, fill, restart_interval=ri, sampling=(1, 1)
+            )
             assert decode_pixels(j) == ("jpeg", w, h, 3, want), (fill, bw, bh)
 
 
@@ -778,93 +780,6 @@ def test_decode_wav_negative_samples_sum_exactly():
     assert peak == 32768
 
 
-def _encode_jpeg_sampled(
-    width, height, y_blocks, cb, cr, y_sampling=(2, 2)
-):
-    """Test-local generic encoder for constant-block sampled JPEGs —
-    exists to drive the decoder BEYOND make_jpeg_420's 4:2:0 dialect
-    (e.g. 4:2:2). y_blocks is the [by][bx] grid of 0-255 luma block
-    values at the full-resolution 8x8 block grid."""
-    import struct
-
-    from simplemapreduceframework_spark.operators.multimodal import (
-        _JPEG_AC_BITS,
-        _JPEG_AC_VALS,
-        _JPEG_DC_BITS,
-        _JPEG_DC_VALS,
-        _JPEG_QAC,
-        _JPEG_QDC,
-        _jpeg_huff_codes,
-    )
-
-    sh, sv = y_sampling
-    assert width % (8 * sh) == 0 and height % (8 * sv) == 0
-    mw, mh = width // (8 * sh), height // (8 * sv)
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    scan = bytearray()
-    state = {"acc": 0, "n": 0}
-
-    def emit(code, n):
-        state["acc"] = (state["acc"] << n) | code
-        state["n"] += n
-        while state["n"] >= 8:
-            byte = (state["acc"] >> (state["n"] - 8)) & 0xFF
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0)
-            state["n"] -= 8
-            state["acc"] &= (1 << state["n"]) - 1
-
-    def emit_dc_eob(diff):
-        s = abs(diff).bit_length()
-        code, ln = dc_codes[s]
-        emit(code, ln)
-        if s:
-            emit(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        eob, eln = ac_codes[0x00]
-        emit(eob, eln)
-
-    preds = [0, 0, 0]
-    for my in range(mh):
-        for mx in range(mw):
-            for byy in range(sv):
-                for bxx in range(sh):
-                    v = y_blocks[my * sv + byy][mx * sh + bxx] % 256 - 128
-                    emit_dc_eob(v - preds[0])
-                    preds[0] = v
-            for ci, v in ((1, cb - 128), (2, cr - 128)):
-                emit_dc_eob(v - preds[ci])
-                preds[ci] = v
-    if state["n"]:
-        emit((1 << (8 - state["n"])) - 1, 8 - state["n"])
-    qtable = bytes([_JPEG_QDC] + [_JPEG_QAC] * 63)
-    sampling_byte = (sh << 4) | sv
-    return b"".join(
-        [
-            b"\xff\xd8",
-            b"\xff\xdb" + struct.pack(">HB", 67, 0x00) + qtable,
-            b"\xff\xc0"
-            + struct.pack(">HBHHB", 17, 8, height, width, 3)
-            + bytes([1, sampling_byte, 0, 2, 0x11, 0, 3, 0x11, 0]),
-            b"\xff\xc4"
-            + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-            + bytes(_JPEG_DC_BITS)
-            + bytes(_JPEG_DC_VALS),
-            b"\xff\xc4"
-            + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-            + bytes(_JPEG_AC_BITS)
-            + bytes(_JPEG_AC_VALS),
-            b"\xff\xda"
-            + struct.pack(">HB", 12, 3)
-            + bytes([1, 0x00, 2, 0x00, 3, 0x00])
-            + bytes([0, 63, 0]),
-            bytes(scan),
-            b"\xff\xd9",
-        ]
-    )
-
-
 def _rgb_sum_of(y, cb, cr):
     import math
 
@@ -889,14 +804,16 @@ def test_jpeg_420_roundtrip_closed_form():
     extremes wrapping through clipping) and MCU grid shapes."""
     from simplemapreduceframework_spark.operators.multimodal import (
         decode_pixels,
-        make_jpeg_420,
+        make_jpeg,
     )
 
     for fill in (0, 50, 127, 128, 200, 255, 77, 3):
         for (w, h) in ((16, 16), (48, 16), (32, 32), (16, 48)):
             for ri in (0, 1, 2, 5):
                 fmt, W, H, ch, psum = decode_pixels(
-                    make_jpeg_420(w, h, fill, restart_interval=ri)
+                    make_jpeg(
+                        w, h, fill, restart_interval=ri, sampling=(2, 2)
+                    )
                 )
                 ya, yb = fill % 256, (fill * 7 + 13) % 256
                 cb, cr = (fill * 31 + 7) % 256, (fill * 17 + 3) % 256
@@ -911,21 +828,21 @@ def test_jpeg_420_roundtrip_closed_form():
 
 
 def test_jpeg_422_decodes_beyond_encoder_dialect():
-    """The decoder handles sampling factors make_jpeg_420 never emits:
-    a hand-assembled 4:2:2 stream (2x1 luma, 16x8 MCUs) with a
+    """The decoder handles sampling factors no codec query emits: a
+    4:2:2 stream (2x1 luma, 16x8 MCUs) with a
     DISTINCT value per luma block — placement-sensitive, so a
     transposed interleave or row/column-swapped upsample changes the
     sum."""
     from simplemapreduceframework_spark.operators.multimodal import (
         decode_pixels,
+        make_jpeg,
     )
 
     w, h = 32, 16  # 2x2 MCUs of 16x8 -> luma block grid 4x2
     y_blocks = [[10, 40, 90, 160], [250, 200, 130, 60]]
-    cb, cr = 77, 190
-    payload = _encode_jpeg_sampled(
-        w, h, y_blocks, cb, cr, y_sampling=(2, 1)
-    )
+    fill = 250
+    cb, cr = (fill * 31 + 7) % 256, (fill * 17 + 3) % 256  # 77, 157
+    payload = make_jpeg(w, h, fill, blocks=y_blocks, sampling=(2, 1))
     fmt, W, H, ch, psum = decode_pixels(payload)
     want = 64 * sum(
         _rgb_sum_of(v % 256, cb, cr) for row in y_blocks for v in row
@@ -1086,7 +1003,7 @@ def test_jpeg_progressive_color_interleaved_dc_scan():
     scan is INTERLEAVED (one MCU, per-component predictors) and whose
     AC bands arrive as three single-component EOB scans — must decode
     to exactly the same pixels as the equivalent single-block baseline
-    color file (make_jpeg_color 8x8 shares the same constants and the
+    color file (make_jpeg 8x8 at 4:4:4 shares the same constants and the
     same pinned YCbCr conversion)."""
     import struct
 
@@ -1099,7 +1016,7 @@ def test_jpeg_progressive_color_interleaved_dc_scan():
         _JPEG_QDC,
         _jpeg_huff_codes,
         decode_pixels,
-        make_jpeg_color,
+        make_jpeg,
     )
 
     fill = 77
@@ -1173,7 +1090,9 @@ def test_jpeg_progressive_color_interleaved_dc_scan():
         ]
         + [b"\xff\xd9"]
     )
-    assert decode_pixels(j) == decode_pixels(make_jpeg_color(8, 8, fill))
+    assert decode_pixels(j) == decode_pixels(
+        make_jpeg(8, 8, fill, sampling=(1, 1))
+    )
 
 
 def test_jpeg_progressive_refinement_eobrun_spans_blocks():
@@ -2017,10 +1936,9 @@ def test_jpeg_blocks_and_sampled_encoder_bytes_unchanged():
         [make_jpeg(56, 40, 9, restart_interval=2, blocks=grid)]
     ) == _BLOCKS_GRID_DIGEST
     fill = 250  # chroma Cb = 77, Cr = 157
-    cb, cr = (fill * 31 + 7) % 256, (fill * 17 + 3) % 256
     assert _sha256(
-        [_encode_jpeg_sampled(48, 24, _luma_grid(6, 3), cb, cr, (2, 1))]
+        [make_jpeg(48, 24, fill, blocks=_luma_grid(6, 3), sampling=(2, 1))]
     ) == _JPEG_422_DIGEST
     assert _sha256(
-        [_encode_jpeg_sampled(24, 48, _luma_grid(3, 6), cb, cr, (1, 2))]
+        [make_jpeg(24, 48, fill, blocks=_luma_grid(3, 6), sampling=(1, 2))]
     ) == _JPEG_440_DIGEST

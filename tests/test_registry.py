@@ -172,3 +172,19 @@ def test_bench_named_fill_skips_a_wide_boundary_entry():
         assert fits(named)
         sets.append(set(named))
     assert sets[0] == sets[1] == {"a1", "a2", "b1", "b2"}
+
+
+def test_operators_md_is_current():
+    """OPERATORS.md is generated from the registered docstrings; a
+    query whose docstring changed without regenerating it fails here
+    (run python scripts/gen_operator_docs.py)."""
+    import os
+
+    from scripts.gen_operator_docs import OUT, render
+
+    with open(OUT) as f:
+        committed = f.read()
+    assert committed == render(), (
+        f"{os.path.basename(OUT)} is stale: run "
+        "python scripts/gen_operator_docs.py"
+    )
