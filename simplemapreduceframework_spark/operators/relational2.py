@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 from ..functions import dec2, hex32
 from ..functions.scale import broadcast_dim, table_rows
-from ..registry import query
+from ..registry import query, sql_query
 from ..session_memo import get_or_build
 from ..sources import load_table
 
@@ -227,9 +227,8 @@ WHERE o.o_totalprice > 2 * (SELECT AVG(o2.o_totalprice)
                             WHERE o2.o_custkey = o.o_custkey)
 """
 
-
-@query("q26_sql_api", oracle=_Q26_SQL)
-def q26_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q26_sql_api", _Q26_SQL,
     """The SQL entry point: a correlated scalar subquery executed
     verbatim through spark.sql() — Catalyst decorrelates it into an
     aggregate + join (no per-row subquery execution). The oracle is the
@@ -238,11 +237,7 @@ def q26_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The avg comparison is a filter, not an output, so double AVG
     nondeterminism cannot flip rows: totalprice > 2*avg is robust for
     this data — no row sits within float noise of the boundary.)
-    """
-    from ..sources import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_Q26_SQL)
+    """)
 
 
 @query(
@@ -435,21 +430,16 @@ JOIN orders ON o_custkey = c_custkey
 JOIN totals t ON t.l_orderkey = o_orderkey
 """
 
-
-@query("q29_large_orders", oracle=_Q29_SQL)
-def q29_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: IN over an aggregated subquery (large-volume
+sql_query(
+    "q29_large_orders", _Q29_SQL, engine=_Q29_ENGINE_SQL,
+    doc="""TPC-H Q18 shape: IN over an aggregated subquery (large-volume
     orders). Catalyst turns the IN into a left-semi join against the
     HAVING aggregate — no per-row subquery. The engine text (r17)
     goes one step further than decorrelation: the outer SUM re-sums
     the same per-order groups the HAVING already aggregated, so one
     per-order aggregate serves both (see _Q29_ENGINE_SQL) — one fact
     scan + one fact exchange instead of two of each; the oracle keeps
-    the IN-subquery form and results hash-match."""
-    from ..sources import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_Q29_ENGINE_SQL)
+    the IN-subquery form and results hash-match.""")
 
 
 @query(

@@ -1,15 +1,24 @@
-"""TPC-H "hard shape" queries: the decorrelation patterns a real user
-hits next (reference ROADMAP #7) — correlated scalar MIN (Q2), HAVING
-against a global scalar aggregate (Q11), and multi-EXISTS / NOT EXISTS
-(Q21). The synthetic schema has no partsupp or commit/receipt dates, so
-each shape is re-anchored on lineitem with the same subquery structure.
+"""TPC-H "hard shape" queries (the decorrelation patterns a real user
+hits next, reference ROADMAP #7), the other SQL-text capabilities, and
+the data-quality and privacy reports.
 
-All three run as *portable SQL text* through spark.sql() with the same
-text as the DuckDB oracle — proving Catalyst's subquery decorrelation
+The TPC-H shapes are Q2, Q7, Q8, Q9, Q11, Q13, Q15, Q17, Q19, Q20, Q21
+and Q22, each re-anchored on lineitem where the synthetic schema lacks
+partsupp or commit/receipt dates. They, the ordered funnel, GROUPING
+SETS, LATERAL, RANGE frames, distribution windows, the recursive CTE
+and the MAD outlier, skew and RFM reports are each one ``sql_query``
+row: the DuckDB oracle is its SQL text, and Spark runs that text unless
+the row names an engine text (a rewrite that hash-matches the oracle,
+or a dialect shim) — proving Catalyst's subquery decorrelation
 (scalar-subquery -> aggregate+join, EXISTS -> semi join, NOT EXISTS ->
-anti join) yields exactly the ANSI semantics. Numeric policy per
-functions/columns.py: money sums in exact decimals, doubles only at the
-output/comparison step, divisions of identical values.
+anti join) yields exactly the ANSI semantics. The z-score outliers,
+table profile, expectation suite and privacy triad are DataFrame-API
+bodies.
+
+Numeric policy per functions/columns.py: money sums in exact decimals,
+doubles only at the output/comparison step, divisions of identical
+values; l_quantity is integral (pinned by the probe in round 6), so
+double AVG/SUM over it is order-independent and engine-exact.
 """
 
 from __future__ import annotations
@@ -17,10 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..functions.scale import broadcast_dim, table_rows
 from ..session_memo import per_session, shared_frame
-from ..sources import load_table, register_views
+from ..sources import load_table
 
 # Q2 shape: for each large part, the supplier(s) selling it at the
 # minimum observed unit price — a correlated scalar MIN subquery.
@@ -87,30 +96,20 @@ ORDER BY numwait DESC, s.s_name
 LIMIT 20
 """
 
-
-@query("q30_min_cost_supplier", oracle=_Q30_SQL)
-def q30_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q30_min_cost_supplier", _Q30_SQL,
     """TPC-H Q2 shape: correlated scalar MIN subquery, decorrelated by
-    Catalyst into a per-part min aggregate joined back to the probe."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q30_SQL)
+    Catalyst into a per-part min aggregate joined back to the probe.""")
 
-
-@query("q31_important_stock", oracle=_Q31_SQL)
-def q31_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q31_important_stock", _Q31_SQL,
     """TPC-H Q11 shape: group rows filtered against a global scalar
-    subquery over the same aggregate (fraction-of-total HAVING)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q31_SQL)
+    subquery over the same aggregate (fraction-of-total HAVING).""")
 
-
-@query("q32_suppliers_who_kept_waiting", oracle=_Q32_SQL)
-def q32_suppliers_who_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q32_suppliers_who_kept_waiting", _Q32_SQL,
     """TPC-H Q21 shape: EXISTS + NOT EXISTS against the same fact table
-    (semi join + anti join on the order key), top-20 by count."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q32_SQL)
-
+    (semi join + anti join on the order key), top-20 by count.""")
 
 # Q22 shape: scalar AVG subquery in the predicate + NOT EXISTS anti
 # join, grouped by a derived segment key — the "global-threshold filter
@@ -134,16 +133,12 @@ GROUP BY seg
 ORDER BY seg
 """
 
-
-@query("q33_global_sales_opportunity", oracle=_Q33_SQL)
-def q33_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q33_global_sales_opportunity", _Q33_SQL,
     """TPC-H Q22 shape: customers above the global positive-balance
     average with no orders — scalar AVG subquery (computed once,
     broadcast into the predicate) combined with a NOT EXISTS anti join,
-    then a segment rollup."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q33_SQL)
-
+    then a segment rollup.""")
 
 # Funnel analysis over the event stream: users who completed
 # view -> click -> purchase in timestamp order. Each step's earliest
@@ -174,17 +169,13 @@ SELECT CAST(COUNT(CASE WHEN did_view THEN 1 END) AS BIGINT) AS n_view,
 FROM funnel
 """
 
-
-@query("q34_event_funnel", oracle=_Q34_SQL)
-def q34_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q34_event_funnel", _Q34_SQL,
     """Ordered funnel (view -> click -> purchase) via conditional MIN
     aggregation: one exchange on user_id and three timestamps of state
     per user — the scalable alternative to k-way self-joins. NULL
     comparison semantics (NULL > x -> NULL -> false in the step flags)
-    are identical in both engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q34_SQL)
-
+    are identical in both engines.""")
 
 # Custom GROUPING SETS (beyond rollup/cube): an explicit lattice of
 # aggregation levels with GROUPING() flags disambiguating real NULLs
@@ -200,16 +191,12 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                         (o_orderstatus), (o_orderpriority))
 """
 
-
-@query("q35_grouping_sets", oracle=_Q35_SQL)
-def q35_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q35_grouping_sets", _Q35_SQL,
     """Explicit GROUPING SETS lattice with GROUPING() flags — the
     general form of rollup/cube (q10/q11): the engine expands the row
     once per set (Expand node) and aggregates all levels in one
-    shuffle, instead of one job per level."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q35_SQL)
-
+    shuffle, instead of one job per level.""")
 
 # LATERAL join: a correlated subquery in the FROM clause — per
 # customer, their two most expensive orders. Catalyst decorrelates the
@@ -228,16 +215,12 @@ LATERAL (
 WHERE c.c_custkey % 100 = 0
 """
 
-
-@query("q36_lateral_topn", oracle=_Q36_SQL)
-def q36_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q36_lateral_topn", _Q36_SQL,
     """LATERAL (correlated table subquery in FROM): per-customer top-2
     orders. The declarative form a user writes; the engine plans the
     same ranked-window shape as q8 rather than executing the subquery
-    per row."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q36_SQL)
-
+    per row.""")
 
 # RANGE window frames (value-based, not row-based): per customer, the
 # rolling 30-day order total — every ROWS frame in q20 bounds by row
@@ -259,17 +242,13 @@ FROM orders
 WHERE o_custkey % 40 = 0
 """
 
-
-@query("q37_range_frame_window", oracle=_Q37_SQL)
-def q37_range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q37_range_frame_window", _Q37_SQL,
     """RANGE window frame: the frame is bounded by ORDER-BY *value*
     (orders within the preceding 30 days), not row offsets — peers with
     the same date all see the same frame, which ROWS frames get wrong.
     Decimal sums keep the rolling totals engine-exact. Same SQL text in
-    both engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q37_SQL)
-
+    both engines.""")
 
 # TPC-H Q19 shape: a disjunction of per-branch conjunctions mixing
 # fact and dimension predicates — the classic test that the optimizer
@@ -293,9 +272,8 @@ WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 15
 GROUP BY p_brand
 """
 
-
-@query("q38_disjunctive_predicate", oracle=_Q38_SQL)
-def q38_disjunctive_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q38_disjunctive_predicate", _Q38_SQL,
     """Disjunctive mixed-table predicate (TPC-H Q19 shape): three OR'd
     branches, each a conjunction over both join sides. Catalyst
     factors the disjunction per table and pushes the RELAXED OR into
@@ -305,9 +283,7 @@ def q38_disjunctive_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB that scan-level OR is the difference between reading three
     brands' row groups and reading the table: one pass over lineitem,
     one broadcast, one partial/final agg. Identical SQL text runs on
-    both engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q38_SQL)
+    both engines.""")
 
 
 @query(
@@ -459,10 +435,9 @@ SELECT e.event_id, e.event_type, e.value,
 FROM events e JOIN mad a ON a.event_type = e.event_type
 """
 
-
-@query("events_outlier_mad", oracle=_MAD_SQL)
-def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-group outlier detection: median absolute deviation
+sql_query(
+    "events_outlier_mad", _MAD_SQL, engine=_MAD_ENGINE_SQL,
+    doc="""Robust per-group outlier detection: median absolute deviation
     with the 1.4826 normal-consistency factor — the heavy-tail-safe
     twin of events_outlier_zscore (a single wild value shifts a mean
     and explodes a stddev, but moves neither median).
@@ -477,10 +452,7 @@ def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table 3x instead of the oracle text's 4x (see
     _MAD_ENGINE_SQL); every decimal expression is identical, so
     results hash-match the oracle.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_MAD_ENGINE_SQL)
-
+    """)
 
 # Data profiling: per-column statistics as one UNION ALL of per-column
 # aggregates, each a partial-aggregated scan — the ANALYZE TABLE /
@@ -620,9 +592,8 @@ WHERE sn.n_name IN ('NATION_18', 'NATION_19')
 GROUP BY sn.n_name, cn.n_name, o_year
 """
 
-
-@query("q39_nation_volume", oracle=_Q39_SQL)
-def q39_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q39_nation_volume", _Q39_SQL,
     """Cross-nation shipping volume (TPC-H Q7 shape): revenue flowing
     between two chosen nations, by direction and order year — the
     two-aliases-of-one-dimension pattern (nation joins the fact twice,
@@ -634,10 +605,7 @@ def q39_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     key sets down); the only fact-scale exchange is orders<->lineitem
     on the order key. Decimal revenue sums are order-independent.
     Identical SQL text runs on both engines.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_Q39_SQL)
-
+    """)
 
 _Q40_SQL = """
 SELECT o_custkey, o_orderkey,
@@ -655,9 +623,8 @@ WINDOW wp AS (PARTITION BY o_custkey
               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 """
 
-
-@query("q40_window_distribution", oracle=_Q40_SQL)
-def q40_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q40_window_distribution", _Q40_SQL,
     """Distribution-function window gauntlet: PERCENT_RANK, CUME_DIST,
     FIRST_VALUE / LAST_VALUE / NTH_VALUE over an explicit unbounded
     frame — the window family q20_window_suite doesn't cover.
@@ -667,10 +634,7 @@ def q40_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit; the value functions pick actual o_orderkey values
     under a tie-broken total order. All windows share one partition
     key -> one exchange + sort. Identical SQL text on both engines.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_Q40_SQL)
-
+    """)
 
 _SKEW_COLS = ["l_returnflag", "l_suppkey", "l_partkey", "l_quantity"]
 _SKEW_SQL = "\nUNION ALL\n".join(
@@ -688,11 +652,11 @@ CROSS JOIN (
 ) m"""
     for c in _SKEW_COLS
 )
+_SKEW_ENGINE_SQL = _SKEW_SQL.replace("AS VARCHAR", "AS STRING")
 
-
-@query("table_skew_report", oracle=_SKEW_SQL)
-def table_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key skew report: each grouping candidate column's most
+sql_query(
+    "table_skew_report", _SKEW_SQL, engine=_SKEW_ENGINE_SQL,
+    doc="""Hot-key skew report: each grouping candidate column's most
     frequent value and its share of the table — the statistic that
     decides between a plain groupBy, AQE skew handling, and the salted
     two-stage aggregate (skewed_agg_salted): l_returnflag's top share
@@ -703,10 +667,7 @@ def table_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same report runs with approx top-k (CMS heavy hitters)
     per the cms_heavy_hitters pattern. Ratios divide identical
     integers. Identical SQL text on both engines.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_SKEW_SQL.replace("AS VARCHAR", "AS STRING"))
-
+    """)
 
 _Q41_SQL = """
 WITH revenue AS (
@@ -726,9 +687,8 @@ JOIN revenue r ON r.supplier_no = s.s_suppkey
 WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 """
 
-
-@query("q41_top_supplier", oracle=_Q41_SQL)
-def q41_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q41_top_supplier", _Q41_SQL,
     """Top supplier by quarterly revenue (TPC-H Q15 shape): an
     aggregate view consumed twice — once joined to the dimension, once
     reduced to a global scalar MAX that filters it.
@@ -740,10 +700,7 @@ def q41_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap where a double revenue makes "equal to max" nondeterministic.
     The only fact-scale exchange is the groupBy on l_suppkey; the
     supplier dimension broadcasts. Identical SQL text on both engines.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_Q41_SQL)
-
+    """)
 
 # RFM segmentation: one SQL text, both engines. Quartile thresholds are
 # three DISCRETE percentiles per metric (scalar subqueries -> broadcast
@@ -797,11 +754,14 @@ SELECT rfm.o_custkey,
          + CAST(rfm.monetary > q.m3 AS INT) AS m_score
 FROM rfm CROSS JOIN q
 """
+# dialect shims: DuckDB's epoch()/'//' -> Spark's unix_timestamp()/div
+_RFM_ENGINE_SQL = _RFM_SQL.replace("epoch(", "unix_timestamp(").replace(
+    " // ", " div "
+)
 
-
-@query("customer_rfm_segments", oracle=_RFM_SQL)
-def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation: every customer scored 1-4 on recency,
+sql_query(
+    "customer_rfm_segments", _RFM_SQL, engine=_RFM_ENGINE_SQL,
+    doc="""RFM segmentation: every customer scored 1-4 on recency,
     frequency, and monetary value against corpus quartiles — the
     marketing-analytics workload every activity warehouse runs.
 
@@ -813,13 +773,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile sorts. Recency is integer epoch-day arithmetic with the
     explicit FLOOR (DuckDB double->bigint casts round, Spark
     truncates). Identical SQL text on both engines.
-    """
-    register_views(spark, sf_dir)
-    # dialect shims: DuckDB's epoch()/'//' -> Spark's unix_timestamp()/div
-    return spark.sql(
-        _RFM_SQL.replace("epoch(", "unix_timestamp(").replace(" // ", " div ")
-    )
-
+    """)
 
 _Q42_SQL = """
 SELECT n.n_name AS nation,
@@ -840,9 +794,8 @@ WHERE p.p_type LIKE '%ECONOMY%' OR p.p_name LIKE '%widget%'
 GROUP BY n.n_name, o_year
 """
 
-
-@query("q42_product_profit", oracle=_Q42_SQL)
-def q42_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+sql_query(
+    "q42_product_profit", _Q42_SQL,
     """Product-line profit by supplier nation and year (TPC-H Q9
     shape): a five-table star with a LIKE filter on the part dimension
     and a profit expression mixing revenue and cost terms. The
@@ -856,10 +809,7 @@ def q42_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-scale exchange is orders<->lineitem; profit terms stay
     all-decimal through the sum (order-independent) and surface as one
     double. Identical SQL text on both engines.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_Q42_SQL)
-
+    """)
 
 # Declarative data-quality expectations (the dbt-test / Great
 # Expectations pass a warehouse runs after every load): each rule is an
@@ -1339,3 +1289,271 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_violating_classes"),
     )
+
+
+# Q8 shape: for each order year, the share of ASIA customers' rod
+# revenue supplied by NATION_7. Revenue is exact decimal; the nation
+# slice uses the standard FILTER clause (both engines); share divides
+# the same decimal pair as doubles.
+_Q43_SQL = """
+WITH rev AS (
+    SELECT CAST(EXTRACT(YEAR FROM o.o_orderdate) AS BIGINT) AS o_year,
+           sn.n_name AS supp_nation,
+           CAST(l.l_extendedprice AS DECIMAL(12,2))
+             * CAST(1 - CAST(l.l_discount AS DECIMAL(3,2)) AS DECIMAL(3,2))
+             AS volume
+    FROM lineitem l
+    JOIN orders o ON o.o_orderkey = l.l_orderkey
+    JOIN part p ON p.p_partkey = l.l_partkey
+    JOIN supplier s ON s.s_suppkey = l.l_suppkey
+    JOIN nation sn ON sn.n_nationkey = s.s_nationkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation cn ON cn.n_nationkey = c.c_nationkey
+    JOIN region r ON r.r_regionkey = cn.n_regionkey
+    WHERE r.r_name = 'ASIA' AND p.p_name LIKE '%rod%'
+)
+SELECT o_year,
+       CAST(COALESCE(SUM(volume) FILTER (WHERE supp_nation = 'NATION_7'),
+                     0) AS DOUBLE)
+           / CAST(SUM(volume) AS DOUBLE) AS mkt_share,
+       CAST(SUM(volume) AS DOUBLE) AS total_volume,
+       CAST(COUNT(*) AS BIGINT) AS n_items
+FROM rev
+GROUP BY o_year
+"""
+
+sql_query(
+    "q43_market_share", _Q43_SQL,
+    """TPC-H Q8 shape: a nation's market share inside a region-scoped,
+    part-filtered revenue stream, by order year — the
+    conditional-slice-over-total ratio pattern (FILTER clause on both
+    engines, numerator and denominator summed from the SAME decimal
+    column so the double division is engine-exact).
+
+    Shape at scale: part/supplier/customer/nation/region all broadcast
+    (the LIKE filter prunes part before its build); the only
+    fact-scale exchange is orders<->lineitem, then one partial-agg
+    groupBy on the year.""")
+
+# Q13 shape: distribution of per-customer order counts INCLUDING
+# zero-order customers — the ON-clause predicate (filter the join, not
+# the customers) is the semantic point: a WHERE would drop the zeros.
+_Q44_SQL = """
+SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
+FROM (
+    SELECT c.c_custkey,
+           CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
+    FROM customer c
+    LEFT JOIN orders o
+      ON o.o_custkey = c.c_custkey
+     AND o.o_orderpriority <> '1-URGENT'
+    GROUP BY c.c_custkey
+) per_cust
+GROUP BY c_count
+"""
+
+sql_query(
+    "q44_order_count_distribution", _Q44_SQL,
+    """TPC-H Q13 shape: the customer-order-count histogram with the
+    filter in the LEFT JOIN's ON clause, so customers with no
+    qualifying orders survive as the c_count = 0 bucket (a WHERE would
+    silently drop them — the classic outer-join-predicate-placement
+    trap). COUNT(o.o_orderkey) counts matched rows only, never the
+    null-extended row. Pure integer counts, engine-exact.
+
+    Shape at scale: one exchange on the customer key for the join +
+    first groupBy (AQE reuses the partitioning), then a tiny histogram
+    aggregate.""")
+
+# Q17 shape: revenue lost to small-quantity orders of one brand — the
+# correlated scalar AVG subquery, decorrelated by Catalyst into a
+# per-part aggregate joined back. l_quantity is integral, so the double
+# AVG is an exact-sum / count — order-independent on both engines.
+_Q45_SQL = """
+SELECT CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)))
+                 AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
+       CAST(COUNT(*) AS BIGINT) AS n_small
+FROM lineitem l
+JOIN part p ON p.p_partkey = l.l_partkey
+WHERE p.p_brand = 'Brand#13'
+  AND l.l_quantity < (
+      SELECT 0.2 * AVG(l2.l_quantity)
+      FROM lineitem l2
+      WHERE l2.l_partkey = l.l_partkey)
+"""
+
+
+# Engine-side text (r17): Catalyst decorrelates the scalar AVG into a
+# per-part aggregate over the WHOLE fact table — the optimizer cannot
+# see that only Brand#13 parts ever consume a threshold (guide §8:
+# problem knowledge the optimizer does not have). Joining the filtered
+# part dimension into the aggregate side first (a broadcast, so no
+# extra fact exchange) cuts the avg-side groupBy's input and shuffle
+# to the brand's fraction of the table. INNER join to the aggregate is
+# exact: every probe row's part has at least one lineitem (itself), so
+# the per-part threshold row always exists; AVG over that part's
+# lineitems is over the identical row set (the brand filter prunes
+# PARTS, never a part's lineitems) and the threshold expression is
+# textually the oracle's.
+_Q45_ENGINE_SQL = """
+SELECT CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)))
+                 AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
+       CAST(COUNT(*) AS BIGINT) AS n_small
+FROM lineitem l
+JOIN part p ON p.p_partkey = l.l_partkey
+JOIN (
+    SELECT l2.l_partkey, 0.2 * AVG(l2.l_quantity) AS thr
+    FROM lineitem l2
+    JOIN part p2 ON p2.p_partkey = l2.l_partkey
+    WHERE p2.p_brand = 'Brand#13'
+    GROUP BY l2.l_partkey
+) a ON a.l_partkey = l.l_partkey
+WHERE p.p_brand = 'Brand#13'
+  AND l.l_quantity < a.thr
+"""
+
+sql_query(
+    "q45_small_quantity_revenue", _Q45_SQL, engine=_Q45_ENGINE_SQL,
+    doc="""TPC-H Q17 shape: correlated scalar AVG subquery (orders whose
+    quantity is under 20% of the part's average), decorrelated into a
+    per-part aggregate + join. Revenue sums in exact decimal; the
+    threshold compares an exact integral-sum average.
+
+    Shape at scale: the brand filter prunes the probe side before its
+    join AND (engine text, r17) the aggregate side before the per-part
+    AVG's groupBy — the avg-side shuffle carries the brand's fraction
+    of the fact table instead of every part's rows (see
+    _Q45_ENGINE_SQL; the oracle keeps the correlated-subquery form and
+    results hash-match).""")
+
+# Q20 shape: suppliers who shipped a large aggregate quantity of any
+# widget part — nested IN subquery whose inner query is itself a
+# grouped HAVING aggregate. Quantity sums in decimal for exactness.
+_Q46_SQL = """
+SELECT s.s_suppkey, s.s_name, n.n_name
+FROM supplier s
+JOIN nation n ON n.n_nationkey = s.s_nationkey
+WHERE s.s_suppkey IN (
+    SELECT l.l_suppkey
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE p.p_name LIKE '%widget%'
+    GROUP BY l.l_suppkey, l.l_partkey
+    HAVING SUM(CAST(l.l_quantity AS DECIMAL(12,2))) > 100
+)
+ORDER BY s.s_suppkey
+"""
+
+sql_query(
+    "q46_bulk_widget_suppliers", _Q46_SQL,
+    """TPC-H Q20 shape: IN over a grouped-HAVING subquery (suppliers
+    who moved >100 units of some widget part) — Catalyst plans the IN
+    as a left-semi join against the aggregated subquery, never a
+    per-row re-execution. Decimal quantity sums, integer keys —
+    engine-exact.
+
+    Shape at scale: the LIKE filter prunes part before its broadcast;
+    the inner aggregate is one partial-agg groupBy on (suppkey,
+    partkey); the outer semi join is supplier-dimension sized.""")
+
+# Recursive CTE (Spark 4 WITH RECURSIVE): the reorder-streak walk — a
+# linear successor traversal whose depth is data-dependent (the longest
+# streak), which no fixed window/unroll can express. Spark 4 supports
+# UNION ALL recursion only (UNION-dedup cycle-safe recursion is not in
+# yet), so the relation walked must be acyclic — the per-customer
+# next-order linked list is. o_orderkey is unique (expectation-suite
+# adjacent fact), so the recursive join steps to exactly one row.
+_Q47_ORD_SQL = """
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           LAG(o_orderdate) OVER w AS prev_date,
+           LEAD(o_orderkey) OVER w AS next_key,
+           LEAD(o_orderdate) OVER w AS next_date
+    FROM orders
+    WHERE o_orderdate IS NOT NULL AND o_custkey IS NOT NULL
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+"""
+
+_Q47_BODY = """
+chain(o_custkey, cur_key, cur_date, next_key, next_date, len) AS (
+    SELECT o_custkey, o_orderkey, o_orderdate, next_key, next_date, 1
+    FROM ord
+    WHERE prev_date IS NULL OR o_orderdate > prev_date + INTERVAL 90 DAY
+    UNION ALL
+    SELECT c.o_custkey, o.o_orderkey, o.o_orderdate, o.next_key,
+           o.next_date, c.len + 1
+    FROM chain c JOIN ord o ON o.o_orderkey = c.next_key
+    WHERE c.next_date <= c.cur_date + INTERVAL 90 DAY
+)
+SELECT o_custkey,
+       CAST(MAX(len) AS BIGINT) AS longest_streak,
+       CAST(COUNT(CASE WHEN len = 1 THEN 1 END) AS BIGINT) AS n_streaks,
+       CAST(COUNT(*) AS BIGINT) AS n_chain_rows
+FROM chain
+GROUP BY o_custkey
+"""
+
+# the one oracle text: ord inline as a plain CTE (DuckDB materializes
+# CTEs once, so no re-execution concern there)
+_Q47_SQL = (
+    "WITH RECURSIVE ord AS (" + _Q47_ORD_SQL + "),\n" + _Q47_BODY
+)
+
+# Engine-side non-recursive formulation (r17 optimization): the
+# recursion's continuation condition (next order within 90 days of the
+# current one) is the exact complement of its anchor condition (an
+# order more than 90 days after its predecessor starts a streak), so
+# every filtered order lands in `chain` exactly once and its `len` is
+# its 1-based position inside its streak. That position is pure window
+# arithmetic: mark streak starts, carry the start's row number forward
+# with a running MAX, and len = rn - cur_start + 1. Both window layers
+# share one partition key and ORDER — one exchange, one sort — and the
+# final groupBy reuses the window partitioning, so the whole query is
+# a single shuffle (the recursive plan paid the window exchange + a
+# persisted successor table + one frontier join PER recursion level,
+# ~10 levels at sf0.1: 3.1s -> ~0.4s measured). All-integer streak
+# statistics -> engine-exact vs the unchanged recursive oracle.
+_Q47_FLAT_SQL = """
+WITH ord AS (
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           LAG(o_orderdate) OVER w AS prev_date,
+           ROW_NUMBER() OVER w AS rn
+    FROM orders
+    WHERE o_orderdate IS NOT NULL AND o_custkey IS NOT NULL
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+),
+runs AS (
+    SELECT o_custkey, rn,
+           MAX(CASE WHEN prev_date IS NULL
+                         OR o_orderdate > prev_date + INTERVAL 90 DAY
+                    THEN rn END)
+               OVER (PARTITION BY o_custkey
+                     ORDER BY o_orderdate, o_orderkey
+                     ROWS UNBOUNDED PRECEDING) AS cur_start
+    FROM ord
+)
+SELECT o_custkey,
+       CAST(MAX(rn - cur_start + 1) AS BIGINT) AS longest_streak,
+       CAST(COUNT(CASE WHEN rn = cur_start THEN 1 END) AS BIGINT) AS n_streaks,
+       CAST(COUNT(*) AS BIGINT) AS n_chain_rows
+FROM runs
+GROUP BY o_custkey
+"""
+
+sql_query(
+    "q47_reorder_streaks", _Q47_SQL, engine=_Q47_FLAT_SQL,
+    doc="""Per-customer reorder streaks: a streak starts at an order with
+    no predecessor within 90 days and extends while each next order
+    follows within 90 days of the current one. The DuckDB oracle keeps
+    the recursive-CTE successor walk (the capability this query
+    declares); the engine computes the identical per-order streak
+    positions in ONE window pass (see _Q47_FLAT_SQL) — the r8-r16
+    recursive engine plan re-joined a persisted successor list once
+    per recursion level (depth = the longest streak) and needed the
+    cteRecursionRowLimit valve sized to |orders|; the window form has
+    neither concern and carries one exchange total.
+
+    Shape at scale: one hash exchange on o_custkey feeds two stacked
+    window layers sharing the same sort, and the final aggregate
+    reuses the window partitioning (no second exchange). Streak
+    statistics are pure integers — engine-exact.
+    """)

@@ -8,6 +8,7 @@ dicts to the driver, and tests iterate them for local oracle parity.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from typing import Any
 
@@ -49,6 +50,27 @@ def query(
     return deco
 
 
+def sql_query(
+    name: str, sql: str, doc: str, engine: str | None = None
+) -> None:
+    """Register a query that is one SQL text over the tables' views:
+    ``sql`` is its oracle, and Spark runs ``engine`` (a rewrite that
+    must hash-match the oracle) when given, else ``sql``. The function
+    carries ``name``, ``doc`` and the caller's module (OPERATORS.md
+    groups by ``__module__``)."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from .sources import register_views  # lazy: registry stays a leaf
+
+        register_views(spark, sf_dir)
+        return spark.sql(engine or sql)
+
+    run.__name__ = run.__qualname__ = name
+    run.__doc__ = doc
+    run.__module__ = sys._getframe(1).f_globals["__name__"]
+    query(name, oracle=sql)(run)
+
+
 def load_all() -> None:
     """Import every operator module so registrations run."""
     from .operators import (  # noqa: F401
@@ -64,7 +86,6 @@ def load_all() -> None:
         relational,
         relational2,
         relational3,
-        relational4,
         retrieval,
         similarity,
         streamingq,

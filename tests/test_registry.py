@@ -106,6 +106,26 @@ def test_every_query_has_oracle_or_documented_rows_only():
     assert len(rows_only) <= 6, sorted(rows_only)
 
 
+def test_every_query_is_named_documented_and_owned_by_its_module():
+    """Row-registered queries (the codec table, the SQL-text rows) must
+    read like hand-written ones: the registered name, a docstring, and
+    the declaring module as ``__module__`` (OPERATORS.md groups by it),
+    never the registry that built the function."""
+    import inspect
+    import sys
+
+    owners = tuple(
+        f"{registry.__package__}.{pkg}."
+        for pkg in ("operators", "compat", "sources")
+    )
+    for name, fn in registry.QUERIES.items():
+        assert fn.__name__ == name
+        assert (fn.__doc__ or "").strip(), name
+        assert fn.__module__.startswith(owners), (name, fn.__module__)
+        source = inspect.getsource(sys.modules[fn.__module__])
+        assert f'"{name}"' in source, (name, fn.__module__)
+
+
 def test_ordering_puts_priority_head_first():
     ordered = list(registry.all_queries())
     head = [q for q in registry.CHECK_PRIORITY if q in registry.QUERIES]

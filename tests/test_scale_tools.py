@@ -1337,12 +1337,11 @@ def test_q47_single_exchange_no_recursion(spark, sf_dir):
     per recursion level; a regression back to that shape shows up here
     as extra exchanges or a UnionLoop node. Result equivalence vs the
     unchanged recursive oracle is pinned by the parity suite."""
-    from simplemapreduceframework_spark.operators.relational4 import (
-        q47_reorder_streaks,
-    )
+    from simplemapreduceframework_spark import registry
     from simplemapreduceframework_spark.plans import explain_str
 
-    df = q47_reorder_streaks(spark, sf_dir)
+    registry.load_all()
+    df = registry.QUERIES["q47_reorder_streaks"](spark, sf_dir)
     plan = explain_str(df)
     assert "UnionLoop" not in plan and "CTERelation" not in plan, plan
     from bench import plan_fingerprint
