@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.referenceq import _WORDCOUNT_ORACLE
 from ..registry import query
 from ..sources import load_table
 from .mapreduce import MapReduceJob
@@ -48,12 +49,7 @@ def _avg_reducer(key, values):
 
 @query(
     "mr_wordcount_compat",
-    oracle="""
-SELECT word, COUNT(*) AS cnt
-FROM (SELECT UNNEST(regexp_split_to_array(text, '\\s+')) AS word FROM documents)
-WHERE word <> ''
-GROUP BY word
-""",
+    oracle=_WORDCOUNT_ORACLE,
 )
 def mr_wordcount_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count through the MapReduce compat runner (mapper emits
@@ -147,12 +143,7 @@ def _pickle_wc_mapper(key, value):
 
 @query(
     "mr_pickle_compat",
-    oracle="""
-SELECT word, COUNT(*) AS cnt
-FROM (SELECT UNNEST(regexp_split_to_array(text, '\\s+')) AS word FROM documents)
-WHERE word <> ''
-GROUP BY word
-""",
+    oracle=_WORDCOUNT_ORACLE,
 )
 def mr_pickle_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-mode record reader (reference tasktracker.py:48-51,111-117)

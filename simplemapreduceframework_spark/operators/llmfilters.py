@@ -13,8 +13,8 @@ Scale notes per operator:
 
 - ``text_pii_scrub`` is purely row-local (regexp count + chained
   redaction) — zero shuffles, embarrassingly parallel at 100 TB.
-- ``text_repetition_filter`` is two per-doc aggregations (token counts,
-  bigram counts) — every shuffle is keyed by doc_id, no global state.
+- ``text_repetition_filter`` is a row-local projection over each
+  document's token and bigram arrays — no shuffle, no global state.
 - ``text_decontaminate`` is an inverted-index equi-join on the n-gram:
   the benchmark side is tiny (the held-out eval set) so Spark
   broadcasts it; the training side streams through one scan. No cross
@@ -212,72 +212,19 @@ hits AS (
 )"""
 
 
-def _rep_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw groupBy formulation of the repetition metrics (the
-    Spark twin of the `rep` CTE): one row per document that has at
-    least one token, columns (doc_id, n_tok, n_distinct,
-    distinct_ratio, top_token_frac, top_bigram_frac, keep).
+def _tokens() -> Column:
+    """The lower-cased \\w+ token array ``t`` of ``text`` — the Spark
+    twin of the `toks` CTE."""
+    return tokens_regex(F.lower(F.col("text"))).alias("t")
 
-    Every ratio divides identical integers so the doubles (and the
-    threshold booleans) match DuckDB bit-for-bit. Shape at scale: one
-    groupBy (doc_id, word) + one groupBy (doc_id, bigram), both rolled
-    up per doc — all shuffles keyed by doc_id, state bounded by the
-    document's own vocabulary, no global structures. Consumers go
-    through _hygiene_verdicts_shared, which materializes this pass
-    once per (session, sf_dir) for the whole hygiene family.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    )
-    tcnt = (
-        toks.select("doc_id", F.explode("t").alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tagg = tcnt.groupBy("doc_id").agg(
-        F.sum("c").cast("bigint").alias("n_tok"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.max("c").cast("bigint").alias("top_tok"),
-    )
-    bcnt = (
-        toks.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-                )
-            ).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bagg = bcnt.groupBy("doc_id").agg(
-        F.max("c").cast("bigint").alias("top_big"),
-        F.sum("c").cast("bigint").alias("n_big"),
-    )
-    dr = F.col("n_distinct").cast("double") / F.col("n_tok")
-    tf = F.col("top_tok").cast("double") / F.col("n_tok")
-    bf = F.coalesce(F.col("top_big"), F.lit(0)).cast("double") / F.greatest(
-        F.coalesce(F.col("n_big"), F.lit(0)), F.lit(1)
-    )
-    return (
-        tagg.join(bagg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tok",
-            "n_distinct",
-            dr.alias("distinct_ratio"),
-            tf.alias("top_token_frac"),
-            bf.alias("top_bigram_frac"),
-            (
-                (dr >= _REP_MIN_DISTINCT_RATIO)
-                & (tf <= _REP_MAX_TOP_TOKEN_FRAC)
-                & (bf <= _REP_MAX_TOP_BIGRAM_FRAC)
-            ).alias("keep"),
-        )
+
+def _ngrams(n: int) -> Column:
+    """Every token n-gram of ``t``, space-joined and in order — the
+    Spark twin of the CTEs' list_transform. Callers guard
+    size(t) >= n: sequence() counts DOWN when size(t) < n."""
+    return F.expr(
+        f"transform(sequence(1, size(t) - {n - 1}), "
+        f"i -> array_join(slice(t, i, {n}), ' '))"
     )
 
 
@@ -301,15 +248,19 @@ def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination hit count (null where the inverted-index join found
     no shared gram, and for benchmark docs themselves).
 
-    text_repetition_filter, text_decontaminate, pipeline_hygiene,
-    pipeline_chunked_corpus, and corpus_health_report all serve from
-    this frame, so the explode+groupBy token pass and the n-gram
-    inverted-index join are paid once per session instead of once per
-    query (measured r13: the three headline consumers drop from a
-    2.1 s best-sum to 0.65 s once the frame is warm). At 100 TB the
-    frame is one narrow row per document — bounded per-doc state, no
-    token arrays — i.e. the checkpointed verdict table a production
-    pipeline would persist between hygiene stages anyway.
+    The repetition metrics are repetition_metrics_row_local's — the
+    same projection streaming_hygiene_live runs — and the hit count is
+    _decon_hits, the gram join decontaminate_joined also runs; neither
+    shuffles by (doc_id, token). text_repetition_filter,
+    text_decontaminate, pipeline_hygiene, pipeline_chunked_corpus, and
+    corpus_health_report all serve from this frame, so the token pass
+    and the n-gram inverted-index join are paid once per session
+    instead of once per query (measured r13: the three headline
+    consumers drop from a 2.1 s best-sum to 0.65 s once the frame is
+    warm). At 100 TB the frame is one narrow row per document —
+    bounded per-doc state, no token arrays — i.e. the checkpointed
+    verdict table a production pipeline would persist between hygiene
+    stages anyway.
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
@@ -319,16 +270,31 @@ def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("text").alias("content_md5"),
             (F.col("doc_id") % _DECON_MOD == 0).alias("is_bench"),
         )
-        .join(_rep_metrics(spark, sf_dir), "doc_id", "left")
-        .join(_decon_hits(spark, sf_dir), "doc_id", "left")
+        .join(repetition_metrics_row_local(docs), "doc_id", "left")
+        .join(
+            _decon_hits(docs, benchmark_grams_df(spark, sf_dir)),
+            "doc_id",
+            "left",
+        )
     )
 
 
-@query(
-    "text_repetition_filter",
-    family="hygiene",
-    oracle=f"WITH {_TOKS_CTE},\n{_REP_CTES}\nSELECT * FROM rep",
-)
+# The batch queries' oracles, shared with their streaming twins
+# (streaming_hygiene_live, streaming_decontaminate_live).
+_REP_ORACLE = f"WITH {_TOKS_CTE},\n{_REP_CTES}\nSELECT * FROM rep"
+
+_DECON_ORACLE = rf"""
+WITH {_TOKS_CTE},
+{_DECON_CTES}
+SELECT d.doc_id,
+       CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared,
+       COALESCE(h.n_shared, 0) > 0 AS contaminated
+FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
+WHERE d.doc_id % {_DECON_MOD} <> 0
+"""
+
+
+@query("text_repetition_filter", family="hygiene", oracle=_REP_ORACLE)
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter: per-document distinct-token
     ratio, most-frequent-token fraction, and most-frequent-bigram
@@ -337,27 +303,16 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serves from the session's shared hygiene verdict frame
     (_hygiene_verdicts_shared); n_tok IS NOT NULL restores the `rep`
     CTE's row set exactly (a rep row exists iff the document produced
-    at least one token, and n_tok — a SUM over those rows — is
-    non-null exactly there). The formulas themselves live in
-    _rep_metrics, unchanged.
+    at least one token, and repetition_metrics_row_local emits a row,
+    so n_tok is non-null, exactly there). The formulas themselves live
+    in repetition_metrics_row_local, which streaming_hygiene_live runs
+    on a live stream against this same oracle.
     """
     shared = _hygiene_verdicts_shared(spark, sf_dir)
     return shared.filter(F.col("n_tok").isNotNull()).select(*_REP_COLS)
 
 
-@query(
-    "text_decontaminate",
-    family="hygiene",
-    oracle=rf"""
-WITH {_TOKS_CTE},
-{_DECON_CTES}
-SELECT d.doc_id,
-       CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared,
-       COALESCE(h.n_shared, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-WHERE d.doc_id % {_DECON_MOD} <> 0
-""",
-)
+@query("text_decontaminate", family="hygiene", oracle=_DECON_ORACLE)
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents that share a
     token n-gram with the held-out benchmark set (here the deterministic
@@ -374,8 +329,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row-per-training-doc set (the frame has a row for EVERY
     document, including token-less ones, exactly like the oracle's
     `documents d LEFT JOIN hits`), and coalescing the left-joined hit
-    count to 0 is the same expression the pre-shared formulation
-    applied. The join itself lives in _decon_hits, unchanged.
+    count to 0 is the same expression decontaminate_joined applies to
+    the same hits-only join, _decon_hits.
     """
     shared = _hygiene_verdicts_shared(spark, sf_dir)
     return shared.filter(~F.col("is_bench")).select(
@@ -385,45 +340,32 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decon_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _decon_hits(docs: DataFrame, bench_grams: DataFrame) -> DataFrame:
     """The contamination inverted-index join (the Spark twin of the
     `hits` CTE): (doc_id, n_shared) for every TRAINING document that
-    shares at least one distinct token 5-gram with the benchmark
-    residue class. Docs with no shared gram (and benchmark docs)
-    simply have no row — consumers left-join and coalesce.
+    shares at least one distinct token 5-gram with ``bench_grams``
+    (column ``g``). Docs with no shared gram (and benchmark docs)
+    simply have no row — the hygiene frame keeps that null (so
+    corpus_health_report counts non-null hits), decontaminate_joined
+    coalesces it to 0.
 
-    Shape at scale: distinct per-doc n-grams on both sides, then an
-    equi-join on the gram — an inverted index, not an all-pairs
-    comparison. The benchmark side is the eval corpus (tiny next to
-    100 TB of training text), so Spark broadcasts it; the training side
-    never materializes more than its own distinct grams per doc.
+    Shape at scale: each training doc's distinct grams come from one
+    row-local array_distinct (no shuffle), then one equi-join on the
+    gram — an inverted index, not an all-pairs comparison. Spark
+    broadcasts the benchmark side when it fits (the eval corpus is
+    tiny next to 100 TB of training text) and shuffle-joins it when it
+    does not, so the set never has to fit on the driver; one
+    partial-aggregated count per doc follows.
     """
-    docs = load_table(spark, sf_dir, "documents")
     n = _DECON_NGRAM
-    toks = docs.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    )
     grams = (
-        toks.filter(F.size("t") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {n - 1}), "
-                    f"i -> array_join(slice(t, i, {n}), ' '))"
-                )
-            ).alias("g"),
-        )
-        .distinct()
-    )
-    bench = (
-        grams.filter(F.col("doc_id") % _DECON_MOD == 0)
-        .select("g")
-        .distinct()
+        docs.filter(F.col("doc_id") % _DECON_MOD != 0)
+        .select("doc_id", _tokens())
+        .filter(F.size("t") >= n)
+        .select("doc_id", F.explode(F.array_distinct(_ngrams(n))).alias("g"))
     )
     return (
-        grams.filter(F.col("doc_id") % _DECON_MOD != 0)
-        .join(F.broadcast(bench), "g")
+        grams.join(bench_grams.select("g").distinct(), "g")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
     )
@@ -507,18 +449,20 @@ def repetition_metrics_row_local(docs: DataFrame) -> DataFrame:
     """The repetition metrics as STATELESS per-row array expressions —
     the streaming formulation: because every metric is a function of
     one document, the whole filter is a projection (append-mode
-    streamable, no state store, no watermark). Same columns, same
-    integer divisions, same thresholds as text_repetition_filter's
-    groupBy formulation; streaming_hygiene_live hash-matches both
-    against the one shared oracle, proving the two formulations agree.
+    streamable, no state store, no watermark). It is the one Spark
+    formulation of the `rep` CTE: the hygiene frame behind
+    text_repetition_filter joins it on a batch frame and
+    streaming_hygiene_live runs it on a live stream, both gated by the
+    one shared oracle.
 
     The per-token max frequency is the longest equal-run in the SORTED
     array, computed by a single struct-accumulator fold — O(n log n)
     per document, so the row-local path stays safe even for
     pathologically long documents (an O(distinct * n) transform/filter
-    scan would go quadratic there). Measured ~2.5x faster than the
-    groupBy formulation at sf0.1 as well: for bounded-length docs the
-    per-row fold beats two explode+shuffle rounds.
+    scan would go quadratic there). Measured ~2.5x faster at sf0.1
+    than the explode+groupBy formulation it replaced: for
+    bounded-length docs the per-row fold beats two explode+shuffle
+    rounds.
     """
     # longest run of equal values in a sorted array: fold with
     # (prev, run, best) state; "" never equals a \w+ token.
@@ -531,18 +475,14 @@ def repetition_metrics_row_local(docs: DataFrame) -> DataFrame:
         "  'best', greatest(acc.best, IF(x = acc.prev, acc.run + 1, 1L))), "
         "acc -> acc.best)"
     )
-    toks = docs.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    ).filter(F.col("t").isNotNull() & (F.size("t") >= 1))
+    toks = docs.select("doc_id", _tokens()).filter(
+        F.col("t").isNotNull() & (F.size("t") >= 1)
+    )
     with_big = toks.withColumn(
         "bg",
-        F.when(
-            F.size("t") >= 2,
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-            ),
-        ).otherwise(F.expr("CAST(array() AS array<string>)")),
+        F.when(F.size("t") >= 2, _ngrams(2)).otherwise(
+            F.expr("CAST(array() AS array<string>)")
+        ),
     )
     counts = with_big.select(
         "doc_id",
@@ -602,20 +542,9 @@ def decontaminate_row_local(
         ).astype("int64")
 
     train = docs.filter(F.col("doc_id") % _DECON_MOD != 0)
-    toks = train.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    )
-    grams = toks.select(
+    grams = train.select("doc_id", _tokens()).select(
         "doc_id",
-        F.when(
-            F.size("t") >= n,
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {n - 1}), "
-                    f"i -> array_join(slice(t, i, {n}), ' '))"
-                )
-            ),
-        )
+        F.when(F.size("t") >= n, F.array_distinct(_ngrams(n)))
         .otherwise(F.expr("CAST(array() AS array<string>)"))
         .alias("gs"),
     )
@@ -631,47 +560,21 @@ def decontaminate_row_local(
 def decontaminate_joined(
     docs: DataFrame, bench_grams: DataFrame
 ) -> DataFrame:
-    """The contamination check as a gram-keyed JOIN: explode each
-    training doc's distinct 5-grams and equi-join them against a
-    benchmark gram FRAME — the set never touches the driver, so an
-    adversarially large benchmark (a leaked training shard registered
-    as an "eval set") cannot OOM it. Same filter, output columns, and
-    membership semantics as decontaminate_row_local; the equivalence
-    test pins both formulations rowwise-identical.
-
-    Shape at scale: distinct per-doc grams on the training side only,
-    one equi-join on the gram (Spark broadcasts the benchmark side when
-    it fits, shuffle-joins when it doesn't — exactly the adaptive
-    behavior the driver-collect path forfeits), one partial-agg count
-    per doc.
+    """The contamination check as a gram-keyed JOIN: the hits-only
+    inverted-index join (_decon_hits — the same join the hygiene frame
+    runs) against a benchmark gram FRAME, left-joined back onto every
+    training doc with the count coalesced to 0. The set never touches
+    the driver, so an adversarially large benchmark (a leaked training
+    shard registered as an "eval set") cannot OOM it — exactly the
+    adaptive broadcast-or-shuffle behavior the driver-collect path
+    forfeits. Same filter, output columns, and membership semantics as
+    decontaminate_row_local; the equivalence test pins both
+    formulations rowwise-identical.
     """
-    n = _DECON_NGRAM
-    train = docs.filter(F.col("doc_id") % _DECON_MOD != 0)
-    toks = train.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("t") >= n,
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, size(t) - {n - 1}), "
-                        f"i -> array_join(slice(t, i, {n}), ' '))"
-                    )
-                ),
-            ).otherwise(F.expr("CAST(array() AS array<string>)"))
-        ).alias("g"),
-    )
-    hits = (
-        grams.join(bench_grams.select("g").distinct(), "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
     return (
-        train.select("doc_id")
-        .join(hits, "doc_id", "left")
+        docs.filter(F.col("doc_id") % _DECON_MOD != 0)
+        .select("doc_id")
+        .join(_decon_hits(docs, bench_grams), "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("n_shared", F.lit(0))
@@ -717,20 +620,11 @@ def benchmark_grams_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``g``) — the join-side index for decontaminate_joined and the
     source decontaminate()/benchmark_gram_set() collect from."""
     docs = load_table(spark, sf_dir, "documents")
-    n = _DECON_NGRAM
-    toks = docs.filter(F.col("doc_id") % _DECON_MOD == 0).select(
-        tokens_regex(F.lower(F.col("text"))).alias("t")
-    )
     return (
-        toks.filter(F.size("t") >= n)
-        .select(
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {n - 1}), "
-                    f"i -> array_join(slice(t, i, {n}), ' '))"
-                )
-            ).alias("g")
-        )
+        docs.filter(F.col("doc_id") % _DECON_MOD == 0)
+        .select(_tokens())
+        .filter(F.size("t") >= _DECON_NGRAM)
+        .select(F.explode(_ngrams(_DECON_NGRAM)).alias("g"))
         .distinct()
     )
 
@@ -783,9 +677,9 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
-    toks = docs.select(
-        "doc_id", tokens_regex(F.lower(F.col("text"))).alias("t")
-    ).filter(F.col("t").isNotNull() & (F.size("t") >= 1))
+    toks = docs.select("doc_id", _tokens()).filter(
+        F.col("t").isNotNull() & (F.size("t") >= 1)
+    )
     base = toks.withColumn(
         "n_chunks",
         F.when(F.size("t") <= size, F.lit(1)).otherwise(
@@ -866,9 +760,7 @@ def pipeline_chunked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.coalesce("n_shared", F.lit(0)) == 0)
     ).select("doc_id")
     kept = (
-        docs.select(
-            "doc_id", "source", tokens_regex(F.lower(F.col("text"))).alias("t")
-        )
+        docs.select("doc_id", "source", _tokens())
         .join(verdicts, "doc_id")
         .filter(F.size("t") >= 1)
         .withColumn(

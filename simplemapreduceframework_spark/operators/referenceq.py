@@ -32,14 +32,19 @@ def _words_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "wordcount",
-    oracle="""
+# Shared with the compat runner's word counts (mr_wordcount_compat,
+# mr_pickle_compat): one oracle for every formulation of the job.
+_WORDCOUNT_ORACLE = """
 SELECT word, COUNT(*) AS cnt
 FROM (SELECT UNNEST(regexp_split_to_array(text, '\\s+')) AS word FROM documents)
 WHERE word <> ''
 GROUP BY word
-""",
+"""
+
+
+@query(
+    "wordcount",
+    oracle=_WORDCOUNT_ORACLE,
 )
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT word, COUNT(*) GROUP BY word — the reference's flagship

@@ -666,7 +666,8 @@ sql_query(
     a single TakeOrdered row plus a count — never a global sort; at
     100 TB the same report runs with approx top-k (CMS heavy hitters)
     per the cms_heavy_hitters pattern. Ratios divide identical
-    integers. Identical SQL text on both engines.
+    integers. Spark runs _SKEW_ENGINE_SQL, the oracle text with the
+    dialect's string cast (AS STRING for AS VARCHAR).
     """)
 
 _Q41_SQL = """
@@ -772,7 +773,9 @@ sql_query(
     no per-metric sort of the full table beyond the three in-group
     percentile sorts. Recency is integer epoch-day arithmetic with the
     explicit FLOOR (DuckDB double->bigint casts round, Spark
-    truncates). Identical SQL text on both engines.
+    truncates). Spark runs _RFM_ENGINE_SQL, the oracle text with the
+    dialect's epoch and integer division (unix_timestamp( for epoch(,
+    div for //).
     """)
 
 _Q42_SQL = """

@@ -900,6 +900,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flips the gate: measured recall on the synthetic corpus is 0.88-0.92.
 _RECALL_FLOOR = 0.85
 
+# The constant-true oracle every recall gate hashes against.
+_RECALL_GATE_ORACLE = f"""
+SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
+"""
+
 
 def _recall_gate_row(approx: DataFrame, exact: DataFrame, floor: float) -> DataFrame:
     """One-row gate: |approx ∩ exact| / |exact| >= floor as a boolean.
@@ -928,9 +933,7 @@ def _recall_gate_row(approx: DataFrame, exact: DataFrame, floor: float) -> DataF
 @query(
     "ann_ivf_recall_gate",
     family="ivf",
-    oracle=f"""
-SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
-""",
+    oracle=_RECALL_GATE_ORACLE,
 )
 def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible gate for IVF (same pattern as
@@ -948,9 +951,7 @@ def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_search_ivf_gate",
     family="ivf",
-    oracle=f"""
-SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
-""",
+    oracle=_RECALL_GATE_ORACLE,
 )
 def ann_search_ivf_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible gate for the IVF-backed *batch search API*
@@ -978,9 +979,7 @@ def ann_search_ivf_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_indexed_gate",
-    oracle=f"""
-SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
-""",
+    oracle=_RECALL_GATE_ORACLE,
 )
 def ann_ivf_indexed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible gate for the PERSISTED index lifecycle:
@@ -1110,9 +1109,7 @@ def _dequantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_quantized_gate",
-    oracle=f"""
-SELECT CAST({_N_QUERIES} AS BIGINT) AS n_queries, TRUE AS recall_ok
-""",
+    oracle=_RECALL_GATE_ORACLE,
 )
 def ann_quantized_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible gate closing the quantization lifecycle: searching

@@ -17,6 +17,7 @@ from ..registry import query
 from ..functions.scale import broadcast_dim, table_rows
 from ..session_memo import per_session
 from ..sources import load_table
+from .llmfilters import _DECON_ORACLE, _REP_ORACLE
 
 
 @query(
@@ -140,27 +141,21 @@ def events_session_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts < previous_end (= prev_ts + gap), i.e. a gap of exactly 10:00
     starts a new session — the oracle's gaps-and-islands uses `>=`
     accordingly. Session end = last event + gap in both.
+
+    Runs the same builder as streaming_session_live
+    (streaming.sessionized_stream) on the batch table: Spark's
+    EliminateEventTimeWatermark rule drops its withWatermark on a
+    non-streaming frame, so the batch plan is a plain session_window
+    aggregation.
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "10 minutes").alias("sw"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format(F.col("sw.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_start"
-            ),
-            F.date_format(F.col("sw.end"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_end"
-            ),
-            "n_events",
-        )
-    )
+    from ..streaming import sessionized_stream
+
+    return sessionized_stream(load_table(spark, sf_dir, "events"))
 
 
-@query(
-    "events_range_join",
-    oracle="""
+# Shared by events_range_join, its live twin events_stream_join_live
+# and its bucketed formulation events_range_join_bucketed.
+_RANGE_JOIN_ORACLE = """
 SELECT e.event_id AS error_id,
        p.event_id AS purchase_id,
        e.user_id,
@@ -171,8 +166,10 @@ JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
   ON e.user_id = p.user_id
  AND p.ts >= e.ts - INTERVAL 30 MINUTE
  AND p.ts <= e.ts
-""",
-)
+"""
+
+
+@query("events_range_join", oracle=_RANGE_JOIN_ORACLE)
 def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: every purchase within the 30 minutes before each
     error, per user (the batch form of a stream-stream interval join).
@@ -181,38 +178,17 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate evaluates as a post-join filter within each user's
     co-partitioned rows — no cross join. At 100 TB add a coarse time-
     bucket to the join key so each side co-partitions by (user, hour)
-    and the range only scans adjacent buckets.
+    and the range only scans adjacent buckets
+    (events_range_join_bucketed).
+
+    Runs the same builder as events_stream_join_live
+    (streaming.interval_join_stream) on the batch table: Spark's
+    EliminateEventTimeWatermark rule drops both sides' withWatermark on
+    a non-streaming frame, so the batch plan is the plain range join.
     """
-    ev = load_table(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        F.col("user_id"),
-        F.col("ts").alias("ets"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("pts"),
-        F.col("value").alias("purchase_value"),
-    )
-    joined = errors.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("pts") >= F.col("ets") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("pts") <= F.col("ets")),
-    )
-    # integer microsecond subtraction first, ONE float division after —
-    # the same op order as the oracle's EXTRACT(EPOCH FROM interval)
-    secs = (
-        (F.unix_micros("ets") - F.unix_micros("pts")).cast("double") / 1_000_000.0
-    )
-    return joined.select(
-        "error_id",
-        "purchase_id",
-        "user_id",
-        secs.alias("seconds_before_error"),
-        "purchase_value",
-    )
+    from ..streaming import interval_join_stream
+
+    return interval_join_stream(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -281,28 +257,15 @@ def streaming_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(deduped, spark, output_mode="append")
 
 
-@query(
-    "events_stream_join_live",
-    oracle="""
-SELECT e.event_id AS error_id,
-       p.event_id AS purchase_id,
-       e.user_id,
-       CAST(EXTRACT(EPOCH FROM e.ts - p.ts) AS DOUBLE) AS seconds_before_error,
-       p.value AS purchase_value
-FROM (SELECT * FROM events WHERE event_type = 'error') e
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON e.user_id = p.user_id
- AND p.ts >= e.ts - INTERVAL 30 MINUTE
- AND p.ts <= e.ts
-""",
-)
+@query("events_stream_join_live", oracle=_RANGE_JOIN_ORACLE)
 def events_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live stream-stream interval join (watermarked on both sides,
     time-bounded condition -> bounded buffer state).
 
-    Oracle-gated with the same SQL as the batch events_range_join: on a
-    static availableNow source every match is emitted before the final
-    watermark advance, so the streamed inner join equals the batch join.
+    Oracle-gated with the same SQL as the batch events_range_join,
+    which runs the same builder: on a static availableNow source every
+    match is emitted before the final watermark advance, so the
+    streamed inner join equals the batch join.
     """
     from ..streaming import interval_join_stream, read_events_stream, run_available_now
 
@@ -360,13 +323,7 @@ def streaming_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(sessionized_stream(events), spark)
 
 
-def _hygiene_oracle() -> str:
-    from .llmfilters import _REP_CTES, _TOKS_CTE
-
-    return f"WITH {_TOKS_CTE},\n{_REP_CTES}\nSELECT * FROM rep"
-
-
-@query("streaming_hygiene_live", oracle=_hygiene_oracle())
+@query("streaming_hygiene_live", oracle=_REP_ORACLE)
 def streaming_hygiene_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hygiene-at-ingest: the repetition filter applied to a LIVE
     document stream — readStream(parquet) -> stateless per-row metrics
@@ -376,10 +333,10 @@ def streaming_hygiene_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming formulation is a pure projection over per-row arrays
     (llmfilters.repetition_metrics_row_local): append output mode, no
     state store, no watermark — the filter runs at ingest wire speed
-    with zero streaming state at any scale. Gated against the SAME
-    oracle as the batch text_repetition_filter (whose engine side is a
-    groupBy), so one hash-match proves batch formulation == streaming
-    formulation == oracle.
+    with zero streaming state at any scale. The batch
+    text_repetition_filter serves the same projection from the hygiene
+    frame and is gated against the SAME oracle, so one hash-match
+    proves batch == streaming == oracle.
     """
     from ..streaming import read_table_stream, run_available_now
     from .llmfilters import repetition_metrics_row_local
@@ -389,21 +346,7 @@ def streaming_hygiene_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(out, spark, output_mode="append")
 
 
-def _decon_oracle() -> str:
-    from .llmfilters import _DECON_CTES, _DECON_MOD, _TOKS_CTE
-
-    return rf"""
-WITH {_TOKS_CTE},
-{_DECON_CTES}
-SELECT d.doc_id,
-       CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared,
-       COALESCE(h.n_shared, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-WHERE d.doc_id % {_DECON_MOD} <> 0
-"""
-
-
-@query("streaming_decontaminate_live", oracle=_decon_oracle())
+@query("streaming_decontaminate_live", oracle=_DECON_ORACLE)
 def streaming_decontaminate_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination at ingest: a LIVE document stream checked
     against the static benchmark gram set — readStream(parquet) ->
@@ -507,21 +450,7 @@ def streaming_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(enriched, spark, output_mode="append")
 
 
-@query(
-    "events_range_join_bucketed",
-    oracle="""
-SELECT e.event_id AS error_id,
-       p.event_id AS purchase_id,
-       e.user_id,
-       CAST(EXTRACT(EPOCH FROM e.ts - p.ts) AS DOUBLE) AS seconds_before_error,
-       p.value AS purchase_value
-FROM (SELECT * FROM events WHERE event_type = 'error') e
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON e.user_id = p.user_id
- AND p.ts >= e.ts - INTERVAL 30 MINUTE
- AND p.ts <= e.ts
-""",
-)
+@query("events_range_join_bucketed", oracle=_RANGE_JOIN_ORACLE)
 def events_range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB formulation of events_range_join (same oracle, same
     rows): widen the equi-key with a coarse 30-minute time bucket so
@@ -842,25 +771,10 @@ def streaming_mv_refresh_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .timeseries import _CONTRIB_CAP  # noqa: E402
+from .timeseries import _CAPPED_ORACLE, _capped_rollup  # noqa: E402
 
 
-@query(
-    "streaming_capped_contrib_live",
-    oracle=f"""
-WITH per_user AS (
-    SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
-    FROM events GROUP BY user_id, event_type
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_users,
-       CAST(SUM(n) AS BIGINT) AS raw_events,
-       CAST(SUM(LEAST(n, {_CONTRIB_CAP})) AS BIGINT) AS capped_events,
-       CAST(COUNT(CASE WHEN n > {_CONTRIB_CAP} THEN 1 END) AS BIGINT)
-           AS n_capped_users
-FROM per_user GROUP BY event_type
-""",
-)
+@query("streaming_capped_contrib_live", oracle=_CAPPED_ORACLE)
 def streaming_capped_contrib_live(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -880,14 +794,4 @@ def streaming_capped_contrib_live(
     counts = events.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    final = run_available_now(counts, spark)
-    return final.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("n").cast("bigint").alias("raw_events"),
-        F.sum(F.least(F.col("n"), F.lit(_CONTRIB_CAP)))
-        .cast("bigint")
-        .alias("capped_events"),
-        F.count(F.when(F.col("n") > _CONTRIB_CAP, 1))
-        .cast("bigint")
-        .alias("n_capped_users"),
-    )
+    return _capped_rollup(run_available_now(counts, spark))

@@ -730,10 +730,8 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CONTRIB_CAP = 20
 
-
-@query(
-    "events_capped_contributions",
-    oracle=f"""
+# Shared with the live twin streaming_capped_contrib_live.
+_CAPPED_ORACLE = f"""
 WITH per_user AS (
     SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
     FROM events GROUP BY user_id, event_type
@@ -745,8 +743,29 @@ SELECT event_type,
        CAST(COUNT(CASE WHEN n > {_CONTRIB_CAP} THEN 1 END) AS BIGINT)
            AS n_capped_users
 FROM per_user GROUP BY event_type
-""",
-)
+"""
+
+
+def _capped_rollup(per_user: DataFrame) -> DataFrame:
+    """The cap-and-rollup over per-(user_id, event_type) counts ``n``:
+    per event type, the user count, raw and capped event totals, and
+    how many users hit _CONTRIB_CAP. Shared by the batch
+    events_capped_contributions and the live
+    streaming_capped_contrib_live, which differ only in where the
+    counts come from (a table scan, or a drained stream aggregation)."""
+    return per_user.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_users"),
+        F.sum("n").cast("bigint").alias("raw_events"),
+        F.sum(F.least(F.col("n"), F.lit(_CONTRIB_CAP)))
+        .cast("bigint")
+        .alias("capped_events"),
+        F.count(F.when(F.col("n") > _CONTRIB_CAP, 1))
+        .cast("bigint")
+        .alias("n_capped_users"),
+    )
+
+
+@query("events_capped_contributions", oracle=_CAPPED_ORACLE)
 def events_capped_contributions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -771,16 +790,7 @@ def events_capped_contributions(
     per_user = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    return per_user.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("n").cast("bigint").alias("raw_events"),
-        F.sum(F.least(F.col("n"), F.lit(_CONTRIB_CAP)))
-        .cast("bigint")
-        .alias("capped_events"),
-        F.count(F.when(F.col("n") > _CONTRIB_CAP, 1))
-        .cast("bigint")
-        .alias("n_capped_users"),
-    )
+    return _capped_rollup(per_user)
 
 
 @query(

@@ -121,7 +121,9 @@ def sliding_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataF
 
 def sessionized_stream(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
     """Session windows (gap-based) per user — Spark's native stateful
-    session operator; state per open session, closed by watermark."""
+    session operator; state per open session, closed by watermark. The
+    batch events_session_10m runs this builder too: on a batch frame
+    Spark's EliminateEventTimeWatermark rule drops the watermark."""
     return (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", gap), F.col("user_id"))
@@ -152,8 +154,10 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 def interval_join_stream(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each error joined to the purchases
-    that preceded it by at most 30 minutes, per user — the live form of
-    operators/streamingq.py:events_range_join.
+    that preceded it by at most 30 minutes, per user. The live
+    events_stream_join_live and the batch events_range_join both run
+    it; on a batch frame Spark's EliminateEventTimeWatermark rule drops
+    the watermarks and the plan is the plain range join.
 
     Both sides carry watermarks and the join condition is time-bounded,
     so each side buffers at most (watermark + interval) of state and
@@ -184,6 +188,8 @@ def interval_join_stream(events: DataFrame) -> DataFrame:
         & (F.col("pts") >= F.col("ets") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("pts") <= F.col("ets")),
     )
+    # integer microsecond subtraction first, ONE float division after —
+    # the same op order as the oracle's EXTRACT(EPOCH FROM interval)
     secs = (
         (F.unix_micros("ets") - F.unix_micros("pts")).cast("double") / 1_000_000.0
     )
@@ -238,9 +244,8 @@ def run_available_now(
     a static complete file set means none).
 
     state_store selects the state backend for this run ("rocksdb" or
-    default); unset, it falls back to $SMRF_STATE_STORE so a deployment
-    can flip the whole streaming tier to RocksDB without code changes.
-    Results are provider-independent (pinned by tests under both).
+    default). Results are provider-independent (pinned by tests under
+    both).
     """
     name = f"{table_prefix}_{uuid.uuid4().hex[:8]}"
     mode = output_mode or ("complete" if result.isStreaming else "append")
@@ -250,12 +255,8 @@ def run_available_now(
     # stream. Pin a modest count for the run (results are partition-
     # count invariant — pinned by the oracle gates and stress probes)
     # and restore the caller's setting afterwards.
-    import os
-
     overrides: dict[str, str] = {"spark.sql.shuffle.partitions": "16"}
-    overrides.update(
-        state_store_confs(state_store or os.environ.get("SMRF_STATE_STORE"))
-    )
+    overrides.update(state_store_confs(state_store))
     prev: dict[str, str | None] = {}
     for k, v in overrides.items():
         prev[k] = spark.conf.get(k, None)

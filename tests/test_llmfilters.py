@@ -98,9 +98,15 @@ def test_decontaminate_broadcasts_benchmark_side(spark, sf_dir):
     # directly: the registered query serves from the shared hygiene
     # frame, whose physical plan collapses to an InMemoryTableScan
     # once another family member has materialized it
-    from simplemapreduceframework_spark.operators.llmfilters import _decon_hits
+    from simplemapreduceframework_spark.operators.llmfilters import (
+        _decon_hits,
+        benchmark_grams_df,
+    )
+    from simplemapreduceframework_spark.sources import load_table
 
-    df = _decon_hits(spark, sf_dir)
+    df = _decon_hits(
+        load_table(spark, sf_dir, "documents"), benchmark_grams_df(spark, sf_dir)
+    )
     assert has_broadcast_hash_join(df), explain_str(df)
 
 
@@ -208,8 +214,9 @@ def test_pii_patterns_property(spark):
 
 
 def test_repetition_row_local_equals_groupby_formulation(spark, sf_dir):
-    """The streaming (row-local array) and batch (groupBy) formulations
-    of the repetition metrics must agree row-for-row on the corpus."""
+    """The row-local array formulation of the repetition metrics (the
+    one streaming_hygiene_live runs) and the batch query serving them
+    from the hygiene frame must agree row-for-row on the corpus."""
     from simplemapreduceframework_spark.operators.llmfilters import (
         repetition_metrics_row_local,
         text_repetition_filter,
@@ -331,13 +338,15 @@ def test_hygiene_family_shares_one_persisted_frame(spark, sf_dir):
 def test_hygiene_shared_frame_restores_row_sets_exactly(spark, sf_dir):
     """The exactness contract behind serving the standalone queries
     from the one-row-per-document shared frame: the n_tok IS NOT NULL
-    filter restores _rep_metrics' row set (docs with >= 1 token), and
-    ~is_bench + coalesce restores the decontaminate oracle's
-    documents-LEFT JOIN-hits shape, including zero-hit docs."""
+    filter restores repetition_metrics_row_local's row set (docs with
+    >= 1 token), and ~is_bench + coalesce restores the decontaminate
+    oracle's documents-LEFT JOIN-hits shape, including zero-hit docs."""
     from simplemapreduceframework_spark.operators import llmfilters as lf
+    from simplemapreduceframework_spark.sources import load_table
 
+    docs = load_table(spark, sf_dir, "documents")
     rep_direct = {
-        tuple(r) for r in lf._rep_metrics(spark, sf_dir).collect()
+        tuple(r) for r in lf.repetition_metrics_row_local(docs).collect()
     }
     rep_shared = {
         tuple(r) for r in Q["text_repetition_filter"](spark, sf_dir).collect()
@@ -346,17 +355,16 @@ def test_hygiene_shared_frame_restores_row_sets_exactly(spark, sf_dir):
 
     hits = {
         r["doc_id"]: r["n_shared"]
-        for r in lf._decon_hits(spark, sf_dir).collect()
+        for r in lf._decon_hits(
+            docs, lf.benchmark_grams_df(spark, sf_dir)
+        ).collect()
     }
     dec = Q["text_decontaminate"](spark, sf_dir).collect()
     # every training doc appears exactly once, with the hit count
     # coalesced to 0 where the inverted-index join found nothing
-    from simplemapreduceframework_spark.sources import load_table
-
     train_ids = {
         r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % lf._DECON_MOD != 0)
+        for r in docs.filter(F.col("doc_id") % lf._DECON_MOD != 0)
         .select("doc_id")
         .collect()
     }

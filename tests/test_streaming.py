@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from simplemapreduceframework_spark import registry
 from simplemapreduceframework_spark.streaming import (
+    interval_join_stream,
     read_events_stream,
     run_available_now,
     sessionized_stream,
@@ -46,6 +47,26 @@ def test_streaming_sessions_equal_batch(spark, sf_dir):
     batch = Q["events_session_10m"](spark, sf_dir)
     cols = ["user_id", "session_start", "session_end", "n_events"]
     assert _rows(live, cols) == _rows(batch, cols)
+
+
+@pytest.mark.parametrize(
+    "name, builder",
+    [
+        ("events_session_10m", sessionized_stream),
+        ("events_range_join", interval_join_stream),
+    ],
+)
+def test_batch_twin_plan_has_no_event_time_watermark(spark, sf_dir, name, builder):
+    """The batch queries run their live twins' builders, whose
+    withWatermark Spark drops from a batch plan
+    (EliminateEventTimeWatermark). If Spark ever keeps the node, the
+    batch form would plan a stream operator: fail here. The same
+    builder on a stream must show the node, so the check looks for the
+    name Spark really prints."""
+    stream = builder(read_events_stream(spark, sf_dir))
+    assert "EventTimeWatermark" in stream._jdf.queryExecution().analyzed().toString()
+    batch = Q[name](spark, sf_dir)._jdf.queryExecution()
+    assert "EventTimeWatermark" not in batch.optimizedPlan().toString()
 
 
 def test_watermark_present_in_stream(spark, sf_dir):
