@@ -1942,3 +1942,49 @@ def test_jpeg_blocks_and_sampled_encoder_bytes_unchanged():
     assert _sha256(
         [make_jpeg(24, 48, fill, blocks=_luma_grid(3, 6), sampling=(1, 2))]
     ) == _JPEG_440_DIGEST
+
+
+# Decoder equivalence: sha256 over repr(decode_pixels(payload)) + "\n"
+# for doc_id 0..3999 of each JPEG codec query, and over the explicit-grid
+# and 4:2:2 / 4:4:0 files above, pinned at the commit that introduced
+# this test. Never edit these digests; a mismatch means a decoder's
+# output changed.
+_DECODER_DIGESTS = {
+    "multimodal_decode_jpeg": (
+        "fa3849ee4405f6c0828018af63a617ca8e8839dd00499578dda639a6044391e5"
+    ),
+    "multimodal_decode_color": (
+        "7f9cf67b9a8affce159c0b4f8e37fb1772da19b11d557d97390d48581c402064"
+    ),
+    "multimodal_decode_subsampled": (
+        "55ee39f6244a7880dac466b2ae40f16ce5492fe556bfdb985cde19b8fe566ac5"
+    ),
+    "multimodal_decode_progressive": (
+        "fa3849ee4405f6c0828018af63a617ca8e8839dd00499578dda639a6044391e5"
+    ),
+    "multimodal_decode_lossless": (
+        "66a5920b48de79b27008cf17bc94d757c8a16d81ef4ee66ae279e7a80be8e210"
+    ),
+    "make_jpeg_blocks_sampled": (
+        "0dcf5fbf797a4a0317948e1635a17fd06bd19000a8a09e44b54e54d371406354"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DECODER_DIGESTS))
+def test_jpeg_decoder_output_unchanged(name):
+    import hashlib
+
+    from simplemapreduceframework_spark.operators import multimodal as mm
+
+    if name == "make_jpeg_blocks_sampled":
+        payloads = [
+            mm.make_jpeg(56, 40, 9, restart_interval=2, blocks=_luma_grid(7, 5)),
+            mm.make_jpeg(48, 24, 250, blocks=_luma_grid(6, 3), sampling=(2, 1)),
+            mm.make_jpeg(24, 48, 250, blocks=_luma_grid(3, 6), sampling=(1, 2)),
+        ]
+    else:
+        [spec] = [s for s in mm._CODEC_QUERIES if s.name == name]
+        payloads = (spec.payload(d) for d in range(4000))
+    text = "".join(f"{mm.decode_pixels(p)!r}\n" for p in payloads)
+    assert hashlib.sha256(text.encode()).hexdigest() == _DECODER_DIGESTS[name]
