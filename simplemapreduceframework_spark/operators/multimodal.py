@@ -4,15 +4,16 @@ mapInPandas decoders.
 
 The container has no image/audio libraries, so the decoders are real
 pure-Python implementations shipped in this file: GIF (`_lzw_decode`),
-PNG (zlib inflate + `_unfilter_png`), JPEG baseline —
-4:4:4 / 4:2:0 / progressive / lossless (Huffman + dequant + real 8x8
-IDCT in `_decode_jpeg_pixels`), BMP, WAV/ADPCM, and full FLAC. Only
-arithmetic/hierarchical/differential JPEG and MP3/AAC remain behind
-documented NotImplementedError gates (the PIL/ffmpeg integration
-boundary). The Spark-side plumbing is equally real and tested: binary
-payload column, metadata struct, mapInPandas batch shape, and the
-partitioning story (payloads never shuffle; feature extraction is
-row-local so it scales linearly).
+PNG (zlib inflate + `_unfilter_png`), JPEG — baseline at any integer
+sampling, progressive and lossless, all through one frame decoder
+(`_decode_jpeg_pixels`: one marker walk and header parse, Huffman +
+dequant + real 8x8 IDCT, Annex H prediction for SOF3), BMP, WAV/ADPCM,
+and full FLAC. Only arithmetic/hierarchical/differential JPEG and
+MP3/AAC remain behind documented NotImplementedError gates (the
+PIL/ffmpeg integration boundary). The Spark-side plumbing is equally
+real and tested: binary payload column, metadata struct, mapInPandas
+batch shape, and the partitioning story (payloads never shuffle;
+feature extraction is row-local so it scales linearly).
 
 Each synthesize->decode codec query is one row of `_CODEC_QUERIES`
 (payload formula, decoder, oracle, docstring), registered by one loop.
@@ -20,9 +21,10 @@ Each synthesize->decode codec query is one row of `_CODEC_QUERIES`
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,21 +110,8 @@ def _parse_bmp(b: bytes) -> tuple[int, int]:
 
 def _parse_ppm(b: bytes) -> tuple[int, int]:
     """Width/height from a netpbm (P6/P3 PPM, P5/P2 PGM) header: the
-    two whitespace-separated integers after the magic, with '#'
-    comments allowed anywhere in the header per the netpbm spec."""
-    pos, vals = 2, []
-    while len(vals) < 2:
-        while pos < len(b) and b[pos : pos + 1].isspace():
-            pos += 1
-        if b[pos : pos + 1] == b"#":
-            while pos < len(b) and b[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(b) and not b[pos : pos + 1].isspace():
-            pos += 1
-        vals.append(int(b[start:pos]))
-    return vals[0], vals[1]
+    first two header integers (_netpbm_data_offset's walk)."""
+    return _netpbm_data_offset(b)[:2]
 
 
 def _parse_png(b: bytes) -> tuple[int, int]:
@@ -142,27 +131,15 @@ def _parse_gif(b: bytes) -> tuple[int, int]:
 
 
 def _parse_jpeg(b: bytes) -> tuple[int, int]:
-    """Width/height from a JPEG's first SOF marker (C0-CF excluding
-    C4/C8/CC): scan segments from SOI, big-endian u16 height/width at
-    segment offsets +5/+7 — the standard stdlib-only dimension walk."""
+    """Width/height from a JPEG's first SOF marker, found by the shared
+    marker walk (_jpeg_markers): big-endian u16 height/width at SOF
+    body offsets 1/3."""
     import struct
 
-    pos = 2  # past SOI
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at {pos}")
-        marker = b[pos + 1]
-        if marker == 0xFF:  # spec-legal fill byte (B.1.1.2) before marker
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        seglen = struct.unpack_from(">H", b, pos + 2)[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h, w = struct.unpack_from(">HH", b, pos + 5)
+    for marker, seg, _ in _jpeg_markers(b):
+        if marker in _JPEG_SOFS:
+            h, w = struct.unpack_from(">HH", seg, 1)
             return w, h
-        pos += 2 + seglen
     raise ValueError("no SOF marker found")
 
 
@@ -245,10 +222,10 @@ REAL_PIXEL_SCHEMA = (
 
 
 def _netpbm_data_offset(b: bytes) -> tuple[int, int, int, int]:
-    """(width, height, maxval, data_offset) for a binary netpbm file:
-    three whitespace-separated header integers ('#' comments legal),
-    raster begins after exactly ONE whitespace byte following maxval
-    (netpbm spec)."""
+    """(width, height, maxval, data_offset) for a netpbm file: three
+    whitespace-separated header integers ('#' comments legal anywhere
+    in the header); a binary raster begins after exactly ONE whitespace
+    byte following maxval (netpbm spec)."""
     pos, vals = 2, []
     while len(vals) < 3:
         while pos < len(b) and b[pos : pos + 1].isspace():
@@ -327,8 +304,6 @@ def decode_pixels(b: bytes) -> tuple[str, int, int, int, int]:
     NotImplementedError."""
     import struct
     import zlib
-
-    import numpy as np
 
     if b[:2] == b"BM":
         w, h = _parse_bmp(b)
@@ -666,8 +641,6 @@ def make_gif(
 def _decode_gif_pixels(b: bytes) -> tuple[int, int, int]:
     """(width, height, pixel_sum) for a GIF's FIRST image: block walk,
     LZW inflate, deinterlace if flagged, palette RGB sum per pixel."""
-    import numpy as np
-
     iw, ih, indices, pal = _decode_gif_image(b)
     rgb = np.frombuffer(pal, np.uint8).reshape(-1, 3)
     total = int(rgb[indices].sum())
@@ -681,8 +654,6 @@ def _decode_gif_image(b: bytes) -> "tuple[int, int, object, bytes]":
     interlaced images — scatters the four-pass storage rows back to
     their display positions (_gif_interlace_order)."""
     import struct
-
-    import numpy as np
 
     w, h = _parse_gif(b)
     packed = b[10]
@@ -823,7 +794,7 @@ _JPEG_HUFF_TABLE_CAP = 64
 
 
 def _jpeg_huff_decode_table(
-    bits: list[int], vals: list[int]
+    bits: Sequence[int], vals: Sequence[int]
 ) -> "_JpegHuffTable":
     """(length, code) -> value, the decode-side inverse of
     _jpeg_huff_codes (with the fast-probe LUT attached)."""
@@ -1185,169 +1156,6 @@ def make_jpeg_lossless(
     ])
 
 
-def _decode_jpeg_lossless(b: bytes) -> tuple[int, int, int, int]:
-    """(width, height, channels, pixel_sum) for a LOSSLESS (SOF3)
-    grayscale JPEG: Annex H predictive decode — all seven predictor
-    selections with the H.1.2.1 boundary rules (half-range seed, row-0
-    left-prediction, column-0 above-prediction), point transform,
-    Huffman-coded differences in modulo-65536 arithmetic, 0xFF00
-    unstuffing. Multi-component lossless interleave raises
-    NotImplementedError."""
-    import struct
-
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    w = h = prec = None
-    dc_id = 0
-    sel = pt = None
-    scan_start = None
-    pos = 2
-    while pos < len(b) - 1:
-        if b[pos] != 0xFF:
-            raise ValueError(f"bad JPEG marker alignment at {pos}")
-        marker = b[pos + 1]
-        pos += 2
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", b, pos)
-        seg = b[pos + 2 : pos + seglen]
-        pos += seglen
-        if marker == 0xC4:
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                bits = list(seg[i : i + 16])
-                i += 16
-                n = sum(bits)
-                huff[(tc, th)] = _jpeg_huff_decode_table(
-                    bits, list(seg[i : i + n])
-                )
-                i += n
-        elif marker == 0xC3:
-            prec = seg[0]
-            h, w = struct.unpack_from(">HH", seg, 1)
-            if seg[5] != 1:
-                raise NotImplementedError(
-                    "multi-component lossless JPEG interleave"
-                )
-        elif marker == 0xDA:
-            dc_id = seg[2] >> 4
-            sel, pt = seg[3], seg[5] & 0xF
-            scan_start = pos
-            break
-    if w is None or scan_start is None or sel is None:
-        raise ValueError("lossless JPEG missing SOF3/SOS")
-    if not 1 <= sel <= 7:
-        raise ValueError(f"invalid lossless predictor selection {sel}")
-    # unstuff (no restart support needed for single-scan grayscale)
-    data = bytearray()
-    i = scan_start
-    while i < len(b):
-        byte = b[i]
-        if byte == 0xFF:
-            if b[i + 1] == 0x00:
-                data.append(0xFF)
-                i += 2
-                continue
-            break
-        data.append(byte)
-        i += 1
-    br = _JpegBitReader(bytes(data))
-    dcd = huff[(0, dc_id)]
-    # Stage 1 — entropy decode every difference in one tight loop with
-    # the reader inlined to local ints (no method calls per symbol):
-    # LUT probe for the size category, slow-walk fallback for >8-bit
-    # codes / the stream tail, then the receive-extend bits. Identical
-    # bit consumption to _JpegBitReader.huff/receive_extend (guide
-    # §1.2 step 2: per-task work; the distributed shape is untouched).
-    n = w * h
-    diffs = [0] * n
-    lut = dcd.lut
-    edata = br.data
-    pos = br.bytepos
-    end = len(edata)
-    acc = br.acc
-    nb = br.nbits
-    for i in range(n):
-        while nb < 8 and pos < end:
-            acc = (acc << 8) | edata[pos]
-            pos += 1
-            nb += 8
-        s = -1
-        if nb >= 8:
-            hit = lut[(acc >> (nb - 8)) & 0xFF]
-            if hit is not None:
-                s, length = hit
-                nb -= length
-                acc &= (1 << nb) - 1
-        if s < 0:  # long code or stream tail: exact bit-by-bit walk
-            code = 0
-            for length in range(1, 17):
-                if nb == 0:
-                    acc = edata[pos]
-                    pos += 1
-                    nb = 8
-                nb -= 1
-                code = (code << 1) | ((acc >> nb) & 1)
-                acc &= (1 << nb) - 1
-                if (length, code) in dcd:
-                    s = dcd[(length, code)]
-                    break
-            else:
-                raise ValueError(
-                    "corrupt JPEG: no Huffman code within 16 bits"
-                )
-        if s:
-            while nb < s:
-                acc = (acc << 8) | edata[pos]
-                pos += 1
-                nb += 8
-            nb -= s
-            v = (acc >> nb) & ((1 << s) - 1)
-            acc &= (1 << nb) - 1
-            diffs[i] = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-    # Stage 2 — Annex H predictive reconstruction over flat rows with
-    # the predictor inlined (H.1.2.1 boundary rules unchanged).
-    total = 0
-    half = 1 << (prec - 1 - pt)
-    prev: list[int] = []
-    i = 0
-    for y in range(h):
-        row = [0] * w
-        for x in range(w):
-            if y == 0:
-                pred = half if x == 0 else row[x - 1]
-            elif x == 0:
-                pred = prev[0]
-            else:
-                a = row[x - 1]
-                bb = prev[x]
-                if sel == 1:
-                    pred = a
-                elif sel == 2:
-                    pred = bb
-                elif sel == 3:
-                    pred = prev[x - 1]
-                elif sel == 4:
-                    pred = a + bb - prev[x - 1]
-                elif sel == 5:
-                    pred = a + ((bb - prev[x - 1]) >> 1)
-                elif sel == 6:
-                    pred = bb + ((a - prev[x - 1]) >> 1)
-                else:
-                    pred = (a + bb) >> 1
-            v = (pred + diffs[i]) % 65536
-            row[x] = v  # prediction runs in the point-transformed
-            total += v << pt  # domain; output scales back up (H.2.2)
-            i += 1
-        prev = row
-    return w, h, 1, total
-
-
 class _JpegBitReader:
     """MSB-first bit reader over already-unstuffed entropy bytes.
 
@@ -1425,224 +1233,319 @@ class _JpegBitReader:
         return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _decode_jpeg_progressive(b: bytes) -> tuple[int, int, int, int]:
-    """(width, height, channels, pixel_sum) for a PROGRESSIVE (SOF2)
-    JPEG: full multi-scan decode — spectral selection (per-scan
-    [Ss, Se] bands with EOBn end-of-band run codes), successive
-    approximation (DC/AC first scans at Al with arithmetic-shifted
-    coefficients, then refinement scans at Ah=Al+1 carrying raw DC
-    bits and the T.81 G.1.2.3 AC correction-bit algorithm, mirroring
-    libjpeg's decode_mcu_AC_refine), interleaved multi-component DC
-    scans in MCU order vs single-component AC scans over the
-    component's own block grid, per-scan Huffman table rebinding, and
-    RSTn restarts resetting predictors and the EOB run. Coefficients
-    accumulate across scans into per-component block arrays; the back
-    half (dequantize, de-zigzag, IDCT, crop/upsample, pinned YCbCr)
-    matches the baseline decoder."""
+# SOFn markers: every C0-CF code except DHT (C4), JPG (C8) and DAC (CC).
+_JPEG_SOFS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+class _JpegTables(dict):
+    """Quantization or Huffman tables by id: a component or scan that
+    names a table the file never defined fails with a named error."""
+
+    def __missing__(self, key):
+        raise ValueError(f"JPEG uses undefined table {key}")
+
+
+def _jpeg_markers(b: bytes) -> Iterator[tuple[int, bytes, list[bytes]]]:
+    """The one T.81 marker walk: yields ``(marker, segment body,
+    entropy segments)`` for each marker segment after SOI, skipping
+    B.1.1.2 fill bytes and the parameterless TEM/SOI/RSTn markers, and
+    stops at EOI. An SOS carries the entropy-coded data that follows
+    it, unstuffed (0xFF00 -> 0xFF) and split at RSTn; every other
+    marker an empty list."""
     import struct
 
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, "np.ndarray"] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    w = h = None
-    comps: list[tuple[int, int, int, int]] = []  # (cid, qid, sh, sv)
-    dri = 0
-    # each scan: (comp_idx list, dc/ac table ids per comp, Ss, Se, Ah,
-    # Al, [entropy segments split at RSTn], table snapshot)
-    scans = []
-    pos = 2
-    while pos < len(b) - 1:
+    pos = 2  # past SOI
+    while pos + 1 < len(b):
         if b[pos] != 0xFF:
             raise ValueError(f"bad JPEG marker alignment at {pos}")
         marker = b[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker
+            pos += 1
+            continue
         pos += 2
         if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
             continue
         if marker == 0xD9:
-            break
+            return
         (seglen,) = struct.unpack_from(">H", b, pos)
         seg = b[pos + 2 : pos + seglen]
         pos += seglen
-        if marker == 0xDB:
+        segments: list[bytes] = []
+        if marker == 0xDA:
+            cur = bytearray()
+            while True:
+                j = b.find(0xFF, pos)
+                if j < 0:
+                    cur += b[pos:]
+                    pos = len(b)
+                    break
+                cur += b[pos:j]
+                nxt = b[j + 1]
+                if nxt == 0x00:
+                    cur.append(0xFF)
+                elif 0xD0 <= nxt <= 0xD7:  # RSTn: next restart segment
+                    segments.append(bytes(cur))
+                    cur = bytearray()
+                else:  # the next marker, or a fill byte before it
+                    pos = j
+                    break
+                pos = j + 2
+            segments.append(bytes(cur))
+        yield marker, seg, segments
+
+
+def _jpeg_frame(b: bytes) -> tuple:
+    """The one JPEG header parse, over one marker walk: DQT, DHT,
+    SOF0/2/3, DRI and every SOS. Returns ``(sof, width, height,
+    precision, comps, dri, quant tables, scans)``: ``comps`` in SOF
+    order as ``(id, quant table id, H, V)``; each scan as ``(component
+    indexes, (DC, AC) table ids per component, Ss, Se, Ah, Al, entropy
+    segments, the Huffman tables in force at its SOS)``. The SOF gates
+    (other SOFn, component counts, non-integer sampling ratios) fire
+    as the SOF is read."""
+    import struct
+
+    qt = _JpegTables()
+    huff = _JpegTables()
+    sof = None
+    w = h = prec = dri = 0
+    comps: list[tuple[int, int, int, int]] = []
+    scans = []
+    for marker, seg, segments in _jpeg_markers(b):
+        if marker == 0xDB:  # DQT (may hold several tables)
             i = 0
             while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                qt[tq] = np.frombuffer(
-                    seg[i : i + 64], dtype=np.uint8
+                n = 64 << (seg[i] >> 4)  # Pq: 8- or 16-bit entries
+                qt[seg[i] & 0xF] = np.frombuffer(
+                    seg[i + 1 : i + 1 + n], dtype=">u2" if n > 64 else np.uint8
                 ).astype(np.int32)
-                i += 64
-        elif marker == 0xC4:
+                i += 1 + n
+        elif marker == 0xC4:  # DHT (may hold several tables)
             i = 0
             while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                bits = list(seg[i : i + 16])
-                i += 16
+                bits = seg[i + 1 : i + 17]
                 n = sum(bits)
-                huff[(tc, th)] = _jpeg_huff_decode_table(
-                    bits, list(seg[i : i + n])
+                huff[(seg[i] >> 4, seg[i] & 0xF)] = _jpeg_huff_decode_table(
+                    bits, seg[i + 17 : i + 17 + n]
                 )
-                i += n
-        elif marker == 0xC2:
+                i += 17 + n
+        elif marker in (0xC0, 0xC2, 0xC3):
+            sof, prec = marker, seg[0]
             h, w = struct.unpack_from(">HH", seg, 1)
-            for ci in range(seg[5]):
-                cid, sampling, qid = seg[6 + 3 * ci : 9 + 3 * ci]
-                comps.append((cid, qid, sampling >> 4, sampling & 0xF))
-        elif marker == 0xDD:
+            comps = [
+                (cid, qid, hv >> 4, hv & 0xF)
+                for cid, hv, qid in zip(seg[6::3], seg[7::3], seg[8::3])
+            ][: seg[5]]
+            if marker == 0xC3 and len(comps) != 1:
+                raise NotImplementedError(
+                    "multi-component lossless JPEG interleave"
+                )
+            if len(comps) not in (1, 3):
+                raise NotImplementedError(
+                    f"{len(comps)}-component JPEG not implemented"
+                )
+            hmax = max(c[2] for c in comps)
+            vmax = max(c[3] for c in comps)
+            if any(hmax % c[2] or vmax % c[3] for c in comps):
+                raise NotImplementedError(
+                    "non-integer chroma upsampling ratio"
+                )
+        elif marker in _JPEG_SOFS:
+            raise NotImplementedError(
+                f"JPEG SOF{marker - 0xC0}: baseline SOF0, progressive "
+                "SOF2, and lossless SOF3 implemented; extended-"
+                "sequential/hierarchical/arithmetic variants are not"
+            )
+        elif marker == 0xDD:  # DRI
             (dri,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:
+        elif marker == 0xDA:  # SOS, its entropy segments attached
+            ids = [c[0] for c in comps]
             nsc = seg[0]
             sc_idx, sc_tabs = [], []
-            for ci in range(nsc):
-                cid = seg[1 + 2 * ci]
-                sc_idx.append([c[0] for c in comps].index(cid))
-                t = seg[2 + 2 * ci]
+            pairs = seg[1 : 1 + 2 * nsc]  # (component id, Td<<4 | Ta)
+            for cid, t in zip(pairs[::2], pairs[1::2]):
+                if cid not in ids:
+                    raise ValueError(
+                        f"JPEG scan component {cid} not in the frame"
+                    )
+                sc_idx.append(ids.index(cid))
                 sc_tabs.append((t >> 4, t & 0xF))
-            ss, se = seg[1 + 2 * nsc], seg[2 + 2 * nsc]
-            ahl = seg[3 + 2 * nsc]
-            # entropy data follows: split at RSTn, strip stuffing
-            segments: list[bytes] = []
-            cur = bytearray()
-            i = pos
-            while i < len(b):
-                byte = b[i]
-                if byte == 0xFF:
-                    nxt = b[i + 1]
-                    if nxt == 0x00:
-                        cur.append(0xFF)
-                        i += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:
-                        segments.append(bytes(cur))
-                        cur = bytearray()
-                        i += 2
-                        continue
-                    break
-                cur.append(byte)
-                i += 1
-            segments.append(bytes(cur))
-            pos = i
-            scans.append(
-                (sc_idx, sc_tabs, ss, se, ahl >> 4, ahl & 0xF,
-                 segments, dict(huff))
-            )
-    if w is None or not comps or not scans:
-        raise ValueError("JPEG missing SOF2/SOS")
+            ss, se, ahl = seg[1 + 2 * nsc : 4 + 2 * nsc]
+            scans.append((sc_idx, sc_tabs, ss, se, ahl >> 4, ahl & 0xF,
+                          segments, _JpegTables(huff)))
+    if sof is None or not scans:
+        raise ValueError("JPEG missing SOF/SOS")
+    return sof, w, h, prec, comps, dri, qt, scans
 
+
+# IDCT basis: A[u, x] = C(u)/2 * cos((2x+1) u pi / 16), so f = A^T F A;
+# built once, since per file it cost more than decoding a small image.
+_JPEG_IDCT = np.cos(
+    (2 * np.arange(8).reshape(1, 8) + 1) * np.arange(8).reshape(8, 1)
+    * np.pi / 16
+) / 2
+_JPEG_IDCT[0, :] /= np.sqrt(2)
+_JPEG_UNZIG = np.array(_JPEG_ZIGZAG)
+
+
+def _jpeg_read_block(br, dcd, acd, pred: int, c: list[int]) -> int:
+    """One baseline block (T.81 F.2.2): the DC difference added to
+    ``pred``, then run/size-coded AC coefficients up to EOB (ZRL skips
+    16 zeros), written in zigzag order into ``c``; returns the new DC
+    predictor."""
+    pred += br.receive_extend(br.huff(dcd))
+    c[0] = pred
+    k = 1
+    while k < 64:
+        rs = br.huff(acd)
+        r, size = rs >> 4, rs & 0xF
+        if size == 0:
+            if r == 15:  # ZRL: skip 16 zeros
+                k += 16
+                continue
+            break  # EOB
+        k += r
+        if k > 63:
+            raise ValueError("corrupt JPEG: AC run past block end")
+        c[k] = br.receive_extend(size)
+        k += 1
+    return pred
+
+
+def _decode_jpeg_pixels(b: bytes) -> tuple[int, int, int, int]:
+    """(width, height, channels, pixel_sum) of a JPEG: the one frame
+    decoder behind baseline SOF0, progressive SOF2 and lossless SOF3.
+    One header parse (_jpeg_frame), then one dispatch: SOF3 goes to the
+    Annex H predictor (_decode_jpeg_lossless); the DCT SOFs decode
+    every scan into one MCU-padded grid of zigzag-ordered coefficients
+    per component.
+
+    Scan-unit order (T.81 A.2): a single-component scan walks the
+    component's own block grid whatever its sampling factors; a
+    multi-component scan walks MCU order, each component contributing
+    its V x H blocks row-major, dummy edge blocks included. The restart
+    interval counts these units; each RSTn segment resets the DC
+    predictors and the EOB run. A baseline scan decodes whole blocks
+    (_jpeg_read_block), so its components may arrive interleaved in one
+    scan or one scan each. Progressive scans carry spectral selection
+    ([Ss, Se] bands, EOBn runs) and successive approximation (first
+    scans at Al, refinement scans at Ah = Al + 1: raw DC bits and the
+    T.81 G.1.2.3 AC correction-bit algorithm, mirroring libjpeg's
+    decode_mcu_AC_refine), each scan under the Huffman tables in force
+    at its SOS.
+
+    Reconstruction runs batched per component: dequantize, real 8x8
+    IDCT (numpy basis matrix), level shift and clip, crop to the
+    component's sample grid and replicate-upsample (the libjpeg
+    non-fancy upsampler) for any sampling whose factors divide the
+    maxima; three components then take the T.871 YCbCr->RGB conversion
+    pinned to floor(x + 0.5) rounding, so the SQL oracles replicate it
+    bit-for-bit. Arithmetic, hierarchical, differential and
+    extended-sequential SOFs raise NotImplementedError (dimensions stay
+    available via decode_real)."""
+    sof, w, h, prec, comps, dri, qt, scans = _jpeg_frame(b)
+    if sof == 0xC3:
+        return _decode_jpeg_lossless(w, h, prec, scans)
+    base = sof == 0xC0
+    if base and sorted(i for s in scans for i in s[0]) != list(
+        range(len(comps))
+    ):
+        raise ValueError("baseline JPEG scans must carry each component once")
     hmax = max(c[2] for c in comps)
     vmax = max(c[3] for c in comps)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # zigzag-ordered quantized coefficients, MCU-padded block grid.
+    # each component's true sample grid (width, height)
+    dims = [
+        ((w * sh + hmax - 1) // hmax, (h * sv + vmax - 1) // vmax)
+        for _, _, sh, sv in comps
+    ]
+    # Zigzag-ordered quantized coefficients, MCU-padded block grid.
     # Plain Python lists, not numpy: the scan loops below touch single
     # coefficients (c[k] reads/writes) millions of times, where numpy
     # scalar indexing costs ~10x a list index; the whole grid converts
     # to one array for the batched reconstruction pass at the end.
     coef = [
-        [
-            [[0] * 64 for _ in range(mcux * sh)]
-            for _ in range(mcuy * sv)
-        ]
+        [[[0] * 64 for _ in range(mcux * sh)] for _ in range(mcuy * sv)]
         for _, _, sh, sv in comps
     ]
-    # real (non-dummy) block dims per component, for AC scans
-    nreal = []
-    for _, _, sh, sv in comps:
-        cw = (w * sh + hmax - 1) // hmax
-        ch = (h * sv + vmax - 1) // vmax
-        nreal.append(((ch + 7) // 8, (cw + 7) // 8))
-
     for sc_idx, sc_tabs, ss, se, ah, al, segments, tabs in scans:
-        seg_iter = iter(segments)
-        br = _JpegBitReader(next(seg_iter))
-        if ss == 0:  # DC scan (possibly interleaved)
-            if se != 0:
-                raise ValueError("corrupt scan: DC band with Se != 0")
-            preds = [0] * len(sc_idx)
-            # restart unit = one block (non-interleaved) or one MCU
-            if len(sc_idx) == 1:
-                ci = sc_idx[0]
-                units = [
-                    [(ci, by, bx, 0)]
-                    for by in range(nreal[ci][0])
-                    for bx in range(nreal[ci][1])
+        if not base and ss == 0 and se != 0:
+            raise ValueError("corrupt scan: DC band with Se != 0")
+        if not base and ss and len(sc_idx) != 1:
+            raise ValueError("corrupt scan: interleaved AC band")
+        # restart units of (coefficient block, index in the scan)
+        if len(sc_idx) == 1:
+            grid = coef[sc_idx[0]]
+            cw, ch = dims[sc_idx[0]]
+            units = [
+                [(grid[by][bx], 0)]
+                for by in range((ch + 7) // 8)
+                for bx in range((cw + 7) // 8)
+            ]
+        else:
+            units = [
+                [
+                    (coef[ci][my * sv + y][mx * sh + x], si)
+                    for si, ci in enumerate(sc_idx)
+                    for _, _, sh, sv in [comps[ci]]
+                    for y in range(sv)
+                    for x in range(sh)
                 ]
-            else:  # MCU order incl. dummy edge blocks
-                units = []
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        unit = []
-                        for si, ci in enumerate(sc_idx):
-                            sh, sv = comps[ci][2], comps[ci][3]
-                            for byy in range(sv):
-                                for bxx in range(sh):
-                                    unit.append(
-                                        (ci, my * sv + byy,
-                                         mx * sh + bxx, si)
-                                    )
-                        units.append(unit)
-            for ui, unit in enumerate(units):
-                if dri and ui and ui % dri == 0:
-                    br = _JpegBitReader(next(seg_iter))
-                    preds = [0] * len(sc_idx)
-                for ci, by, bx, si in unit:
-                    c = coef[ci][by][bx]
+                for my in range(mcuy)
+                for mx in range(mcux)
+            ]
+        # the Huffman tables this scan's body reads (a DC refinement
+        # scan reads none)
+        dc_used, ac_used = base or not (ss or ah), base or ss
+        dcds = [tabs[(0, t[0])] for t in sc_tabs] if dc_used else []
+        acds = [tabs[(1, t[1])] for t in sc_tabs] if ac_used else []
+        p1, m1 = 1 << al, -(1 << al)
+        seg_iter = iter(segments)
+        for ui, unit in enumerate(units):
+            if ui == 0 or (dri and ui % dri == 0):
+                br = _JpegBitReader(next(seg_iter))
+                preds = [0] * len(sc_idx)
+                eobrun = 0
+            for c, si in unit:
+                if base:
+                    preds[si] = _jpeg_read_block(
+                        br, dcds[si], acds[si], preds[si], c
+                    )
+                elif ss == 0:
                     if ah == 0:  # first DC scan: Huffman diffs << Al
-                        dcd = tabs[(0, sc_tabs[si][0])]
-                        preds[si] += br.receive_extend(br.huff(dcd))
+                        preds[si] += br.receive_extend(br.huff(dcds[si]))
                         c[0] = preds[si] << al
-                    else:  # refinement: one raw bit into bit Al
-                        if br.bit():
-                            c[0] |= 1 << al
-        else:  # AC scan: single component, its own block grid
-            if len(sc_idx) != 1:
-                raise ValueError("corrupt scan: interleaved AC band")
-            ci = sc_idx[0]
-            acd = tabs[(1, sc_tabs[0][1])]
-            p1, m1 = 1 << al, -(1 << al)
-            eobrun = 0
-            done = 0
-            for by in range(nreal[ci][0]):
-                for bx in range(nreal[ci][1]):
-                    if dri and done and done % dri == 0:
-                        br = _JpegBitReader(next(seg_iter))
-                        eobrun = 0
-                    done += 1
-                    c = coef[ci][by][bx]
-                    if ah == 0:  # first AC scan
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            rs = br.huff(acd)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += br.bits(r)
-                                break
-                            k += r
-                            if k > se:
-                                raise ValueError(
-                                    "corrupt JPEG: AC run past band"
-                                )
-                            c[k] = br.receive_extend(s) << al
-                            k += 1
+                    elif br.bit():  # refinement: one raw bit into bit Al
+                        c[0] |= p1
+                elif ah == 0:  # first AC scan
+                    if eobrun:
+                        eobrun -= 1
                         continue
+                    acd = acds[0]
+                    k = ss
+                    while k <= se:
+                        rs = br.huff(acd)
+                        r, s = rs >> 4, rs & 0xF
+                        if s == 0:
+                            if r == 15:
+                                k += 16
+                                continue
+                            eobrun = (1 << r) - 1
+                            if r:
+                                eobrun += br.bits(r)
+                            break
+                        k += r
+                        if k > se:
+                            raise ValueError("corrupt JPEG: AC run past band")
+                        c[k] = br.receive_extend(s) << al
+                        k += 1
+                else:
                     # AC refinement (T.81 G.1.2.3 / libjpeg
                     # decode_mcu_AC_refine): insert new +-p1 values,
                     # reading a correction bit for every nonzero
                     # coefficient passed over
+                    acd = acds[0]
                     k = ss
                     if eobrun == 0:
                         while k <= se:
@@ -1662,9 +1565,7 @@ def _decode_jpeg_progressive(b: bytes) -> tuple[int, int, int, int]:
                                 # r == 15: skip 16 zero-history coeffs
                             else:
                                 if s != 1:
-                                    raise ValueError(
-                                        "corrupt refinement size"
-                                    )
+                                    raise ValueError("corrupt refinement size")
                                 val = p1 if br.bit() else m1
                             while k <= se:
                                 if c[k] != 0:
@@ -1686,293 +1587,31 @@ def _decode_jpeg_progressive(b: bytes) -> tuple[int, int, int, int]:
                             k += 1
                         eobrun -= 1
 
-    # reconstruction: dequantize in zigzag order, IDCT, level shift,
-    # crop/upsample, pinned YCbCr — same math as the baseline decoder
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    A = np.cos((2 * x + 1) * u * np.pi / 16) / 2
-    A[0, :] /= np.sqrt(2)
-    zig = np.array(_JPEG_ZIGZAG)
+    A, zig = _JPEG_IDCT, _JPEG_UNZIG
     planes = []
-    for ci, (cid, qid, sh, sv) in enumerate(comps):
-        q = qt[qid]
-        # batched dequantize + IDCT + level shift + clip over the whole
-        # component grid (the per-8x8-slice matmul/round/clip operands
-        # are identical to the old per-block expressions, so decoded
-        # samples are bit-for-bit unchanged)
-        by_n, bx_n = mcuy * sv, mcux * sh
-        C = np.asarray(coef[ci], dtype=np.int64).reshape(-1, 64)
-        F = np.zeros((C.shape[0], 64), dtype=np.float64)
-        F[:, zig] = C * q
+    for (_, qid, sh, sv), grid, (cw, ch) in zip(comps, coef, dims):
+        # dequantize in zigzag order, IDCT, level shift and clip over
+        # the whole component grid at once
+        C = np.asarray(grid, dtype=np.int64).reshape(-1, 64)
+        F = np.zeros(C.shape, dtype=np.float64)
+        F[:, zig] = C * qt[qid]
         blocks = A.T @ F.reshape(-1, 8, 8) @ A
         px = np.clip(np.round(blocks) + 128, 0, 255).astype(np.int64)
-        plane = (
+        by_n, bx_n = mcuy * sv, mcux * sh
+        p = (
             px.reshape(by_n, bx_n, 8, 8)
             .transpose(0, 2, 1, 3)
-            .reshape(by_n * 8, bx_n * 8)
+            .reshape(by_n * 8, bx_n * 8)[:ch, :cw]
         )
-        cw = (w * sh + hmax - 1) // hmax
-        ch = (h * sv + vmax - 1) // vmax
-        p = plane[:ch, :cw]
-        if sh != hmax or sv != vmax:
-            p = np.repeat(
-                np.repeat(p, vmax // sv, axis=0), hmax // sh, axis=1
-            )
-        planes.append(p[:h, :w])
-    if len(comps) == 1:
-        return w, h, 1, int(planes[0].sum())
-    Y = planes[0].astype(np.float64)
-    Cb = planes[1].astype(np.float64)
-    Cr = planes[2].astype(np.float64)
-    r = np.clip(np.floor(Y + 1.402 * (Cr - 128.0) + 0.5), 0, 255)
-    g = np.clip(
-        np.floor(
-            Y - 0.344136 * (Cb - 128.0) - 0.714136 * (Cr - 128.0) + 0.5
-        ),
-        0,
-        255,
-    )
-    bl = np.clip(np.floor(Y + 1.772 * (Cb - 128.0) + 0.5), 0, 255)
-    return w, h, 3, int(r.sum() + g.sum() + bl.sum())
-
-
-def _decode_jpeg_pixels(b: bytes) -> tuple[int, int, int, int]:
-    """(width, height, channels, pixel_sum) for a baseline JPEG,
-    grayscale OR 4:4:4 color: full marker walk (DQT / DHT / SOF0 /
-    DRI / SOS), restart-segmented scan with 0xFF00 unstuffing,
-    complete DC+AC Huffman decode (EOB, ZRL, run/size) with
-    per-component predictors and interleaved MCUs, de-zigzag,
-    per-component dequantize, a real 8x8 IDCT (numpy basis matrix)
-    with level shift and clipping, and — for three components — the
-    T.871 YCbCr->RGB conversion pinned to floor(x + 0.5) rounding so
-    the oracle can replicate it bit-for-bit in SQL. This is a GENERAL
-    baseline decoder for the unsubsampled case — AC coefficients,
-    restart predictor resets, and edge-block cropping all handled —
-    not just the inverse of make_jpeg. Subsampled chroma decodes too:
-    general (h, v) sampling factors drive the T.81 multi-block MCU
-    interleave, per-component sample grids, and replication upsampling
-    (the libjpeg non-fancy upsampler) back to full resolution — 4:2:0
-    / 4:2:2 / 4:4:0 all take this path. Progressive (SOF2) dispatches
-    to the multi-scan decoder (_decode_jpeg_progressive); arithmetic
-    coding and lossless SOFs raise NotImplementedError: honest gates,
-    dimensions still available via decode_real."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, "np.ndarray"] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    w = h = None
-    comps: list[tuple[int, int]] = []  # SOF order: (comp_id, qt_id)
-    sos_tables: dict[int, tuple[int, int]] = {}  # comp_id -> (dc, ac)
-    dri = 0
-    scan_start = None
-    pos = 2
-    while pos < len(b) - 1:
-        if b[pos] != 0xFF:
-            raise ValueError(f"bad JPEG marker alignment at {pos}")
-        marker = b[pos + 1]
-        pos += 2
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", b, pos)
-        seg = b[pos + 2 : pos + seglen]
-        pos += seglen
-        if marker == 0xDB:  # DQT (may hold several tables)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                qt[tq] = np.frombuffer(
-                    seg[i : i + 64], dtype=np.uint8
-                ).astype(np.int32)
-                i += 64
-        elif marker == 0xC4:  # DHT (may hold several tables)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                bits = list(seg[i : i + 16])
-                i += 16
-                n = sum(bits)
-                huff[(tc, th)] = _jpeg_huff_decode_table(
-                    bits, list(seg[i : i + n])
-                )
-                i += n
-        elif marker == 0xC0:  # SOF0 baseline
-            h, w = struct.unpack_from(">HH", seg, 1)
-            ncomp = seg[5]
-            if ncomp not in (1, 3):
-                raise NotImplementedError(
-                    f"{ncomp}-component JPEG not implemented"
-                )
-            for ci in range(ncomp):
-                cid, sampling, qid = seg[6 + 3 * ci : 9 + 3 * ci]
-                comps.append((cid, qid, sampling >> 4, sampling & 0xF))
-            for _, _, sh, sv in comps:
-                if (
-                    max(c[2] for c in comps) % sh
-                    or max(c[3] for c in comps) % sv
-                ):
-                    raise NotImplementedError(
-                        "non-integer chroma upsampling ratio"
-                    )
-        elif marker == 0xC2:  # progressive DCT: multi-scan path
-            return _decode_jpeg_progressive(b)
-        elif marker == 0xC3:  # lossless sequential: predictive path
-            return _decode_jpeg_lossless(b)
-        elif marker in (0xC1, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF{marker - 0xC0}: baseline SOF0, progressive "
-                "SOF2, and lossless SOF3 implemented; extended-"
-                "sequential/hierarchical/arithmetic variants are not"
-            )
-        elif marker == 0xDD:  # DRI
-            (dri,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:  # SOS — entropy data follows
-            for ci in range(seg[0]):
-                cid = seg[1 + 2 * ci]
-                tables = seg[2 + 2 * ci]
-                sos_tables[cid] = (tables >> 4, tables & 0xF)
-            scan_start = pos
-            break
-    if w is None or scan_start is None or not comps:
-        raise ValueError("JPEG missing SOF0/SOS")
-
-    # Split the scan into restart segments, stripping byte stuffing.
-    segments: list[bytes] = []
-    cur = bytearray()
-    i = scan_start
-    while i < len(b):
-        byte = b[i]
-        if byte == 0xFF:
-            nxt = b[i + 1]
-            if nxt == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:  # RSTn: new segment, predictor reset
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            break  # EOI or next marker
-        cur.append(byte)
-        i += 1
-    segments.append(bytes(cur))
-
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    # MCU grid: hmax x vmax blocks of luma per MCU (1x1 when
-    # unsubsampled, where this reduces to the plain block grid)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # IDCT basis: A[u, x] = C(u)/2 * cos((2x+1) u pi / 16); f = A^T F A
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    A = np.cos((2 * x + 1) * u * np.pi / 16) / 2
-    A[0, :] /= np.sqrt(2)
-    zig = np.array(_JPEG_ZIGZAG)
-
-    def read_block(br, dcd, acd, pred):
-        # entropy decode only — plain Python list of 64 coefficients;
-        # dequantize + IDCT run batched over every block of a
-        # component afterwards (one numpy dispatch per PLANE instead
-        # of ~7 tiny-array ops per 8x8 block; the per-slice matmul/
-        # round/clip operands are identical, so decoded samples are
-        # bit-for-bit unchanged — pinned by the closed-form hash gates
-        # and the reference roundtrip sweeps)
-        coeffs = [0] * 64
-        pred += br.receive_extend(br.huff(dcd))
-        coeffs[0] = pred
-        k = 1
-        while k < 64:
-            rs = br.huff(acd)
-            r, size = rs >> 4, rs & 0xF
-            if size == 0:
-                if r == 15:  # ZRL: skip 16 zeros
-                    k += 16
-                    continue
-                break  # EOB
-            k += r
-            if k > 63:
-                raise ValueError("corrupt JPEG: AC run past block end")
-            coeffs[k] = br.receive_extend(size)
-            k += 1
-        return pred, coeffs
-
-    ncomp = len(comps)
-    planes = [
-        np.zeros((mcuy * sv * 8, mcux * sh * 8), dtype=np.int64)
-        for _, _, sh, sv in comps
-    ]
-    tables = []  # per SOF-order component: (dcd, acd, q)
-    for cid, qid, _, _ in comps:
-        dc_id, ac_id = sos_tables[cid]
-        tables.append((huff[(0, dc_id)], huff[(1, ac_id)], qt[qid]))
-    mcus_done = 0
-    seg_iter = iter(segments)
-    br = _JpegBitReader(next(seg_iter))
-    preds = [0] * ncomp
-    # per component: entropy-decoded coefficient rows + block origins,
-    # in scan order
-    coeff_rows: list[list[list[int]]] = [[] for _ in comps]
-    origins: list[list[tuple[int, int]]] = [[] for _ in comps]
-    while mcus_done < mcux * mcuy:
-        if dri and mcus_done and mcus_done % dri == 0:
-            br = _JpegBitReader(next(seg_iter))
-            preds = [0] * ncomp
-        my, mx = divmod(mcus_done, mcux)
-        # T.81 interleave: per MCU each component contributes its
-        # full v x h block grid, row-major, before the next component
-        for ci, (dcd, acd, _q) in enumerate(tables):
-            sh, sv = comps[ci][2], comps[ci][3]
-            for byy in range(sv):
-                for bxx in range(sh):
-                    preds[ci], coeffs = read_block(br, dcd, acd, preds[ci])
-                    coeff_rows[ci].append(coeffs)
-                    origins[ci].append(
-                        ((my * sv + byy) * 8, (mx * sh + bxx) * 8)
-                    )
-        mcus_done += 1
-    # batched dequantize + IDCT + level shift + clip, one pass per
-    # component plane (operands per 8x8 slice identical to the old
-    # per-block expressions)
-    for ci, (_dcd, _acd, q) in enumerate(tables):
-        C = np.asarray(coeff_rows[ci], dtype=np.int64)
-        F = np.zeros((C.shape[0], 64), dtype=np.float64)
-        F[:, zig] = C * q  # dequantize in zigzag order, place raster
-        blocks = A.T @ F.reshape(-1, 8, 8) @ A
-        px = np.clip(np.round(blocks) + 128, 0, 255).astype(np.int64)
-        plane = planes[ci]
-        for bi, (r0, c0) in enumerate(origins[ci]):
-            plane[r0 : r0 + 8, c0 : c0 + 8] = px[bi]
-    # crop each component to its true sample grid, then upsample by
-    # pixel replication (the libjpeg non-fancy upsampler) to full res
-    full = []
-    for ci, (_, _, sh, sv) in enumerate(comps):
-        cw = (w * sh + hmax - 1) // hmax
-        ch = (h * sv + vmax - 1) // vmax
-        p = planes[ci][:ch, :cw]
         if sh != hmax or sv != vmax:
             p = np.repeat(np.repeat(p, vmax // sv, axis=0), hmax // sh, axis=1)
-        full.append(p[:h, :w])
-    planes = full
-    if ncomp == 1:
+        planes.append(p[:h, :w])
+    if len(planes) == 1:
         return w, h, 1, int(planes[0].sum())
     # T.871 YCbCr -> RGB, rounding pinned to floor(x + 0.5) so a SQL
     # oracle (FLOOR(x + 0.5), LEAST/GREATEST clip) reproduces every
     # sample bit-for-bit — np.round's half-even would diverge at .5.
-    Y = planes[0].astype(np.float64)
-    Cb = planes[1].astype(np.float64)
-    Cr = planes[2].astype(np.float64)
+    Y, Cb, Cr = (p.astype(np.float64) for p in planes)
     r = np.clip(np.floor(Y + 1.402 * (Cr - 128.0) + 0.5), 0, 255)
     g = np.clip(
         np.floor(
@@ -1983,6 +1622,109 @@ def _decode_jpeg_pixels(b: bytes) -> tuple[int, int, int, int]:
     )
     bl = np.clip(np.floor(Y + 1.772 * (Cb - 128.0) + 0.5), 0, 255)
     return w, h, 3, int(r.sum() + g.sum() + bl.sum())
+
+
+def _decode_jpeg_lossless(
+    w: int, h: int, prec: int, scans: list
+) -> tuple[int, int, int, int]:
+    """(width, height, 1, pixel_sum) of a LOSSLESS (SOF3) grayscale
+    JPEG from its parsed header (_jpeg_frame): Annex H predictive
+    decode — all seven predictor selections with the H.1.2.1 boundary
+    rules (half-range seed, row-0 left-prediction, column-0
+    above-prediction), point transform, Huffman-coded differences in
+    modulo-65536 arithmetic. Restart intervals raise
+    NotImplementedError."""
+    _, sc_tabs, sel, _, _, pt, segments, tabs = scans[0]
+    if not 1 <= sel <= 7:
+        raise ValueError(f"invalid lossless predictor selection {sel}")
+    if len(segments) > 1:
+        raise NotImplementedError("lossless JPEG restart intervals")
+    dcd = tabs[(0, sc_tabs[0][0])]
+    # Stage 1 — entropy decode every difference in one tight loop with
+    # the bit reader inlined to local ints (no method calls per symbol):
+    # LUT probe for the size category, slow-walk fallback for >8-bit
+    # codes / the stream tail, then the receive-extend bits. Identical
+    # bit consumption to _JpegBitReader.huff/receive_extend.
+    n = w * h
+    diffs = [0] * n
+    lut = dcd.lut
+    edata = segments[0]
+    pos = acc = nb = 0
+    end = len(edata)
+    for i in range(n):
+        while nb < 8 and pos < end:
+            acc = (acc << 8) | edata[pos]
+            pos += 1
+            nb += 8
+        s = -1
+        if nb >= 8:
+            hit = lut[(acc >> (nb - 8)) & 0xFF]
+            if hit is not None:
+                s, length = hit
+                nb -= length
+                acc &= (1 << nb) - 1
+        if s < 0:  # long code or stream tail: exact bit-by-bit walk
+            code = 0
+            for length in range(1, 17):
+                if nb == 0:
+                    acc = edata[pos]
+                    pos += 1
+                    nb = 8
+                nb -= 1
+                code = (code << 1) | ((acc >> nb) & 1)
+                acc &= (1 << nb) - 1
+                if (length, code) in dcd:
+                    s = dcd[(length, code)]
+                    break
+            else:
+                raise ValueError(
+                    "corrupt JPEG: no Huffman code within 16 bits"
+                )
+        if s:
+            while nb < s:
+                acc = (acc << 8) | edata[pos]
+                pos += 1
+                nb += 8
+            nb -= s
+            v = (acc >> nb) & ((1 << s) - 1)
+            acc &= (1 << nb) - 1
+            diffs[i] = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+    # Stage 2 — Annex H predictive reconstruction over flat rows with
+    # the predictor inlined (H.1.2.1 boundary rules unchanged).
+    total = 0
+    half = 1 << (prec - 1 - pt)
+    prev: list[int] = []
+    i = 0
+    for y in range(h):
+        row = [0] * w
+        for x in range(w):
+            if y == 0:
+                pred = half if x == 0 else row[x - 1]
+            elif x == 0:
+                pred = prev[0]
+            else:
+                a = row[x - 1]
+                bb = prev[x]
+                if sel == 1:
+                    pred = a
+                elif sel == 2:
+                    pred = bb
+                elif sel == 3:
+                    pred = prev[x - 1]
+                elif sel == 4:
+                    pred = a + bb - prev[x - 1]
+                elif sel == 5:
+                    pred = a + ((bb - prev[x - 1]) >> 1)
+                elif sel == 6:
+                    pred = bb + ((a - prev[x - 1]) >> 1)
+                else:
+                    pred = (a + bb) >> 1
+            v = (pred + diffs[i]) % 65536
+            row[x] = v  # prediction runs in the point-transformed
+            total += v << pt  # domain; output scales back up (H.2.2)
+            i += 1
+        prev = row
+    return w, h, 1, total
 
 
 def make_wav(
@@ -2637,8 +2379,6 @@ def decode_wav(b: bytes) -> tuple[int, int, int, int, int]:
     integration point."""
     import struct
 
-    import numpy as np
-
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise NotImplementedError(
             f"audio magic {b[:4]!r}: only RIFF/WAVE PCM decodes "
@@ -3014,7 +2754,7 @@ FROM (SELECT doc_id, w, h, a, b, (w * h + 1) // 2 AS n_even
     into one EOBn run under a custom mid-file Huffman table (the
     progressive-only code baseline JPEG doesn't have) — then decode
     the actual bytes back through the full multi-scan coefficient
-    accumulation (_decode_jpeg_progressive). Same checkerboard and
+    accumulation (_decode_jpeg_pixels). Same checkerboard and
     quantization convention as the baseline gate, so the oracle keeps
     the same closed form; a wrong shift direction in the point
     transform, a dropped refinement bit, a misparsed EOBRUN, or a

@@ -320,6 +320,29 @@ def test_jpeg_parser_skips_fill_bytes():
     r = next(out.itertuples())
     assert (r.width, r.height, r.format) == (160, 120, "jpeg")
 
+    # the pixel decoders share that walk: a fill byte before the second
+    # marker, the first SOS and EOI (right after entropy data) changes
+    # nothing for baseline, color, progressive or lossless files
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_pixels,
+        make_jpeg,
+        make_jpeg_lossless,
+        make_jpeg_progressive,
+    )
+
+    for j in (
+        make_jpeg(24, 16, 5, restart_interval=2),
+        make_jpeg(24, 16, 5, restart_interval=2, sampling=(1, 1)),
+        make_jpeg(32, 16, 5, sampling=(2, 2)),
+        make_jpeg_progressive(24, 16, 5),
+        make_jpeg_lossless(16, 8, 5, sel=4),
+    ):
+        sos = j.find(b"\xff\xda")
+        filled = (
+            j[:2] + b"\xff" + j[2:sos] + b"\xff" + j[sos:-2] + b"\xff" + j[-2:]
+        )
+        assert decode_pixels(filled) == decode_pixels(j)
+
 
 def _png_with_filters(pixels, filters):
     """Build a spec-valid 8-bit RGB PNG whose scanlines use the GIVEN
@@ -432,6 +455,7 @@ def test_jpeg_rejects_differential_and_nonint_ratio():
     from simplemapreduceframework_spark.operators.multimodal import (
         decode_pixels,
         make_jpeg,
+        make_jpeg_lossless,
     )
 
     j = bytearray(make_jpeg(8, 8, 50))
@@ -454,6 +478,110 @@ def test_jpeg_rejects_differential_and_nonint_ratio():
     )
     with pytest.raises(NotImplementedError):
         decode_pixels(sub)
+    # lossless with DRI + RSTn: Annex H restarts are not implemented
+    lossless = make_jpeg_lossless(16, 8, 5)
+    data = lossless.find(b"\xff\xda") + 10  # past the 1-component SOS
+    assert 0xFF not in lossless[data : data + 2]
+    restarted = (
+        lossless[: data - 10]
+        + b"\xff\xdd" + struct.pack(">HH", 4, 16)  # DRI: one row
+        + lossless[data - 10 : data + 2]
+        + b"\xff\xd0"
+        + lossless[data + 2 :]
+    )
+    with pytest.raises(NotImplementedError, match="restart intervals"):
+        decode_pixels(restarted)
+    # a header the decoder cannot use fails by name, not KeyError
+    bad = bytearray(make_jpeg(8, 8, 50))
+    sos = bad.find(b"\xff\xda")
+    bad[sos + 5] = 9  # the scan names component 9
+    with pytest.raises(ValueError, match="component 9 not in the frame"):
+        decode_pixels(bytes(bad))
+    bad[sos + 5], bad[sos + 6] = 1, 0x11  # the scan binds tables never defined
+    with pytest.raises(ValueError, match="undefined table"):
+        decode_pixels(bytes(bad))
+
+
+def test_jpeg_single_component_scan_walks_its_own_block_grid():
+    """T.81 A.2.2: a single-component scan is non-interleaved and codes
+    the component's own ceil(w/8) x ceil(h/8) block grid whatever its
+    sampling factors, so a grayscale SOF declaring 2x2 sampling decodes
+    exactly like the 1x1 original, baseline and progressive alike."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_pixels,
+        make_jpeg,
+        make_jpeg_progressive,
+    )
+
+    for make, sof_marker in ((make_jpeg, b"\xff\xc0"),
+                             (make_jpeg_progressive, b"\xff\xc2")):
+        for w, h in [(24, 8), (40, 24), (8, 8)]:
+            j = make(w, h, 7)
+            sampling = j.find(sof_marker) + 11  # first component's H<<4|V
+            assert j[sampling] == 0x11
+            patched = j[:sampling] + b"\x22" + j[sampling + 1 :]
+            assert decode_pixels(patched) == decode_pixels(j), (make, w, h)
+
+
+def test_jpeg_baseline_components_in_separate_scans():
+    """T.81 allows a baseline frame's components in one scan each
+    (non-interleaved): Y, Cb and Cr as three single-component scans
+    decode exactly like make_jpeg's one interleaved scan. A component
+    coded twice is refused by name."""
+    import struct
+
+    from simplemapreduceframework_spark.operators.multimodal import (
+        _JPEG_DC_EOB,
+        _jpeg_scan_writer,
+        decode_pixels,
+        make_jpeg,
+    )
+
+    fill = 77
+    j = make_jpeg(16, 8, fill, sampling=(1, 1))
+    head = j[: j.find(b"\xff\xda")]
+    levels = {
+        1: [fill % 256, (fill * 7 + 13) % 256],  # the two checker blocks
+        2: [(fill * 31 + 7) % 256] * 2,
+        3: [(fill * 17 + 3) % 256] * 2,
+    }
+    scans = []
+    for cid, values in levels.items():
+        scan, emit, pad = _jpeg_scan_writer()
+        pred = 0
+        for v in values:
+            emit(*_JPEG_DC_EOB[v - 128 - pred])  # DC difference, then EOB
+            pred = v - 128
+        pad()
+        scans.append(
+            b"\xff\xda" + struct.pack(">HB", 8, 1)
+            + bytes([cid, 0x00, 0, 63, 0]) + bytes(scan)
+        )
+    assert decode_pixels(head + b"".join(scans) + b"\xff\xd9") == (
+        decode_pixels(j)
+    )
+    with pytest.raises(ValueError, match="each component once"):
+        decode_pixels(head + b"".join(scans + scans[:1]) + b"\xff\xd9")
+
+
+def test_jpeg_16bit_quant_table_decodes_like_8bit():
+    """A DQT with Pq=1 (16-bit big-endian entries, T.81 B.2.4.1) holding
+    the same steps decodes exactly like make_jpeg's 8-bit table."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        _JPEG_DQT,
+        _JPEG_QAC,
+        _JPEG_QDC,
+        _jpeg_segment,
+        decode_pixels,
+        make_jpeg,
+    )
+
+    steps = [_JPEG_QDC] + [_JPEG_QAC] * 63
+    wide = _jpeg_segment(
+        0xDB, b"\x10" + b"".join(q.to_bytes(2, "big") for q in steps)
+    )
+    j = make_jpeg(24, 16, 9, sampling=(1, 1))
+    assert decode_pixels(j.replace(_JPEG_DQT, wide)) == decode_pixels(j)
 
 
 def test_jpeg_color_roundtrip_closed_form():
