@@ -344,6 +344,12 @@ def test_operators_on_empty_tables(spark, tmp_path):
         "text_normalize_unicode",
         "dedup_substring",
         "tokenizer_fertility",
+        # the composed training-data pipeline and the twin/standalone
+        # stages it calls: each stage builder must keep its empty-input
+        # behaviour inside every query that composes it
+        "pipeline_prepare_training_data",
+        "dedup_substring_hashed",
+        "text_quality_score",
     ]:
         rows = registry.QUERIES[name](spark, empty_dir).collect()
         assert rows == [], (name, rows[:3])
@@ -437,6 +443,17 @@ def test_operators_with_null_text_rows(spark, tmp_path):
             "text_normalize_unicode",
             "dedup_substring",
             "tokenizer_fertility",
+            # the corpus-cleaning stages and their composed pipelines:
+            # a NULL text scores NULL quality features, so it fails the
+            # quality floor, and it still splits, shards and packs by
+            # doc_id alone in the standalone train-set operators
+            "text_quality_classifier",
+            "pipeline_clean_corpus",
+            "pipeline_prepare_training_data",
+            "dedup_substring_hashed",
+            "pack_sequences",
+            "split_train_test",
+            "corpus_shuffle_shard",
         ]:
             problems = compare_query(
                 spark, con, registry.QUERIES[name], registry.ORACLES[name], nd
