@@ -312,7 +312,9 @@ def main() -> None:
         out.append(f"**Claim:** {claim}")
         out.append("")
         out.append("```")
-        out.append(explain_str(df).strip())
+        # the data dir is host-specific: mask it so the file only
+        # changes when a plan does
+        out.append(explain_str(df).strip().replace(SF, "<sf_dir>"))
         out.append("```")
         out.append("")
     if appendix:

@@ -38,6 +38,7 @@ from ..functions import tokens_regex
 from ..registry import query
 from ..session_memo import per_session
 from ..sources import load_table
+from .textanalysis import quality_features
 
 # Shared PII regexes — written to the common Java-regex / RE2 subset
 # (no lookaround, no backrefs) so Spark and DuckDB agree byte-for-byte.
@@ -279,6 +280,20 @@ def _hygiene_verdicts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hygiene_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hygiene frame's rows that survive both per-doc verdicts,
+    shared by pipeline_hygiene and pipeline_chunked_corpus. The
+    predicate restores the oracles' joins on the frame's left-joined
+    columns: `keep` is null for token-less docs (the `rep` inner join
+    drops them), and benchmark docs or docs with a shared gram fail the
+    `hits` left join + residue filter."""
+    return _hygiene_verdicts_shared(spark, sf_dir).filter(
+        F.col("keep")
+        & ~F.col("is_bench")
+        & (F.coalesce("n_shared", F.lit(0)) == 0)
+    )
+
+
 # The batch queries' oracles, shared with their streaming twins
 # (streaming_hygiene_live, streaming_decontaminate_live).
 _REP_ORACLE = f"WITH {_TOKS_CTE},\n{_REP_CTES}\nSELECT * FROM rep"
@@ -411,11 +426,10 @@ def pipeline_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators gate, materialized once per session), and the oracle
     chains the *same shared CTE strings* those operators' oracles are
     built from — so the composition is provably the chain of the gated
-    formulas. The filter predicate reproduces the oracle's inner joins
-    on the shared frame's left-joined columns: `keep` (null for
-    token-less docs, which the `rep` inner join drops) and ~is_bench
-    with a 0-coalesced hit count (the `hits` left join + residue
-    filter).
+    formulas. The survivors are _hygiene_survivors (the predicate that
+    restores the oracle's joins, shared with pipeline_chunked_corpus),
+    and exact dedup is pipeline_clean_corpus's keep-first window
+    (pipeline.keep_first_copy).
 
     Stage order is the scale story: both per-doc verdicts come off one
     materialized doc_id-keyed frame; exact dedup (the one
@@ -423,19 +437,12 @@ def pipeline_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-source rollup is a partial-aggregated groupBy on the
     tiny source dimension.
     """
-    shared = _hygiene_verdicts_shared(spark, sf_dir)
-    clean = shared.filter(
-        F.col("keep")
-        & ~F.col("is_bench")
-        & (F.coalesce("n_shared", F.lit(0)) == 0)
-    ).select("doc_id", "source", "content_md5", "n_tok", "distinct_ratio")
-    from pyspark.sql.window import Window
+    from .pipeline import keep_first_copy
 
-    w = Window.partitionBy("content_md5").orderBy("doc_id")
-    deduped = (
-        clean.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "source", "n_tok", "distinct_ratio")
+    deduped = keep_first_copy(
+        _hygiene_survivors(spark, sf_dir).select(
+            "doc_id", "source", "content_md5", "n_tok", "distinct_ratio"
+        )
     )
     return deduped.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -753,12 +760,7 @@ def pipeline_chunked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
     docs = load_table(spark, sf_dir, "documents")
-    shared = _hygiene_verdicts_shared(spark, sf_dir)
-    verdicts = shared.filter(
-        F.col("keep")
-        & ~F.col("is_bench")
-        & (F.coalesce("n_shared", F.lit(0)) == 0)
-    ).select("doc_id")
+    verdicts = _hygiene_survivors(spark, sf_dir).select("doc_id")
     kept = (
         docs.select("doc_id", "source", _tokens())
         .join(verdicts, "doc_id")
@@ -916,27 +918,12 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals under the module's ulp policy. Row-local -> zero
     shuffles, embarrassingly parallel at 100 TB.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    f = docs.select(
+    q = quality_features()
+    f = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        (
-            F.size(tokens_regex("text")).cast("double")
-            / F.greatest(F.length("text"), F.lit(1))
-        ).alias("tok_d"),
-        (
-            F.size(
-                F.regexp_extract_all(
-                    "text", F.lit(r"\b(the|a|of|and|to)\b"), 0
-                )
-            ).cast("double")
-            / F.greatest(F.size(tokens_regex("text")), F.lit(1))
-        ).alias("stop_r"),
-        (
-            F.size(F.regexp_extract_all("text", F.lit("[A-Za-z]"), 0)).cast(
-                "double"
-            )
-            / F.greatest(F.length("text"), F.lit(1))
-        ).alias("alpha_r"),
+        q["token_density"].alias("tok_d"),
+        q["stopword_ratio"].alias("stop_r"),
+        q["alpha_ratio"].alias("alpha_r"),
     )
     margin = (
         (

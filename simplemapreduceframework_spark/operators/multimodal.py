@@ -22,7 +22,7 @@ Each synthesize->decode codec query is one row of `_CODEC_QUERIES`
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator, Sequence
-from typing import NamedTuple
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -143,6 +143,44 @@ def _parse_jpeg(b: bytes) -> tuple[int, int]:
     raise ValueError("no SOF marker found")
 
 
+def _parse_header(b: bytes) -> tuple[str, int, int]:
+    """(format, width, height) from the header of a supported codec."""
+    if b[:2] == b"BM":
+        return ("bmp", *_parse_bmp(b))
+    if b[:2] in (b"P6", b"P3"):
+        return ("ppm", *_parse_ppm(b))
+    if b[:2] in (b"P5", b"P2"):
+        return ("pgm", *_parse_ppm(b))
+    if b[:8] == b"\x89PNG\r\n\x1a\n":
+        return ("png", *_parse_png(b))
+    if b[:6] in (b"GIF87a", b"GIF89a"):
+        return ("gif", *_parse_gif(b))
+    if b[:2] == b"\xff\xd8":
+        return ("jpeg", *_parse_jpeg(b))
+    raise NotImplementedError(
+        f"unsupported codec (magic {b[:2]!r}): full pixel "
+        "decode and audio/video require PIL/ffmpeg — not "
+        "available here"
+    )
+
+
+def _decode_identified(decode: Callable[[bytes], Any], b: bytes, doc_id):
+    """``decode(b)`` for the row loops of decode_real,
+    decode_real_pixels and decode_real_audio: a truncated or corrupt
+    payload fails loud and identified (doc id and size), not with a raw
+    struct/zlib/index error deep in the worker. NotImplementedError (an
+    unsupported codec) passes through unchanged."""
+    try:
+        return decode(b)
+    except NotImplementedError:
+        raise
+    except Exception as exc:
+        raise ValueError(
+            f"malformed {b[:2]!r} payload for doc {doc_id} "
+            f"({len(b)} bytes): {exc}"
+        ) from exc
+
+
 def decode_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """REAL codec decode for every format a pure-stdlib header parse
     can handle — BMP, netpbm (PPM/PGM), PNG, GIF, and JPEG dimension
@@ -162,40 +200,7 @@ def decode_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 out["format"].append(None)
                 continue
             b = bytes(payload)
-            try:
-                if b[:2] == b"BM":
-                    w, h = _parse_bmp(b)
-                    fmt = "bmp"
-                elif b[:2] in (b"P6", b"P3"):
-                    w, h = _parse_ppm(b)
-                    fmt = "ppm"
-                elif b[:2] in (b"P5", b"P2"):
-                    w, h = _parse_ppm(b)
-                    fmt = "pgm"
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h = _parse_png(b)
-                    fmt = "png"
-                elif b[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h = _parse_gif(b)
-                    fmt = "gif"
-                elif b[:2] == b"\xff\xd8":
-                    w, h = _parse_jpeg(b)
-                    fmt = "jpeg"
-                else:
-                    raise NotImplementedError(
-                        f"unsupported codec (magic {b[:2]!r}): full pixel "
-                        "decode and audio/video require PIL/ffmpeg — not "
-                        "available here"
-                    )
-            except NotImplementedError:
-                raise
-            except Exception as exc:
-                # truncated/corrupt header: fail loud and identified,
-                # not with a raw struct/int error deep in the worker
-                raise ValueError(
-                    f"malformed {b[:2]!r} payload for doc {doc_id} "
-                    f"({len(b)} bytes): {exc}"
-                ) from exc
+            fmt, w, h = _decode_identified(_parse_header, b, doc_id)
             out["doc_id"].append(doc_id)
             out["n_bytes"].append(len(b))
             out["width"].append(w)
@@ -312,6 +317,11 @@ def decode_pixels(b: bytes) -> tuple[str, int, int, int, int]:
         if bpp != 24:
             raise NotImplementedError(f"{bpp}-bit BMP needs a palette codec")
         stride = ((3 * w + 3) // 4) * 4
+        if h and len(b) < offset + (h - 1) * stride + 3 * w:
+            raise ValueError(
+                f"BMP raster truncated: {len(b)} bytes, header declares "
+                f"{w}x{h} at offset {offset}"
+            )
         total = 0
         for r in range(h):
             row = b[offset + r * stride : offset + r * stride + 3 * w]
@@ -321,6 +331,10 @@ def decode_pixels(b: bytes) -> tuple[str, int, int, int, int]:
         w, h, _maxval, off = _netpbm_data_offset(b)
         ch = 3 if b[:2] == b"P6" else 1
         data = b[off : off + ch * w * h]
+        if len(data) < ch * w * h:
+            raise ValueError(
+                f"netpbm raster truncated: {len(data)} of {ch * w * h} bytes"
+            )
         total = int(np.frombuffer(data, dtype=np.uint8).sum())
         fmt = "ppm" if ch == 3 else "pgm"
         return fmt, w, h, ch, total
@@ -376,7 +390,7 @@ def decode_real_pixels(
                     rows[k].append(None)
                 continue
             b = bytes(payload)
-            fmt, w, h, ch, total = decode_pixels(b)
+            fmt, w, h, ch, total = _decode_identified(decode_pixels, b, doc_id)
             rows["n_bytes"].append(len(b))
             rows["width"].append(w)
             rows["height"].append(h)
@@ -2228,6 +2242,10 @@ def decode_flac(b: bytes) -> tuple[int, int, int, int, int]:
             raise ValueError("FLAC frame CRC-16 mismatch")
         pos = br.pos + 2
         done += n
+    if done < total:
+        raise ValueError(
+            f"FLAC frames end after {done} of {total} samples"
+        )
     return rate, channels, done, sample_sum, peak
 
 
@@ -2448,10 +2466,9 @@ def decode_real_audio(
                     rows[k].append(None)
                 continue
             b = bytes(payload)
-            if b[:4] == b"fLaC":
-                rate, ch, n_frames, total, peak = decode_flac(b)
-            else:
-                rate, ch, n_frames, total, peak = decode_wav(b)
+            rate, ch, n_frames, total, peak = _decode_identified(
+                decode_flac if b[:4] == b"fLaC" else decode_wav, b, doc_id
+            )
             rows["n_bytes"].append(len(b))
             rows["sample_rate"].append(rate)
             rows["channels"].append(ch)

@@ -7,10 +7,13 @@ first (cheapest, biggest volume cut, no shuffle), exact dedup second
 (one hash-groupBy on the survivors), near-dup removal third (the
 MinHash/LSH pair list is computed once over the corpus and reused —
 on a cluster it is a persisted table shared by every pipeline run),
-and only then the per-source aggregate. Every stage reuses the exact
-formulas of its standalone operator (text_quality_score,
-dedup_exact, dedup_minhash_lsh), so the composition is bit-exact
-against the same CTEs chained in DuckDB.
+and only then the per-source aggregate. Every stage is written once
+and called here: the quality features are text_quality_score's
+builder, the MinHash tails are dedup_minhash_lsh itself, and
+pipeline_prepare_training_data's split, shard and packing stages are
+the trainstages builders behind split_train_test and pack_sequences.
+The oracles chain the same CTEs, so each composition is bit-exact
+against DuckDB.
 
 Numeric policy (functions/columns.py): counts and token sums are
 BIGINT; quality doubles divide identical integers; the per-source
@@ -24,11 +27,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import tokens_regex
 from ..functions.scale import broadcast_dim, table_rows
 from ..registry import query
 from ..sources import load_table
 from .dedup import _MINHASH_PAIRS_CTES, dedup_minhash_lsh
+from .textanalysis import quality_features
+from .trainstages import (
+    _ORD_SQL,
+    _PACK_LEN,
+    _SHARD_SQL,
+    _SPLIT_SQL,
+    _TEST_PCT,
+    _split_bucket,
+    pack_stats,
+)
 
 _MIN_QUALITY = 0.43
 _MIN_TOKENS = 20
@@ -69,9 +81,23 @@ GROUP BY source
 """
 
 
-@query("pipeline_clean_corpus", family="shingle", oracle=_PIPELINE_ORACLE)
-def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed corpus-cleaning pipeline (see module docstring).
+def keep_first_copy(df: DataFrame) -> DataFrame:
+    """Exact dedup that keeps whole rows: of each ``content_md5`` group
+    only the row with the smallest doc_id survives (dedup_exact's
+    canonical id), with its other columns; ``content_md5`` is dropped.
+    One hash exchange on the 16-byte key."""
+    w = Window.partitionBy("content_md5").orderBy("doc_id")
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn", "content_md5")
+    )
+
+
+def _clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cleaning prefix of both composed pipelines: the
+    text_quality_score floor, exact dedup, then MinHash near-dup
+    removal. Returns (doc_id, source, n_tok, quality) per survivor.
 
     Near-dup removal keeps the smallest doc_id of each verified pair
     (docs appearing on the doc_b side are dropped via an anti join).
@@ -81,39 +107,21 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     a Bloom sketch of the tails (see bloom_semi_filter) before the
     exact anti join.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    metrics = docs.select(
+    q = quality_features()
+    metrics = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.md5("text").alias("content_md5"),
-        F.size(tokens_regex("text")).cast("bigint").alias("n_tok"),
-        (
-            (
-                F.size(
-                    F.regexp_extract_all(
-                        "text", F.lit(r"\b(the|a|of|and|to)\b"), 0
-                    )
-                ).cast("double")
-                / F.greatest(F.size(tokens_regex("text")), F.lit(1))
-                + F.size(F.regexp_extract_all("text", F.lit("[A-Za-z]"), 0)).cast(
-                    "double"
-                )
-                / F.greatest(F.length("text"), F.lit(1))
-            )
-            / 2
-        ).alias("quality"),
+        q["n_tok"].alias("n_tok"),
+        q["quality"].alias("quality"),
     )
-    quality_kept = metrics.filter(
-        (F.col("quality") >= _MIN_QUALITY) & (F.col("n_tok") >= _MIN_TOKENS)
-    )
-    w = Window.partitionBy("content_md5").orderBy("doc_id")
-    exact_deduped = (
-        quality_kept.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "source", "n_tok", "quality")
+    exact_deduped = keep_first_copy(
+        metrics.filter(
+            (F.col("quality") >= _MIN_QUALITY) & (F.col("n_tok") >= _MIN_TOKENS)
+        )
     )
     dup_tails = dedup_minhash_lsh(spark, sf_dir).select("doc_b").distinct()
-    near_deduped = exact_deduped.join(
+    return exact_deduped.join(
         # |tails| <= |documents|; tails derive under the persisted
         # shingle/minhash fragments -> pin the hash build above budget
         broadcast_dim(
@@ -124,7 +132,13 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_deduped["doc_id"] == dup_tails["doc_b"],
         "left_anti",
     )
-    return near_deduped.groupBy("source").agg(
+
+
+@query("pipeline_clean_corpus", family="shingle", oracle=_PIPELINE_ORACLE)
+def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed corpus-cleaning pipeline (see module docstring): the
+    shared cleaning prefix (_clean_corpus), then per-source stats."""
+    return _clean_corpus(spark, sf_dir).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("total_tokens"),
         F.min("quality").alias("min_quality"),
@@ -134,9 +148,10 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The full training-data preparation, end to end, as ONE query:
 # quality filter -> exact dedup -> near-dup removal -> train split ->
-# deterministic shuffle-shard -> sequence packing. Every stage reuses
-# the exact formula of its standalone operator, so the entire
-# composition remains hash-exact against the chained CTEs in DuckDB.
+# deterministic shuffle-shard -> sequence packing. Every stage calls
+# the builder of its standalone operator, and the oracle chains the
+# CTEs of those operators' oracles, so the whole composition is
+# hash-exact against DuckDB.
 _PREP_ORACLE = f"""
 WITH {_MINHASH_PAIRS_CTES},
 metrics AS (
@@ -165,10 +180,10 @@ clean AS (
 ),
 train AS (
     SELECT doc_id, n_tok,
-           CAST('0x' || substr(md5('shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 8 AS shard_id,
-           CAST('0x' || substr(md5('ord' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS shuffle_key
+           {_SHARD_SQL} AS shard_id,
+           {_ORD_SQL} AS shuffle_key
     FROM clean
-    WHERE CAST('0x' || substr(md5('split' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 >= 10
+    WHERE {_SPLIT_SQL} >= {_TEST_PCT}
 ),
 cum AS (
     SELECT shard_id, doc_id, n_tok,
@@ -178,12 +193,12 @@ cum AS (
     FROM train
 )
 SELECT shard_id,
-       CAST(FLOOR((cum_tok - 1) / 512) AS BIGINT) AS pack_id,
+       CAST(FLOOR((cum_tok - 1) / {_PACK_LEN}) AS BIGINT) AS pack_id,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
        MIN(doc_id) AS min_doc_id
 FROM cum
-GROUP BY shard_id, CAST(FLOOR((cum_tok - 1) / 512) AS BIGINT)
+GROUP BY shard_id, CAST(FLOOR((cum_tok - 1) / {_PACK_LEN}) AS BIGINT)
 """
 
 
@@ -197,85 +212,22 @@ def pipeline_prepare_training_data(spark: SparkSession, sf_dir: str) -> DataFram
     One Catalyst plan means the optimizer sees the whole pipeline:
     filters run against the scan, the dedup window and the pack window
     each get one hash exchange, and the near-dup list broadcasts.
-    Stage formulas are shared verbatim with pipeline_clean_corpus and
-    the traindata operators, so the composition hash-matches the same
-    CTE chain in DuckDB end to end.
+    Every stage is the builder its standalone operator runs: the
+    cleaning prefix is pipeline_clean_corpus's _clean_corpus, and the
+    split bucket, shard, shuffle order and packing are trainstages'
+    builders behind split_train_test and pack_sequences. The oracle
+    chains the same CTEs, built from the same trainstages SQL
+    fragments, so the composition hash-matches DuckDB end to end.
     """
-    from ..functions import hex32
-    from pyspark.sql.window import Window as W
-
-    docs = load_table(spark, sf_dir, "documents")
-    metrics = docs.select(
-        "doc_id",
-        F.md5("text").alias("content_md5"),
-        F.size(tokens_regex("text")).cast("bigint").alias("n_tok"),
-        (
-            (
-                F.size(
-                    F.regexp_extract_all(
-                        "text", F.lit(r"\b(the|a|of|and|to)\b"), 0
-                    )
-                ).cast("double")
-                / F.greatest(F.size(tokens_regex("text")), F.lit(1))
-                + F.size(F.regexp_extract_all("text", F.lit("[A-Za-z]"), 0)).cast(
-                    "double"
-                )
-                / F.greatest(F.length("text"), F.lit(1))
-            )
-            / 2
-        ).alias("quality"),
-    )
-    quality_kept = metrics.filter(
-        (F.col("quality") >= _MIN_QUALITY) & (F.col("n_tok") >= _MIN_TOKENS)
-    )
-    dw = Window.partitionBy("content_md5").orderBy("doc_id")
-    exact_deduped = (
-        quality_kept.withColumn("rn", F.row_number().over(dw))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "n_tok")
-    )
-    dup_tails = dedup_minhash_lsh(spark, sf_dir).select("doc_b").distinct()
-    clean = exact_deduped.join(
-        # |tails| <= |documents|; tails derive under the persisted
-        # shingle/minhash fragments -> pin the hash build above budget
-        broadcast_dim(
-            dup_tails,
-            table_rows(spark, sf_dir, "documents"),
-            fallback="shuffle_hash",
-        ),
-        exact_deduped["doc_id"] == dup_tails["doc_b"],
-        "left_anti",
-    )
-
-    def _salt_hash(salt: str) -> F.Column:
-        return hex32(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
-
-    train = clean.filter(_salt_hash("split") % 100 >= 10).select(
-        "doc_id",
-        "n_tok",
-        (_salt_hash("shard") % 8).alias("shard_id"),
-        _salt_hash("ord").alias("shuffle_key"),
-    )
-    pw = W.partitionBy("shard_id").orderBy("shuffle_key", "doc_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    packed = train.select(
-        "shard_id",
-        "doc_id",
-        "n_tok",
-        F.floor((F.sum("n_tok").over(pw) - 1) / 512).alias("pack_id"),
-    )
-    return packed.groupBy("shard_id", "pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.min("doc_id").alias("min_doc_id"),
-    )
+    train = _clean_corpus(spark, sf_dir).filter(_split_bucket() >= _TEST_PCT)
+    return pack_stats(train)
 
 
 # Deterministic "v2" of the documents corpus, derived identically on
 # both engines so the diff below needs no second physical table:
 # doc_id % 10 == 0 rows are dropped, % 7 == 0 survivors get a text
 # revision, and % 13 == 0 docs spawn a NEW doc at doc_id + 1_000_000.
+_SNAPSHOT_DROP_MOD, _SNAPSHOT_REV_MOD, _SNAPSHOT_ADD_MOD = 10, 7, 13
 _SNAPSHOT_ADD_OFFSET = 1_000_000
 
 _SNAPSHOT_DIFF_ORACLE = f"""
@@ -284,14 +236,14 @@ WITH v1 AS (
 ),
 v2 AS (
     SELECT doc_id,
-           MD5(CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]'
+           MD5(CASE WHEN doc_id % {_SNAPSHOT_REV_MOD} = 0 THEN text || ' [rev2]'
                     ELSE text END) AS fp,
            TRUE AS present
-    FROM documents WHERE doc_id % 10 != 0
+    FROM documents WHERE doc_id % {_SNAPSHOT_DROP_MOD} != 0
     UNION ALL
     SELECT doc_id + {_SNAPSHOT_ADD_OFFSET},
            MD5('added doc ' || CAST(doc_id AS VARCHAR)), TRUE
-    FROM documents WHERE doc_id % 13 = 0
+    FROM documents WHERE doc_id % {_SNAPSHOT_ADD_MOD} = 0
 )
 SELECT doc_id,
        CASE WHEN v2.present IS NULL THEN 'removed'
@@ -329,19 +281,19 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("fp"), F.lit(True).alias("present")
     )
     v2 = (
-        docs.filter(F.col("doc_id") % 10 != 0)
+        docs.filter(F.col("doc_id") % _SNAPSHOT_DROP_MOD != 0)
         .select(
             "doc_id",
             F.md5(
                 F.when(
-                    F.col("doc_id") % 7 == 0,
+                    F.col("doc_id") % _SNAPSHOT_REV_MOD == 0,
                     F.concat(F.col("text"), F.lit(" [rev2]")),
                 ).otherwise(F.col("text"))
             ).alias("fp"),
             F.lit(True).alias("present"),
         )
         .unionByName(
-            docs.filter(F.col("doc_id") % 13 == 0).select(
+            docs.filter(F.col("doc_id") % _SNAPSHOT_ADD_MOD == 0).select(
                 (F.col("doc_id") + _SNAPSHOT_ADD_OFFSET).alias("doc_id"),
                 F.md5(
                     F.concat(

@@ -31,7 +31,7 @@ import unicodedata
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -126,9 +126,9 @@ _SUB_K = 32
 _SUB_STRIDE = 8
 
 
-@query(
-    "dedup_substring",
-    oracle=f"""
+# The ExactSubstr report's oracle: raw windows, for both twins below
+# (a hashed key can only merge windows, which the raw form disproves).
+_SUB_ORACLE = f"""
 WITH base AS (
     SELECT doc_id, text, LENGTH(text) AS len
     FROM documents WHERE text IS NOT NULL
@@ -154,8 +154,58 @@ FROM agg
 UNION ALL
 SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
 FROM base WHERE len < {_SUB_K}
-""",
-)
+"""
+
+
+def _substring_dup_report(
+    spark: SparkSession, sf_dir: str, key: Column
+) -> DataFrame:
+    """The ExactSubstr report of both twins, shuffled on ``key`` (a
+    Column over the 32-char window ``win``). Only the key leaves the
+    window scan: per-(key, doc) counts, a count window over the key for
+    cross-doc multiplicity, then a per-doc fold; docs shorter than one
+    window union in as zero rows from the same pruned scan."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    eligible = docs.filter(F.length("text") >= _SUB_K)
+    wins = eligible.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(1, length(text) - {_SUB_K} + 1,"
+                f" {_SUB_STRIDE}), p -> substring(text, p, {_SUB_K}))"
+            )
+        ).alias("win"),
+    ).select("doc_id", key.alias("k"))
+    per = wins.groupBy("k", "doc_id").agg(F.count(F.lit(1)).alias("c"))
+    pernd = per.withColumn(
+        "nd", F.count(F.lit(1)).over(Window.partitionBy("k"))
+    )
+    agg = pernd.groupBy("doc_id").agg(
+        F.sum("c").cast("bigint").alias("n_windows"),
+        F.sum(F.when(F.col("nd") >= 2, F.col("c")).otherwise(0))
+        .cast("bigint")
+        .alias("n_dup_windows"),
+    )
+    long_rows = agg.select(
+        "doc_id",
+        "n_windows",
+        "n_dup_windows",
+        (F.col("n_dup_windows").cast("double") / F.col("n_windows")).alias(
+            "dup_ratio"
+        ),
+    )
+    short_rows = docs.filter(F.length("text") < _SUB_K).select(
+        "doc_id",
+        F.lit(0).cast("bigint").alias("n_windows"),
+        F.lit(0).cast("bigint").alias("n_dup_windows"),
+        F.lit(None).cast("double").alias("dup_ratio"),
+    )
+    return long_rows.unionByName(short_rows)
+
+
+@query("dedup_substring", oracle=_SUB_ORACLE)
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document exact-substring duplication (Lee et al. 2022
     ExactSubstr, reshaped for declarative execution): slice every doc
@@ -170,136 +220,31 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated windows, a count window over win annotates cross-doc
     multiplicity (high-cardinality partition key — no skew pile-up),
     and groupBy doc folds totals. Docs shorter than one window union in
-    as zero-rows from the same pruned scan. At 100 TB the shuffle key
-    would be xxhash64(win) (8 B vs 32 B, collision-bounded) — kept as
-    the raw window here so the oracle is textually identical.
+    as zero-rows from the same pruned scan. The shuffle key is the raw
+    window, the key the oracle groups on; dedup_substring_hashed is the
+    same report keyed on xxhash64(win).
 
     DuckDB note: SUM(BIGINT) silently widens to HUGEINT, so the oracle
     pins the final projection back to BIGINT (the r5 pagerank class)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    eligible = docs.filter(F.length("text") >= _SUB_K)
-    wins = eligible.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(text) - {_SUB_K} + 1,"
-                f" {_SUB_STRIDE}), p -> substring(text, p, {_SUB_K}))"
-            )
-        ).alias("win"),
-    )
-    per = wins.groupBy("win", "doc_id").agg(F.count(F.lit(1)).alias("c"))
-    pernd = per.withColumn(
-        "nd", F.count(F.lit(1)).over(Window.partitionBy("win"))
-    )
-    agg = pernd.groupBy("doc_id").agg(
-        F.sum("c").cast("bigint").alias("n_windows"),
-        F.sum(F.when(F.col("nd") >= 2, F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("n_dup_windows"),
-    )
-    long_rows = agg.select(
-        "doc_id",
-        "n_windows",
-        "n_dup_windows",
-        (F.col("n_dup_windows").cast("double") / F.col("n_windows")).alias(
-            "dup_ratio"
-        ),
-    )
-    short_rows = docs.filter(F.length("text") < _SUB_K).select(
-        "doc_id",
-        F.lit(0).cast("bigint").alias("n_windows"),
-        F.lit(0).cast("bigint").alias("n_dup_windows"),
-        F.lit(None).cast("double").alias("dup_ratio"),
-    )
-    return long_rows.unionByName(short_rows)
+    return _substring_dup_report(spark, sf_dir, F.col("win"))
 
 
-@query(
-    "dedup_substring_hashed",
-    oracle=f"""
-WITH base AS (
-    SELECT doc_id, text, LENGTH(text) AS len
-    FROM documents WHERE text IS NOT NULL
-),
-wins AS (
-    SELECT doc_id, SUBSTRING(text, CAST(p AS INT), {_SUB_K}) AS win
-    FROM base, UNNEST(range(1, len - {_SUB_K} + 2, {_SUB_STRIDE})) AS t(p)
-    WHERE len >= {_SUB_K}
-),
-per AS (SELECT win, doc_id, COUNT(*) AS c FROM wins GROUP BY win, doc_id),
-pernd AS (SELECT *, COUNT(*) OVER (PARTITION BY win) AS nd FROM per),
-agg AS (
-    SELECT doc_id,
-           SUM(c) AS n_windows,
-           SUM(CASE WHEN nd >= 2 THEN c ELSE 0 END) AS n_dup
-    FROM pernd GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST(n_windows AS BIGINT) AS n_windows,
-       CAST(n_dup AS BIGINT) AS n_dup_windows,
-       CAST(n_dup AS DOUBLE) / n_windows AS dup_ratio
-FROM agg
-UNION ALL
-SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
-FROM base WHERE len < {_SUB_K}
-""",
-)
+@query("dedup_substring_hashed", oracle=_SUB_ORACLE)
 def dedup_substring_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB form of ``dedup_substring``: identical window
-    geometry and per-doc report, but every shuffle keys on
-    ``xxhash64(win)`` instead of the raw 32-char window — 8-byte fixed
-    keys instead of 32-byte strings through both exchanges and the
-    count window, which at corpus scale is the difference between
-    shuffling the corpus and shuffling a quarter of it. The raw window
-    is projected AWAY before the first exchange; downstream only the
-    hash travels. A cross-doc hash collision would merge two distinct
+    """The 100 TB form of ``dedup_substring``: the same report builder
+    with ``xxhash64(win)`` as the shuffle key instead of the raw
+    32-char window — 8-byte fixed keys instead of 32-byte strings
+    through both exchanges and the count window, which at corpus scale
+    is the difference between shuffling the corpus and shuffling a
+    quarter of it. The raw window is projected away before the first
+    exchange. A cross-doc hash collision would merge two distinct
     windows (overcounting n_dup_windows by the collided positions);
     with 64-bit hashes that needs ~2^32 distinct windows for even-odds
-    of ONE collision, and the registered oracle (identical to
-    ``dedup_substring``'s, raw windows) plus the pairwise equivalence
-    test in tests/test_textnorm.py prove the corpus result is
-    bit-identical to the exact form.
+    of ONE collision, and the shared raw-window oracle plus the
+    pairwise equivalence test in tests/test_textnorm.py prove the
+    corpus result is bit-identical to the exact form.
     """
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    eligible = docs.filter(F.length("text") >= _SUB_K)
-    wins = eligible.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(text) - {_SUB_K} + 1,"
-                f" {_SUB_STRIDE}), p -> substring(text, p, {_SUB_K}))"
-            )
-        ).alias("win"),
-    ).select("doc_id", F.xxhash64("win").alias("h"))  # raw win dies here
-    per = wins.groupBy("h", "doc_id").agg(F.count(F.lit(1)).alias("c"))
-    pernd = per.withColumn(
-        "nd", F.count(F.lit(1)).over(Window.partitionBy("h"))
-    )
-    agg = pernd.groupBy("doc_id").agg(
-        F.sum("c").cast("bigint").alias("n_windows"),
-        F.sum(F.when(F.col("nd") >= 2, F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("n_dup_windows"),
-    )
-    long_rows = agg.select(
-        "doc_id",
-        "n_windows",
-        "n_dup_windows",
-        (F.col("n_dup_windows").cast("double") / F.col("n_windows")).alias(
-            "dup_ratio"
-        ),
-    )
-    short_rows = docs.filter(F.length("text") < _SUB_K).select(
-        "doc_id",
-        F.lit(0).cast("bigint").alias("n_windows"),
-        F.lit(0).cast("bigint").alias("n_dup_windows"),
-        F.lit(None).cast("double").alias("dup_ratio"),
-    )
-    return long_rows.unionByName(short_rows)
+    return _substring_dup_report(spark, sf_dir, F.xxhash64("win"))
 
 
 @query(

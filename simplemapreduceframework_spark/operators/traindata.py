@@ -27,30 +27,31 @@ from ..registry import query
 from ..session_memo import per_session, shared_frame
 from ..sources import load_table
 
-_TEST_PCT = 10  # hash buckets [0, _TEST_PCT) -> test split
-_N_SHARDS = 8
-_PACK_LEN = 512  # tokens per packed training sequence
-
-# Row-local derivations shared by all three queries (and duplicated
-# verbatim in the oracles): a 0-99 split bucket and a shard id, both
-# from independent salted hashes of doc_id.
-_SPLIT_SQL = f"CAST('0x' || substr(md5('split' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100"
-_SHARD_SQL = f"CAST('0x' || substr(md5('shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {_N_SHARDS}"
-_ORD_SQL = "CAST('0x' || substr(md5('ord' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
-
-
-def _split_bucket() -> F.Column:
-    return hex32(F.concat(F.lit("split"), F.col("doc_id").cast("string"))) % 100
-
-
-def _shard_id() -> F.Column:
-    return (
-        hex32(F.concat(F.lit("shard"), F.col("doc_id").cast("string"))) % _N_SHARDS
-    )
+# The split/shard/order/pack formulas live in trainstages.py, shared
+# with pipeline_prepare_training_data; each oracle below is built from
+# the same SQL fragments as its engine's Column builders.
+from .trainstages import (  # noqa: F401  (_N_SHARDS: read by the tests)
+    _N_SHARDS,
+    _ORD_SQL,
+    _PACK_LEN,
+    _SHARD_SQL,
+    _SPLIT_SQL,
+    _TEST_PCT,
+    _split_bucket,
+    assign_shards,
+    pack_stats,
+)
 
 
-def _shuffle_key() -> F.Column:
-    return hex32(F.concat(F.lit("ord"), F.col("doc_id").cast("string")))
+# The oracle twin of assign_shards over the corpus, shared by
+# corpus_shuffle_shard and pack_sequences.
+_ASSIGNED_CTE = f"""assigned AS (
+    SELECT doc_id,
+           {_SHARD_SQL} AS shard_id,
+           {_ORD_SQL} AS shuffle_key,
+           LEN(regexp_extract_all(text, '\\w+')) AS n_tok
+    FROM documents
+)"""
 
 
 @query(
@@ -93,13 +94,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_shuffle_shard",
     oracle=f"""
-WITH assigned AS (
-    SELECT doc_id,
-           {_SHARD_SQL} AS shard_id,
-           {_ORD_SQL} AS shuffle_key,
-           LEN(regexp_extract_all(text, '\\w+')) AS n_tok
-    FROM documents
-)
+WITH {_ASSIGNED_CTE}
 SELECT shard_id,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
@@ -119,11 +114,10 @@ def corpus_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the permutation itself in the oracle check.
     """
     docs = load_table(spark, sf_dir, "documents")
-    assigned = docs.select(
-        "doc_id",
-        _shard_id().alias("shard_id"),
-        _shuffle_key().alias("shuffle_key"),
-        F.size(tokens_regex("text")).cast("bigint").alias("n_tok"),
+    assigned = assign_shards(
+        docs.select(
+            "doc_id", F.size(tokens_regex("text")).cast("bigint").alias("n_tok")
+        )
     )
     return assigned.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -140,13 +134,7 @@ def corpus_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pack_sequences",
     oracle=f"""
-WITH assigned AS (
-    SELECT doc_id,
-           {_SHARD_SQL} AS shard_id,
-           {_ORD_SQL} AS shuffle_key,
-           LEN(regexp_extract_all(text, '\\w+')) AS n_tok
-    FROM documents
-),
+WITH {_ASSIGNED_CTE},
 cum AS (
     SELECT shard_id, doc_id, n_tok,
            SUM(n_tok) OVER (PARTITION BY shard_id
@@ -180,25 +168,10 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic against the oracle.
     """
     docs = load_table(spark, sf_dir, "documents")
-    assigned = docs.select(
-        "doc_id",
-        _shard_id().alias("shard_id"),
-        _shuffle_key().alias("shuffle_key"),
-        F.size(tokens_regex("text")).cast("bigint").alias("n_tok"),
-    )
-    w = Window.partitionBy("shard_id").orderBy("shuffle_key", "doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    packed = assigned.select(
-        "shard_id",
-        "doc_id",
-        "n_tok",
-        (F.floor((F.sum("n_tok").over(w) - 1) / _PACK_LEN)).alias("pack_id"),
-    )
-    return packed.groupBy("shard_id", "pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.min("doc_id").alias("min_doc_id"),
+    return pack_stats(
+        docs.select(
+            "doc_id", F.size(tokens_regex("text")).cast("bigint").alias("n_tok")
+        )
     )
 
 

@@ -275,14 +275,76 @@ def test_codec_roundtrip_property():
 
 
 def test_decode_real_malformed_payload_is_identified():
-    """A truncated header of a SUPPORTED codec must raise an
-    identified ValueError (doc id + size), not a raw struct error."""
-    truncated_bmp = b"BM" + bytes(10)
-    truncated_ppm = b"P6\n12"
-    for payload in (truncated_bmp, truncated_ppm):
+    """A truncated payload of a SUPPORTED codec must raise an
+    identified ValueError (doc id + size) from every decode loop — the
+    header, pixel and audio decoders — not a raw struct/zlib/index
+    error that fails the task with no doc id."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_real_audio,
+        decode_real_pixels,
+        make_jpeg,
+        make_png,
+        make_wav,
+    )
+
+    import re
+
+    jpeg = make_jpeg(48, 16, 5, restart_interval=2)
+    no_rst = re.sub(rb"\xff[\xd0-\xd7]", b"", jpeg)  # RSTn markers cut
+    wav = make_wav(n_samples=10, sample_rate=8000, channels=1, fill=3)
+    for decode, payload in (
+        (decode_real, b"BM" + bytes(10)),
+        (decode_real, b"P6\n12"),
+        (decode_real_pixels, jpeg[: len(jpeg) // 2]),  # IndexError
+        (decode_real_pixels, no_rst),  # StopIteration
+        (decode_real_pixels, make_png(8, 8, 3)[:40]),  # zlib.error
+        (decode_real_audio, wav[:30]),  # struct.error
+    ):
         pdf = pd.DataFrame({"doc_id": [7], "payload": [payload]})
         with pytest.raises(ValueError, match="malformed .* doc 7"):
-            list(decode_real(iter([pdf])))
+            list(decode(iter([pdf])))
+
+
+def test_bmp_truncated_raster_raises():
+    """A BMP shorter than its header's raster must not sum the rows it
+    happens to have (the cut file decoded to pixel_sum 18, not 576)."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_pixels,
+        make_bmp,
+    )
+
+    assert decode_pixels(make_bmp(8, 8, 3))[4] == 576
+    with pytest.raises(ValueError, match="BMP raster truncated"):
+        decode_pixels(make_bmp(8, 8, 3)[:60])
+
+
+def test_netpbm_truncated_raster_raises():
+    """Same for binary PPM/PGM: a raster cut short of width x height x
+    channels bytes raises instead of decoding to a partial sum (57)."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_pixels,
+        make_pgm,
+        make_ppm,
+    )
+
+    for make in (make_ppm, make_pgm):
+        assert decode_pixels(make(8, 8, 3))[4] > 57
+        with pytest.raises(ValueError, match="netpbm raster truncated"):
+            decode_pixels(make(8, 8, 3)[:30])
+
+
+def test_flac_truncated_stream_raises():
+    """FLAC frames ending before STREAMINFO's nonzero total sample count
+    raise instead of reporting a clip with 0 of its 29 samples."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_flac,
+        make_flac,
+    )
+
+    flac = make_flac(n_samples=20, value=3, fixed_ramp=(1, 9))
+    assert decode_flac(flac)[2] == 29
+    with pytest.raises(ValueError, match="FLAC frames end after 0 of 29"):
+        decode_flac(flac[:40])
 
 
 def test_decode_real_null_payload_yields_null_features():
