@@ -38,7 +38,7 @@ from ..functions import tokens_regex
 from ..registry import query
 from ..session_memo import per_session
 from ..sources import load_table
-from .textanalysis import quality_features
+from .stages import keep_first_copy, quality_features
 
 # Shared PII regexes — written to the common Java-regex / RE2 subset
 # (no lookaround, no backrefs) so Spark and DuckDB agree byte-for-byte.
@@ -429,7 +429,7 @@ def pipeline_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas. The survivors are _hygiene_survivors (the predicate that
     restores the oracle's joins, shared with pipeline_chunked_corpus),
     and exact dedup is pipeline_clean_corpus's keep-first window
-    (pipeline.keep_first_copy).
+    (stages.keep_first_copy).
 
     Stage order is the scale story: both per-doc verdicts come off one
     materialized doc_id-keyed frame; exact dedup (the one
@@ -437,8 +437,6 @@ def pipeline_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-source rollup is a partial-aggregated groupBy on the
     tiny source dimension.
     """
-    from .pipeline import keep_first_copy
-
     deduped = keep_first_copy(
         _hygiene_survivors(spark, sf_dir).select(
             "doc_id", "source", "content_md5", "n_tok", "distinct_ratio"

@@ -11,7 +11,7 @@ and only then the per-source aggregate. Every stage is written once
 and called here: the quality features are text_quality_score's
 builder, the MinHash tails are dedup_minhash_lsh itself, and
 pipeline_prepare_training_data's split, shard and packing stages are
-the trainstages builders behind split_train_test and pack_sequences.
+the stages.py builders behind split_train_test and pack_sequences.
 The oracles chain the same CTEs, so each composition is bit-exact
 against DuckDB.
 
@@ -25,21 +25,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.scale import broadcast_dim, table_rows
 from ..registry import query
 from ..sources import load_table
 from .dedup import _MINHASH_PAIRS_CTES, dedup_minhash_lsh
-from .textanalysis import quality_features
-from .trainstages import (
+from .stages import (
     _ORD_SQL,
     _PACK_LEN,
     _SHARD_SQL,
     _SPLIT_SQL,
     _TEST_PCT,
     _split_bucket,
+    keep_first_copy,
     pack_stats,
+    quality_features,
 )
 
 _MIN_QUALITY = 0.43
@@ -79,19 +79,6 @@ SELECT source,
 FROM near_deduped
 GROUP BY source
 """
-
-
-def keep_first_copy(df: DataFrame) -> DataFrame:
-    """Exact dedup that keeps whole rows: of each ``content_md5`` group
-    only the row with the smallest doc_id survives (dedup_exact's
-    canonical id), with its other columns; ``content_md5`` is dropped.
-    One hash exchange on the 16-byte key."""
-    w = Window.partitionBy("content_md5").orderBy("doc_id")
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "content_md5")
-    )
 
 
 def _clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,12 +201,14 @@ def pipeline_prepare_training_data(spark: SparkSession, sf_dir: str) -> DataFram
     each get one hash exchange, and the near-dup list broadcasts.
     Every stage is the builder its standalone operator runs: the
     cleaning prefix is pipeline_clean_corpus's _clean_corpus, and the
-    split bucket, shard, shuffle order and packing are trainstages'
+    split bucket, shard, shuffle order and packing are the stages.py
     builders behind split_train_test and pack_sequences. The oracle
-    chains the same CTEs, built from the same trainstages SQL
-    fragments, so the composition hash-matches DuckDB end to end.
+    chains the same CTEs, built from the same stages.py SQL fragments,
+    so the composition hash-matches DuckDB end to end.
     """
-    train = _clean_corpus(spark, sf_dir).filter(_split_bucket() >= _TEST_PCT)
+    train = _clean_corpus(spark, sf_dir).filter(
+        _split_bucket("doc_id") >= _TEST_PCT
+    )
     return pack_stats(train)
 
 

@@ -18,7 +18,7 @@ from ..functions import tokens_regex
 from ..registry import query
 from ..session_memo import per_session, shared_frame
 from ..sources import load_table
-from .trainstages import _split_bucket
+from .stages import _split_bucket, quality_features
 
 # Per-language stopword lexicons for the language heuristic that seeds
 # the trigram bootstrap. Deterministic + identical in the SQL oracle
@@ -149,34 +149,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         *(q[c].alias(c) for c in (
             "token_density", "stopword_ratio", "alpha_ratio", "quality")),
     )
-
-
-def quality_features(text: str = "text") -> dict[str, F.Column]:
-    """The row-local quality features of a text column, the one Spark
-    formulation every quality stage reads (text_quality_score,
-    text_quality_classifier and the pipeline.py quality floor): the
-    token count ``n_tok`` (bigint), ``token_density`` (tokens per
-    char), ``stopword_ratio`` (stopwords per token), ``alpha_ratio``
-    (letters per char) and ``quality``, the mean of the last two. Each
-    ratio is one integer count cast to double over another floored at
-    1 — the oracle's division, so the doubles are bit-identical. NULL
-    text yields NULL features (and fails any quality floor)."""
-    n_tok = F.size(tokens_regex(text))
-    n_chars = F.greatest(F.length(text), F.lit(1))
-    stop_r = F.size(
-        F.regexp_extract_all(text, F.lit(r"\b(the|a|of|and|to)\b"), 0)
-    ).cast("double") / F.greatest(n_tok, F.lit(1))
-    alpha_r = (
-        F.size(F.regexp_extract_all(text, F.lit("[A-Za-z]"), 0)).cast("double")
-        / n_chars
-    )
-    return {
-        "n_tok": n_tok.cast("bigint"),
-        "token_density": n_tok.cast("double") / n_chars,
-        "stopword_ratio": stop_r,
-        "alpha_ratio": alpha_r,
-        "quality": (stop_r + alpha_r) / 2,
-    }
 
 
 def _lexicon_sql_values() -> str:
@@ -644,7 +616,7 @@ def text_lm_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    split = docs.select("doc_id", _split_bucket().alias("bucket"))
+    split = docs.select("doc_id", _split_bucket("doc_id").alias("bucket"))
     sh = _shingles(spark, sf_dir)
     train_tri = (
         sh.join(

@@ -27,11 +27,10 @@ from ..registry import query
 from ..session_memo import per_session, shared_frame
 from ..sources import load_table
 
-# The split/shard/order/pack formulas live in trainstages.py, shared
-# with pipeline_prepare_training_data; each oracle below is built from
-# the same SQL fragments as its engine's Column builders.
-from .trainstages import (  # noqa: F401  (_N_SHARDS: read by the tests)
-    _N_SHARDS,
+# The split/shard/order/pack formulas live in stages.py, shared with
+# pipeline_prepare_training_data; each oracle below is built from the
+# same SQL fragments as its engine's Column builders.
+from .stages import (
     _ORD_SQL,
     _PACK_LEN,
     _SHARD_SQL,
@@ -75,7 +74,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
-            F.when(_split_bucket() < _TEST_PCT, "test")
+            F.when(_split_bucket("doc_id") < _TEST_PCT, "test")
             .otherwise("train")
             .alias("split"),
             "doc_id",
@@ -658,10 +657,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import dedup_clusters
 
     labels = dedup_clusters(spark, sf_dir)
-    split = (
-        hex32(F.concat(F.lit("split"), F.col("cluster_id").cast("string")))
-        % 100
-    )
+    split = _split_bucket("cluster_id")
     return labels.select(
         "doc_id",
         "cluster_id",

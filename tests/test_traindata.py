@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from simplemapreduceframework_spark import registry
-from simplemapreduceframework_spark.operators.traindata import (
+from simplemapreduceframework_spark.operators.stages import (
     _N_SHARDS,
     _PACK_LEN,
     _TEST_PCT,
@@ -128,11 +128,7 @@ def test_pack_sequences_property_vs_python_model(spark, tmp_path):
     model of the same hash/shard/cumsum arithmetic."""
     import hashlib
 
-    from simplemapreduceframework_spark.operators.traindata import (
-        _N_SHARDS,
-        _PACK_LEN,
-        pack_sequences,
-    )
+    from simplemapreduceframework_spark.operators.traindata import pack_sequences
 
     def h32(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
