@@ -237,6 +237,32 @@ def test_memo_families_partition_cache_dependent():
     assert _memo_family_names() == sorted(MEMO_FAMILIES)
 
 
+def test_ann_topk_keeps_partial_and_final_group_limits(spark, sf_dir):
+    """Every per-query top-k of the ANN tier must plan as a partial
+    WindowGroupLimit below the query_id exchange plus a final one above
+    it, so each partition ships at most k rows per query (local pruning
+    before the global top-k). Counted in the AQE-final plan after
+    execution. ann_lsh_bucketed adds its (query_id, neighbor_id) dedup
+    window; each gate adds its exact side's ranking, and
+    ann_ivf_indexed_gate reads one exact-side exchange as a
+    ReusedExchange, which hides that stage's partial limit."""
+    expected = {
+        "ann_cosine_topk": 2,
+        "ann_lsh_bucketed": 4,
+        "ann_ivf_topk": 2,
+        "ann_quantized_gate": 6,
+        "ann_search_ivf_gate": 6,
+        "ann_ivf_indexed_gate": 5,
+    }
+    got = {}
+    for name in expected:
+        df = Q[name](spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got[name] = plan.split("== Initial Plan ==")[0].count("WindowGroupLimit")
+    assert got == expected
+
+
 def test_disjunctive_predicate_pushes_or_to_both_scans(spark, sf_dir):
     """TPC-H Q19 shape: the per-table relaxation of the OR-of-ANDs
     must reach BOTH parquet scans as a pushed Or(...) filter, and the
