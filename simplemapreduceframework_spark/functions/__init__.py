@@ -4,12 +4,8 @@ from .scale import (  # noqa: F401
     table_rows,
 )
 from .columns import (  # noqa: F401
-    cosine_sim,
     dec2,
-    dec_to_double,
-    dot,
     hex32,
-    l2_norm,
     money,
     one_minus_rate,
     one_plus_rate,

@@ -58,11 +58,6 @@ def one_plus_rate(col: Column | str) -> Column:
     return (F.lit(1) + rate(col)).cast("decimal(3,2)")
 
 
-def dec_to_double(col: Column) -> Column:
-    """Decimal aggregate -> DOUBLE for engine-neutral output schema."""
-    return col.cast("double")
-
-
 def tokens_ws(col: Column | str) -> Column:
     """Whitespace tokenization, the reference's mapper tokenizer
     (reference count_functions.py:2 `value.split()`): split on \\s+,
@@ -86,32 +81,3 @@ def hex32(col: Column) -> Column:
     md5 and parse them as an unsigned integer.
     """
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<float/double> columns.
-
-    zip_with + aggregate keeps the fold order left-to-right, so the
-    resulting double is bit-identical to any engine that folds the same
-    way (DuckDB's list_dot_product over double lists).
-    """
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: Column) -> Column:
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity with a fixed evaluation order (see `dot`).
-
-    Suitable for occasional scoring. For all-pairs workloads use the
-    Arrow-batched sequential-fold UDF in operators/similarity.py
-    (dot_seq): the HOF fold is interpreted (slow per-pair), and the
-    unrolled-chain alternative triggers exponential commutative-
-    expression canonicalization in Catalyst (planning hangs / driver
-    OOM) for chains past ~50 terms.
-    """
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))

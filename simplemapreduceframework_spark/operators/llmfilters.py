@@ -649,6 +649,23 @@ _CHUNK_SIZE = 50
 _CHUNK_STRIDE = 40
 
 
+def _chunks() -> Column:
+    """The chunks of the token array ``t``: 1 + ceil((n - size) /
+    stride) slices of _CHUNK_SIZE tokens, every _CHUNK_STRIDE tokens,
+    the last one clipped. The count is the oracles' CASE, in floor
+    division that both engines compute alike; callers guard
+    size(t) >= 1."""
+    size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
+    n_chunks = (
+        f"CASE WHEN size(t) <= {size} THEN 1 "
+        f"ELSE (size(t) - {size - stride + 1}) div {stride} + 1 END"
+    )
+    return F.expr(
+        f"transform(sequence(0, {n_chunks} - 1), "
+        f"cid -> slice(t, 1 + cid * {stride}, {size}))"
+    )
+
+
 @query(
     "text_chunk",
     oracle=rf"""
@@ -681,24 +698,11 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped last).
     """
     docs = load_table(spark, sf_dir, "documents")
-    size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
     toks = docs.select("doc_id", _tokens()).filter(
         F.col("t").isNotNull() & (F.size("t") >= 1)
     )
-    base = toks.withColumn(
-        "n_chunks",
-        F.when(F.size("t") <= size, F.lit(1)).otherwise(
-            F.expr(f"(size(t) - {size - stride + 1}) div {stride} + 1")
-        ),
-    )
-    return base.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, n_chunks - 1), "
-                f"cid -> slice(t, 1 + cid * {stride}, {size}))"
-            )
-        ).alias("chunk_id", "chunk"),
+    return toks.select(
+        "doc_id", F.posexplode(_chunks()).alias("chunk_id", "chunk")
     ).select(
         "doc_id",
         F.col("chunk_id").cast("bigint").alias("chunk_id"),
@@ -756,29 +760,17 @@ def pipeline_chunked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shrunken survivor set, and a partial-aggregated groupBy on the
     tiny source dimension.
     """
-    size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
     docs = load_table(spark, sf_dir, "documents")
     verdicts = _hygiene_survivors(spark, sf_dir).select("doc_id")
     kept = (
         docs.select("doc_id", "source", _tokens())
         .join(verdicts, "doc_id")
         .filter(F.size("t") >= 1)
-        .withColumn(
-            "n_chunks",
-            F.when(F.size("t") <= size, F.lit(1)).otherwise(
-                F.expr(f"(size(t) - {size - stride + 1}) div {stride} + 1")
-            ),
-        )
     )
     chunks = kept.select(
         "doc_id",
         "source",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, n_chunks - 1), "
-                f"cid -> size(slice(t, 1 + cid * {stride}, {size})))"
-            )
-        ).alias("n_chunk_tokens"),
+        F.explode(F.transform(_chunks(), F.size)).alias("n_chunk_tokens"),
     )
     return chunks.groupBy("source").agg(
         F.count_distinct("doc_id").cast("bigint").alias("n_docs"),

@@ -2094,7 +2094,9 @@ def decode_flac(b: bytes) -> tuple[int, int, int, int, int]:
     sample_sum = 0
     peak = 0
     done = 0
-    while done < total and pos < len(b):
+    # a STREAMINFO total of 0 means "unknown" (RFC 9639 section 8.2):
+    # then the frames run to the end of the stream
+    while pos < len(b) and (done < total or total == 0):
         frame_start = pos
         br = _FlacBitReader(b, pos)
         sync = br.bits(14)

@@ -306,7 +306,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from .similarity import dot_seq, with_norm
+    from .similarity import _queries, _scored, _vectors
 
     lex = (
         _bm25_scored(spark, sf_dir)
@@ -320,24 +320,12 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexr = lex.select(
         "doc_id", F.row_number().over(w_lex).cast("bigint").alias("r_lex")
     )
-    emb = with_norm(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-    )
-    qv = emb.filter(F.col("vec_id") == _DENSE_QUERY_ID).select(
-        F.col("e").alias("qe"), F.col("nrm").alias("qnrm")
-    )
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
+    qv = _queries(emb.filter(F.col("vec_id") == _DENSE_QUERY_ID))
+    cand = emb.filter(F.col("vec_id") != _DENSE_QUERY_ID).crossJoin(F.broadcast(qv))
     dense = (
-        emb.filter(F.col("vec_id") != _DENSE_QUERY_ID)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            (
-                dot_seq(F.col("qe"), F.col("e"))
-                / (F.col("qnrm") * F.col("nrm"))
-            ).alias("cos_sim"),
-        )
+        _scored(cand)
+        .select(F.col("neighbor_id").alias("doc_id"), "cos_sim")
         .orderBy(F.col("cos_sim").desc(), F.col("doc_id").asc())
         .limit(_FUSE_K)
     )

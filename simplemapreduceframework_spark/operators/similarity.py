@@ -69,6 +69,70 @@ def with_norm(emb: DataFrame) -> DataFrame:
     )
 
 
+def _vectors(df: DataFrame) -> DataFrame:
+    """(vec_id, e, nrm) from a (vec_id, embedding) frame."""
+    return with_norm(df.select("vec_id", F.col("embedding").alias("e")))
+
+
+def _queries(df: DataFrame, probe=None) -> DataFrame:
+    """The query side of every search: a _vectors frame renamed to
+    (query_id, qe, qnrm), so it can broadcast against a corpus that
+    keeps (vec_id, e, nrm). probe, an array-valued UDF over the vector,
+    adds one row per cell (or bucket) it returns, as qcell."""
+    cols = [
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qnrm"),
+    ]
+    if probe is not None:
+        cols.append(F.explode(probe(F.col("e"))).alias("qcell"))
+    return df.select(*cols)
+
+
+def _scored(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim) of joined query/corpus pairs:
+    the one cosine scorer. dot_seq folds like the oracle's
+    list_dot_product, and the quotient's operand order matches the SQL
+    twins', so every score is bit-identical."""
+    return cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
+            "cos_sim"
+        ),
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per query, ties broken by the lower
+    neighbor_id, with a bigint rank. A row_number filter under a
+    query_id window: Spark plans it as a partial WindowGroupLimit ahead
+    of the exchange plus a final one after it, so each partition ships
+    at most k rows per query."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _exact_search(
+    corpus: DataFrame, queries: DataFrame, k: int, exclude_self: bool
+) -> DataFrame:
+    """Brute-force top-k of every query over every corpus vector. Both
+    inputs are _vectors frames; the queries broadcast, so the corpus is
+    scanned once. exclude_self drops each query's pair with the corpus
+    vector of its own vec_id (the registered queries search the corpus
+    for its own first vectors)."""
+    q = F.broadcast(_queries(queries))
+    if exclude_self:
+        cand = q.join(corpus, F.col("vec_id") != F.col("query_id"))
+    else:
+        cand = q.crossJoin(corpus)
+    return _top_k(_scored(cand), k)
+
+
 @query(
     "ann_cosine_topk",
     family="ivf",
@@ -101,30 +165,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rank (per-partition heaps). At 100 TB the corpus scan
     dominates -> use ann_lsh_bucketed.
     """
-    emb = with_norm(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-    )
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = F.broadcast(q).join(emb, F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _exact_search(
+        emb, emb.filter(F.col("vec_id") < _N_QUERIES), _TOP_K, exclude_self=True
     )
 
 
@@ -252,20 +295,11 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts recall vs ann_cosine_topk.
     """
     bucket_udf = make_bucket_udf(_LSH_TABLES, _LSH_BITS, _DIM)
-    emb = with_norm(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-    ).withColumn("buckets", bucket_udf(F.col("e")))
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
     index = emb.select(
-        "vec_id", "e", "nrm", F.explode("buckets").alias("bucket")
+        "vec_id", "e", "nrm", F.explode(bucket_udf(F.col("e"))).alias("bucket")
     )
-    q = index.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
+    q = _queries(emb.filter(F.col("vec_id") < _N_QUERIES), bucket_udf)
     # r17 optimization (guide §2.3 / §8: shuffle scores, not payloads):
     # score BEFORE deduplicating. The bucket join is a broadcast join,
     # so scoring runs map-side on its raw output; a pair sharing k<=L
@@ -280,32 +314,20 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME query_id exchange the ranking window needs (subset
     # partitioning satisfies both windows), and vectors never cross a
     # shuffle at any scale.
-    scored = (
-        F.broadcast(q)
-        .join(
+    scored = _scored(
+        F.broadcast(q).join(
             index,
-            (F.col("bucket") == F.col("qbucket"))
+            (F.col("bucket") == F.col("qcell"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))
-            ).alias("cos_sim"),
         )
     )
     wd = Window.partitionBy("query_id", "neighbor_id").orderBy("cos_sim")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
+    deduped = (
         scored.withColumn("dup", F.row_number().over(wd))
         .filter(F.col("dup") == 1)
         .drop("dup")
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
     )
+    return _top_k(deduped, _TOP_K)
 
 
 def ann_search(corpus: DataFrame, queries: DataFrame, k: int = _TOP_K) -> DataFrame:
@@ -321,25 +343,8 @@ def ann_search(corpus: DataFrame, queries: DataFrame, k: int = _TOP_K) -> DataFr
     corpus is scanned once whatever the batch size, so cost is
     O(corpus x batch) with no shuffle until the final per-query top-k.
     """
-    c = with_norm(corpus.select("vec_id", F.col("embedding").alias("e")))
-    q = with_norm(
-        queries.select("query_id", F.col("embedding").alias("e"))
-    ).select("query_id", F.col("e").alias("qe"), F.col("nrm").alias("qnrm"))
-    pairs = F.broadcast(q).crossJoin(c)
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    q = queries.select(F.col("query_id").alias("vec_id"), "embedding")
+    return _exact_search(_vectors(corpus), _vectors(q), k, exclude_self=False)
 
 
 # IVF (inverted-file) ANN: k-means cells + nprobe search — the
@@ -444,6 +449,29 @@ def _make_probe_udf(C: np.ndarray, nprobe: int):
     return probe
 
 
+def _ivf_search(
+    emb: DataFrame,
+    queries: DataFrame,
+    cells: int,
+    iters: int,
+    nprobe: int,
+    exclude_self: bool,
+) -> DataFrame:
+    """The in-session IVF path, scored: train `cells` k-means centroids
+    on emb, index every vector by its nearest cell, and broadcast the
+    queries, exploded over their nprobe nearest cells, against the
+    index on cell. Both inputs are _vectors frames; returns _scored
+    candidates. exclude_self as in _exact_search."""
+    C = _kmeans_centroids(emb, cells, iters)
+    assign = _make_assign_udf(C)
+    index = emb.select("vec_id", "e", "nrm", assign(F.col("e")).alias("cell"))
+    q = _queries(queries, _make_probe_udf(C, nprobe))
+    on = F.col("qcell") == F.col("cell")
+    if exclude_self:
+        on = on & (F.col("vec_id") != F.col("query_id"))
+    return _scored(F.broadcast(q).join(index, on))
+
+
 # The "ivf" family: the recall gate consumes the same scored
 # candidates as the top-k query — train/index once per session, like a
 # persisted IVF index table on a cluster.
@@ -456,36 +484,12 @@ def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = shared_frame(
         spark,
         ("ivf", "emb", sf_dir),
-        lambda: with_norm(
-            load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", F.col("embedding").alias("e")
-            )
-        ),
+        lambda: _vectors(load_table(spark, sf_dir, "embeddings")),
     )
     cells = ivf_cells_for(emb.count())
-    C = _kmeans_centroids(emb, cells, _IVF_ITERS)
-    assign = _make_assign_udf(C)
-    index = emb.select("vec_id", "e", "nrm", assign(F.col("e")).alias("cell"))
-    probe = _make_probe_udf(C, ivf_nprobe_for(cells))
-    q = (
-        emb.filter(F.col("vec_id") < _N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.explode(probe(F.col("e"))).alias("qcell"),
-        )
-    )
-    cand = F.broadcast(q).join(
-        index,
-        (F.col("qcell") == F.col("cell")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    return cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    return _ivf_search(
+        emb, queries, cells, _IVF_ITERS, ivf_nprobe_for(cells), exclude_self=True
     )
 
 
@@ -510,47 +514,21 @@ def ann_search_ivf(
     persisted (cell as a partition column -> partition pruning per
     probe); query batches then broadcast against the pruned index.
     """
-    emb = with_norm(corpus.select("vec_id", F.col("embedding").alias("e")))
     # a shared "ivf" frame keyed by the corpus plan, never evicted
     # implicitly: the returned frame's lineage reads it on EVERY
-    # execution (the index projection below), so an unpersist after
+    # execution (_ivf_search's index projection), so an unpersist after
     # training made each search action re-derive the norm-annotated
     # corpus from the base table. Repeated calls over the same corpus
     # reuse one entry; release(spark, "ivf") frees it. At cluster scale
     # this IS the documented "index computed once and persisted"
     # lifecycle (build_ann_index is the durable variant).
-    emb = shared_plan("ivf", emb)
+    emb = shared_plan("ivf", _vectors(corpus))
     n = emb.count()
     cells = ivf_cells_for(n) if cells is None else max(1, min(cells, n))
     if nprobe is None:
         nprobe = ivf_nprobe_for(cells)
-    C = _kmeans_centroids(emb, cells, iters)
-    assign = _make_assign_udf(C)
-    index = emb.select("vec_id", "e", "nrm", assign(F.col("e")).alias("cell"))
-    probe = _make_probe_udf(C, nprobe)
-    q = with_norm(
-        queries.select("query_id", F.col("embedding").alias("e"))
-    ).select(
-        "query_id",
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.explode(probe(F.col("e"))).alias("qcell"),
-    )
-    cand = F.broadcast(q).join(index, F.col("qcell") == F.col("cell"))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    q = _vectors(queries.select(F.col("query_id").alias("vec_id"), "embedding"))
+    return _top_k(_ivf_search(emb, q, cells, iters, nprobe, exclude_self=False), k)
 
 
 def _with_int8_codes(emb: DataFrame) -> DataFrame:
@@ -837,35 +815,16 @@ def ann_search_ivf_indexed(
     C = load_ann_centroids(spark, path)
     if nprobe is None:
         nprobe = ivf_nprobe_for(C.shape[0])
-    probe = _make_probe_udf(C, nprobe)
-    q = with_norm(
-        queries.select("query_id", F.col("embedding").alias("e"))
-    ).select(
-        "query_id",
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.explode(probe(F.col("e"))).alias("qcell"),
-    )
+    qv = _vectors(queries.select(F.col("query_id").alias("vec_id"), "embedding"))
+    q = _queries(qv, _make_probe_udf(C, nprobe))
     # No persist on q: a query batch is small by definition, so the
     # probe UDF recomputing once (cell-union collect + the join) is
     # cheaper than leaking one cached DataFrame per search call into
     # executor storage for the session's lifetime.
     probed = sorted({r["qcell"] for r in q.select("qcell").distinct().collect()})
     index = _live_index(spark, path).filter(F.col("cell").isin(probed))
-    cand = F.broadcast(q).join(index, F.col("qcell") == F.col("cell"))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+    return _top_k(
+        _scored(F.broadcast(q).join(index, F.col("qcell") == F.col("cell"))), k
     )
 
 
@@ -885,14 +844,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-visible gate is ann_ivf_recall_gate, and a unit test pins
     recall vs the exact baseline.
     """
-    scored = _ivf_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-    )
+    return _top_k(_ivf_scored(spark, sf_dir), _TOP_K)
 
 
 # A recall floor loose enough for run-to-run centroid noise but tight
@@ -930,6 +882,26 @@ def _recall_gate_row(approx: DataFrame, exact: DataFrame, floor: float) -> DataF
     )
 
 
+def _batch_recall_gate(emb: DataFrame, search) -> DataFrame:
+    """_recall_gate_row of a batch-search API, search(queries, k),
+    against ann_search, with the corpus's first _N_QUERIES vectors as
+    the batch. The batch is corpus vectors, so both sides ask for
+    _TOP_K + 1 neighbors and drop each query's self-match."""
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    approx, exact = (
+        ranked.filter(F.col("neighbor_id") != F.col("query_id")).select(
+            "query_id", "neighbor_id"
+        )
+        for ranked in (
+            search(queries, _TOP_K + 1),
+            ann_search(emb, queries, k=_TOP_K + 1),
+        )
+    )
+    return _recall_gate_row(approx, exact, _RECALL_FLOOR)
+
+
 @query(
     "ann_ivf_recall_gate",
     family="ivf",
@@ -961,20 +933,7 @@ def ann_search_ivf_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full train -> index -> probe -> score -> rank pipeline through
     the public API rather than the registered-query plumbing."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    approx = (
-        ann_search_ivf(emb, queries, k=_TOP_K + 1)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        ann_search(emb, queries, k=_TOP_K + 1)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    return _recall_gate_row(approx, exact, _RECALL_FLOOR)
+    return _batch_recall_gate(emb, lambda q, k: ann_search_ivf(emb, q, k=k))
 
 
 @query(
@@ -1004,20 +963,9 @@ def ann_ivf_indexed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     path = get_or_build(spark, ("ivf_index_dir", sf_dir), build_index)
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    return _batch_recall_gate(
+        emb, lambda q, k: ann_search_ivf_indexed(spark, path, q, k=k)
     )
-    approx = (
-        ann_search_ivf_indexed(spark, path, queries, k=_TOP_K + 1)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        ann_search(emb, queries, k=_TOP_K + 1)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    return _recall_gate_row(approx, exact, _RECALL_FLOOR)
 
 
 from .._serde import pickle_by_value as _pbv  # noqa: E402
@@ -1121,27 +1069,9 @@ def ann_quantized_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counts, so geometry corruption breaks the driver's hash.
     """
     deq = with_norm(_dequantized(spark, sf_dir))
-    q = deq.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = F.broadcast(q).join(deq, F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_seq(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    approx = _exact_search(
+        deq, deq.filter(F.col("vec_id") < _N_QUERIES), _TOP_K, exclude_self=True
+    ).select("query_id", "neighbor_id")
     exact = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall_gate_row(approx, exact, _QUANT_RECALL_FLOOR)
 

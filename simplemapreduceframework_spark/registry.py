@@ -202,12 +202,3 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracles() -> dict[str, str]:
     load_all()
     return _ordered(ORACLES)
-
-
-def describe() -> dict[str, Any]:
-    load_all()
-    return {
-        "n_queries": len(QUERIES),
-        "n_oracled": len(ORACLES),
-        "rows_only": sorted(ROWS_ONLY),
-    }

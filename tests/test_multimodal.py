@@ -347,6 +347,22 @@ def test_flac_truncated_stream_raises():
         decode_flac(flac[:40])
 
 
+def test_flac_unknown_total_decodes_to_end_of_stream():
+    """A STREAMINFO total-samples value of 0 means "unknown" (RFC 9639):
+    the decoder reads frames to the end of the stream instead of
+    stopping before the first one."""
+    from simplemapreduceframework_spark.operators.multimodal import (
+        decode_flac,
+        make_flac,
+    )
+
+    flac = bytearray(make_flac(n_samples=20, value=3, fixed_ramp=(1, 9)))
+    # the 36-bit total is the low nibble of byte 21 plus bytes 22-25
+    flac[21] &= 0xF0
+    flac[22:26] = bytes(4)
+    assert decode_flac(bytes(flac)) == (8000, 1, 29, 105, 9)
+
+
 def test_decode_real_null_payload_yields_null_features():
     bmp_and_null = pd.DataFrame(
         {"doc_id": [0, 1], "payload": [None, __import__(
