@@ -169,6 +169,67 @@ def test_pagerank_converged_reaches_fixed_point(spark):
     assert all(got[0] > got[i] for i in range(1, 5))
 
 
+def _reference_pagerank_directed(
+    edges: list[tuple[int, int]], iters: int
+) -> dict[int, int]:
+    """Plain-Python twin of the non-dangling directed contract: over the
+    sources UNION destinations universe each node gets
+    ``teleport + (85 * incoming) div 100`` (teleport alone without an
+    in-edge); dangling mass is not redistributed."""
+    out: dict[int, list[int]] = {}
+    nodes: set[int] = set()
+    for s, d in edges:
+        out.setdefault(s, []).append(d)
+        nodes |= {s, d}
+    n = len(nodes)
+    teleport = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN // n
+    r = {v: _SCALE // n for v in nodes}
+    for _ in range(iters):
+        incoming = {v: 0 for v in nodes}
+        for s, ds in out.items():
+            c = r[s] // len(ds)
+            for d in ds:
+                incoming[d] += c
+        r = {
+            v: teleport + (_DAMP_NUM * incoming[v]) // _DAMP_DEN
+            for v in nodes
+        }
+    return r
+
+
+def test_pagerank_converged_non_dangling_directed(spark):
+    # node 3 has no in-edge (teleport only), node 4 no out-edge (its
+    # mass leaks: dangling=False does not redistribute it)
+    directed = [(0, 1), (0, 2), (1, 2), (2, 0), (2, 4), (3, 2)]
+    edges = spark.createDataFrame(directed, "s long, d long")
+    # tol 0 never stops early: exactly max_iters updates run
+    ranks, iters = pagerank_converged(
+        edges, tol_fp=0, max_iters=4, dangling=False
+    )
+    assert iters == 4
+    got = {r["node"]: r["r"] for r in ranks.collect()}
+    want = _reference_pagerank_directed(directed, iters)
+    assert got == want
+    assert got[3] == (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN // 5
+    # the leaked dangling mass sits below the redistributing variant's
+    assert sum(got.values()) < sum(
+        _reference_pagerank_dangling(directed, iters).values()
+    )
+
+
+def test_pagerank_loops_on_empty_graph(spark):
+    """No edges means no nodes: every loop returns an empty (node, r)
+    frame instead of dividing the teleport by a zero node count."""
+    edges = spark.createDataFrame([], "s long, d long")
+    fixed, _ = pagerank_fixed_point(edges, iters=_ITERS)
+    dangling, _ = pagerank_dangling(edges, iters=_ITERS)
+    converged, iters = pagerank_converged(edges)
+    assert iters == 0
+    for ranks in (fixed, dangling, converged):
+        assert ranks.columns == ["node", "r"]
+        assert ranks.count() == 0
+
+
 def test_pagerank_random_graphs_property(spark):
     """Property: the distributed fixed-point loop matches the plain-
     Python reference on random undirected graphs (5 seeds, varying
