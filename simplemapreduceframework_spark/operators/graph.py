@@ -32,6 +32,7 @@ from ..sources import load_table
 _SCALE = 10**12
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact rational
 _ITERS = 3
+_TELEPORT = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN  # 0.15 mass
 
 # The memoized PageRank frames own their persisted edge/rank chains;
 # repeated invocations (bench passes, gates) must reuse ONE result
@@ -39,14 +40,13 @@ _ITERS = 3
 
 
 def _pagerank_oracle() -> str:
-    teleport = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN  # 0.15 mass
     its = []
     prev = "r0"
     for i in range(1, _ITERS + 1):
         its.append(f"""
 it{i} AS (
     SELECT e.d AS node,
-           CAST({teleport} AS BIGINT) // (SELECT n FROM n)
+           CAST({_TELEPORT} AS BIGINT) // (SELECT n FROM n)
              + ({_DAMP_NUM} * SUM({prev}.r // deg.deg)) // {_DAMP_DEN} AS r
     FROM edges e
     JOIN {prev} ON {prev}.node = e.s
@@ -128,6 +128,26 @@ def pagerank_fixed_point(
     each have at least one outgoing AND one incoming edge (true for
     any undirected edge set); dangling-node mass is out of contract.
     """
+    deg, edges_deg, _, ranks, n, bc_edges = _graph_frames(edges, undirected=True)
+    if n == 0:
+        return ranks, deg
+    for _ in range(iters):
+        ranks = _pagerank_step(
+            None, edges_deg, deg, ranks, n, dangling=False, bc_edges=bc_edges
+        )
+    return ranks, deg
+
+
+def _graph_frames(
+    edges: DataFrame, undirected: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int, bool]:
+    """Shared setup for every PageRank loop: persisted out-degrees,
+    degree-annotated edges, the node universe (sources UNION
+    destinations; deg's keys when ``undirected``, where every node is a
+    source), rank 0 (``1/n`` of the mass per node; an empty graph seeds
+    the empty (node, r) frame each loop returns), the collected node
+    count n, and the counted edges-fit-the-broadcast-budget flag (see
+    _pagerank_step)."""
     # Degree-annotated edges persist ONCE: every iteration re-reads the
     # (s, d, deg) frame from executor storage instead of recomputing
     # the edge derivation + degree groupBy per unrolled step, and the
@@ -136,8 +156,9 @@ def pagerank_fixed_point(
     # only the node-sized rank frame moves per iteration). Callers
     # invoking repeatedly should memoize the result (see the
     # session memo) so one persist serves the session.
-    # deg persists too (node-sized): it seeds rank0, anchors the
-    # caller's final rank/degree attach, and sits in the edge frame's
+    # deg persists too (node-sized): it seeds rank0 of the undirected
+    # loop, anchors the caller's final rank/degree attach, feeds the
+    # per-iteration dangling anti-join, and sits in the edge frame's
     # lineage — unpersisted, every one of those consumers re-derived
     # the whole edge set from the base tables (a full corpus pass per
     # execution, visible as a FileScan in the warm plan). Its cache
@@ -146,25 +167,41 @@ def pagerank_fixed_point(
     edges_deg = (
         edges.join(deg, "s").select("s", "d", "deg").repartition("s").persist()
     )
-    n_edges = edges_deg.count()  # materializes both persists
-    # node count = deg's row count (one row per distinct source, and
-    # every node of this undirected-contract graph is a source): reads
-    # the just-materialized node-sized cache instead of running a
-    # fact-scale distinct+shuffle job per cold construction (r18,
-    # ADVICE item)
-    n = deg.count()
-    if n == 0:
-        # empty graph: no nodes, no ranks — return the empty frame with
-        # the contract schema instead of dividing the teleport by zero
-        empty = deg.select(
-            F.col("s").alias("node"), F.lit(0).cast("long").alias("r")
+    bc_edges = edges_deg.count() <= BROADCAST_ROW_LIMIT  # materializes both persists
+    if undirected:
+        # node count = deg's row count: reads the just-materialized
+        # node-sized cache instead of running a fact-scale
+        # distinct+shuffle job per cold construction (r18, ADVICE item)
+        nodes, n = deg.select(F.col("s").alias("node")), deg.count()
+    else:
+        nodes = (
+            edges.select(F.col("s").alias("node"))
+            .union(edges.select(F.col("d").alias("node")))
+            .distinct()
+            .persist()
         )
-        return empty, deg
-    teleport = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN // n
-    ranks = deg.select(
-        F.col("s").alias("node"), F.lit(_SCALE // n).cast("long").alias("r")
-    )
-    # Size-adaptive iteration join, decided from the COUNTED edge
+        n = nodes.count()
+    share = _SCALE // n if n else 0
+    ranks = nodes.select("node", F.lit(share).cast("long").alias("r"))
+    return deg, edges_deg, nodes, ranks, n, bc_edges
+
+
+def _pagerank_step(
+    nodes: DataFrame | None,
+    edges_deg: DataFrame,
+    deg: DataFrame,
+    ranks: DataFrame,
+    n: int,
+    dangling: bool = True,
+    bc_edges: bool = True,
+) -> DataFrame:
+    """ONE fixed-point update: contribution join + partial-agg groupBy,
+    attached to the node universe ``nodes`` (None for an undirected
+    graph, where every node receives an edge), plus (when dangling)
+    the anti-join mass aggregate broadcast into the per-node update —
+    the frame is returned unmaterialized so the caller chooses persist
+    (unrolled plan) or localCheckpoint (convergence loop)."""
+    # Size-adaptive contribution join, decided from the COUNTED edge
     # cardinality (not estimates). While the edge frame fits the row
     # budget both join sides genuinely fit in memory and the planner's
     # accurate cached statistics pick the best build side unaided (at
@@ -176,72 +213,6 @@ def pagerank_fixed_point(
     # n's own budget, SHUFFLE_HASH) build side against the
     # co-partitioned persisted edges, which never move again after
     # their one construction shuffle.
-    edges_fit = n_edges <= BROADCAST_ROW_LIMIT
-    for _ in range(iters):
-        right = (
-            ranks if edges_fit
-            else broadcast_dim(ranks, n, fallback="shuffle_hash")
-        )
-        contrib = (
-            edges_deg.join(right, F.col("s") == F.col("node"))
-            .select("d", F.expr("r div deg").alias("c"))
-        )
-        ranks = contrib.groupBy("d").agg(
-            (
-                F.lit(teleport)
-                + F.expr(f"({_DAMP_NUM} * sum(c)) div {_DAMP_DEN}")
-            )
-            .cast("long")
-            .alias("r")
-        ).select(F.col("d").alias("node"), "r")
-    return ranks, deg
-
-
-def _graph_frames(
-    edges: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame, int, bool]:
-    """Shared setup for the directed PageRank loops: persisted
-    out-degrees, degree-annotated edges, node universe (sources UNION
-    destinations), the collected node count, and the counted
-    edges-fit-the-broadcast-budget flag (see pagerank_fixed_point's
-    size-adaptive join rationale). deg persists because the
-    per-iteration dangling anti-join consumes it directly; the edge
-    frame persists co-partitioned by source so above-budget iteration
-    joins reuse one exchange."""
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).persist()
-    edges_deg = (
-        edges.join(deg, "s").select("s", "d", "deg").repartition("s").persist()
-    )
-    nodes = (
-        edges.select(F.col("s").alias("node"))
-        .union(edges.select(F.col("d").alias("node")))
-        .distinct()
-        .persist()
-    )
-    bc_edges = edges_deg.count() <= BROADCAST_ROW_LIMIT
-    return deg, edges_deg, nodes, nodes.count(), bc_edges
-
-
-def _pagerank_step(
-    nodes: DataFrame,
-    edges_deg: DataFrame,
-    deg: DataFrame,
-    ranks: DataFrame,
-    teleport: int,
-    n: int,
-    dangling: bool = True,
-    bc_edges: bool = True,
-) -> DataFrame:
-    """ONE fixed-point update: contribution join + partial-agg groupBy,
-    plus (when dangling) the anti-join mass aggregate broadcast into
-    the per-node update — the frame is returned unmaterialized so the
-    caller chooses persist (unrolled plan) or localCheckpoint
-    (convergence loop)."""
-    # Size-adaptive contribution join, same rationale as
-    # pagerank_fixed_point: within the counted edge budget the planner
-    # picks the build side from accurate cached statistics; beyond it
-    # the node-sized rank frame is the pinned broadcast/SHUFFLE_HASH
-    # build against the co-partitioned persisted edges.
     right = (
         ranks if bc_edges
         else broadcast_dim(ranks, n, fallback="shuffle_hash")
@@ -250,6 +221,11 @@ def _pagerank_step(
         right, edges_deg.s == ranks.node
     ).select("d", F.expr("r div deg").alias("c"))
     csum = contrib.groupBy("d").agg(F.sum("c").alias("cs"))
+    if nodes is None:
+        nxt = csum.withColumnRenamed("d", "node")
+    else:
+        nxt = nodes.join(csum, nodes.node == csum.d, "left")
+    incoming = "coalesce(cs, CAST(0 AS BIGINT))"
     if dangling:
         dang = (
             ranks.join(
@@ -259,21 +235,11 @@ def _pagerank_step(
             )
             .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
         )
-        update = F.expr(
-            f"({_DAMP_NUM} * (coalesce(cs, CAST(0 AS BIGINT))"
-            f" + dm div {n})) div {_DAMP_DEN}"
-        )
-        nxt = nodes.join(csum, nodes.node == csum.d, "left").crossJoin(
-            F.broadcast(dang)
-        )
-    else:
-        update = F.expr(
-            f"({_DAMP_NUM} * coalesce(cs, CAST(0 AS BIGINT)))"
-            f" div {_DAMP_DEN}"
-        )
-        nxt = nodes.join(csum, nodes.node == csum.d, "left")
+        incoming += f" + dm div {n}"
+        nxt = nxt.crossJoin(F.broadcast(dang))
+    update = F.expr(f"({_DAMP_NUM} * ({incoming})) div {_DAMP_DEN}")
     return nxt.select(
-        "node", (F.lit(teleport) + update).cast("long").alias("r")
+        "node", (F.lit(_TELEPORT // n) + update).cast("long").alias("r")
     )
 
 
@@ -303,14 +269,9 @@ def pagerank_dangling(
     driver round-trip inside the loop, the whole unroll is one Catalyst
     plan.
     """
-    deg, edges_deg, nodes, n, bc_edges = _graph_frames(edges)
+    deg, edges_deg, nodes, ranks, n, bc_edges = _graph_frames(edges)
     if n == 0:
-        empty = nodes.select("node", F.lit(0).cast("long").alias("r"))
-        return empty, deg
-    teleport = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN // n
-    ranks = nodes.select(
-        "node", F.lit(_SCALE // n).cast("long").alias("r")
-    )
+        return ranks, deg
     for _ in range(iters):
         # each iteration consumes `ranks` TWICE (contribution join +
         # dangling-mass aggregate); without a persist the second branch
@@ -320,8 +281,7 @@ def pagerank_dangling(
         # one action; frames are node-sized. Callers memoize (see
         # the session memo), so the session holds one chain.
         ranks = _pagerank_step(
-            nodes, edges_deg, deg, ranks.persist(), teleport, n,
-            bc_edges=bc_edges,
+            nodes, edges_deg, deg, ranks.persist(), n, bc_edges=bc_edges
         )
     return ranks, deg
 
@@ -349,18 +309,14 @@ def pagerank_converged(
     collected scalar per iteration (inherent to any convergence-gated
     loop).
     """
-    deg, edges_deg, nodes, n, bc_edges = _graph_frames(edges)
+    deg, edges_deg, nodes, ranks, n, bc_edges = _graph_frames(edges)
     if n == 0:
-        return nodes.select("node", F.lit(0).cast("long").alias("r")), 0
-    teleport = (_DAMP_DEN - _DAMP_NUM) * _SCALE // _DAMP_DEN // n
-    ranks = nodes.select(
-        "node", F.lit(_SCALE // n).cast("long").alias("r")
-    ).localCheckpoint()
+        return ranks, 0
+    ranks = ranks.localCheckpoint()
     done = 0
     for i in range(max_iters):
         new_ranks = _pagerank_step(
-            nodes, edges_deg, deg, ranks, teleport, n, dangling,
-            bc_edges=bc_edges,
+            nodes, edges_deg, deg, ranks, n, dangling, bc_edges=bc_edges
         ).localCheckpoint()
         delta = (
             new_ranks.alias("a")

@@ -648,10 +648,9 @@ def build_ann_index(
     # A rebuild IS the compaction: the fresh index contains exactly the
     # given corpus, so stale tombstones must not keep hiding re-indexed
     # vectors. Deleted through the Hadoop FS so HDFS/S3 paths work.
-    jvm = spark._jvm
-    tomb = jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
-    fs = tomb.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(tomb):
+    found = _tombstones(spark, path)
+    if found is not None:
+        fs, tomb = found
         fs.delete(tomb, True)
     emb.unpersist()
     return cells
@@ -716,6 +715,17 @@ def remove_from_ann_index(corpus: DataFrame, path: str) -> None:
     )
 
 
+def _tombstones(spark: SparkSession, path: str):
+    """The Hadoop (FileSystem, Path) of an index's tombstones table, or
+    None while no delete has written one. Checked with the Hadoop FS
+    (so HDFS/S3 paths work), not by a read that fails: that lists the
+    missing path and logs its FileNotFoundException, and catching it
+    would also hide real read errors."""
+    tomb = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
+    fs = tomb.getFileSystem(spark._jsc.hadoopConfiguration())
+    return (fs, tomb) if fs.exists(tomb) else None
+
+
 def _live_index(spark: SparkSession, path: str) -> DataFrame:
     """The index minus tombstones (anti-join only when tombstones
     exist, so the common no-delete path stays a bare pruned scan).
@@ -732,10 +742,9 @@ def _live_index(spark: SparkSession, path: str) -> DataFrame:
             "nrm",
             "cell",
         )
-    try:
-        dead = spark.read.parquet(f"{path}/tombstones")
-    except Exception:
+    if _tombstones(spark, path) is None:
         return index
+    dead = spark.read.parquet(f"{path}/tombstones")
     return index.join(dead, "vec_id", "left_anti")
 
 
@@ -777,12 +786,9 @@ def ann_index_stats(spark: SparkSession, path: str) -> dict:
     occ = index.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     counts = [r["n"] for r in occ]
     n_vec = sum(counts)
-    try:
-        n_dead = (
-            spark.read.parquet(f"{path}/tombstones").distinct().count()
-        )
-    except Exception:
-        n_dead = 0
+    n_dead = 0
+    if _tombstones(spark, path) is not None:
+        n_dead = spark.read.parquet(f"{path}/tombstones").distinct().count()
     skew = (max(counts) * len(counts) / n_vec) if n_vec else 0.0
     dead_fraction = n_dead / n_vec if n_vec else 0.0
     return {

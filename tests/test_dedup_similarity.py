@@ -644,6 +644,41 @@ def test_ann_index_tombstone_delete_and_stats(spark, sf_dir, tmp_path):
     assert ann_index_stats(spark, fresh)["n_tombstones"] == 0
 
 
+def test_ann_index_without_deletes_never_reads_tombstones(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An index that no delete has touched has no tombstones table: a
+    search and ann_index_stats must learn that without reading the
+    missing path (a failing read lists it and logs a stack trace on
+    every search)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from simplemapreduceframework_spark.operators.similarity import (
+        ann_index_stats,
+        ann_search_ivf_indexed,
+        build_ann_index,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "ivf_clean")
+    build_ann_index(emb, path)
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    read = DataFrameReader.parquet
+    seen: list[str] = []
+
+    def spy(self, *paths, **options):
+        seen.extend(paths)
+        return read(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert ann_search_ivf_indexed(spark, path, queries, k=6).collect()
+    assert ann_index_stats(spark, path)["n_tombstones"] == 0
+    assert f"{path}/index" in seen  # the spy does see the index reads
+    assert not [p for p in seen if "tombstones" in p]
+
+
 def test_ann_index_rebuild_compacts_tombstones(spark, sf_dir, tmp_path):
     """Rebuilding over the same path must clear old tombstones: the new
     index contains exactly the given corpus, so previously-deleted
