@@ -167,7 +167,8 @@ def _graph_frames(
     edges_deg = (
         edges.join(deg, "s").select("s", "d", "deg").repartition("s").persist()
     )
-    bc_edges = edges_deg.count() <= BROADCAST_ROW_LIMIT  # materializes both persists
+    # the count materializes both persists
+    bc_edges = edges_deg.count() <= BROADCAST_ROW_LIMIT
     if undirected:
         # node count = deg's row count: reads the just-materialized
         # node-sized cache instead of running a fact-scale
